@@ -2,9 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — runs every declared capability query on
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query and total
-  * wall seconds.
+import scala.collection.mutable
+
+/** Benchmark main — runs capability queries on `SPARK_GRAFT_SF_DIR` and
+  * prints ONE JSON line with per-query and total wall seconds.
+  *
+  * Usage: `runMain graft.Bench [query...]` — no arguments runs the whole
+  * registry; named queries run alone, in the given order (env:
+  * SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS).
   *
   * Methodology: each query is fully materialized through the `noop` sink
   * (a `count()` would let Catalyst drop sorts/projections and
@@ -12,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * startup cost so per-query numbers reflect steady state.
   *
   * Robustness against host contention (the round-4 artifact recorded
-  * 10-123× spikes on a shared hypervisor): the whole registry is run
+  * 10-123× spikes on a shared hypervisor): the queries are run
   * `SPARK_GRAFT_BENCH_REPS` times (default 3) as INTERLEAVED full passes
   * — pass 1 of every query, then pass 2, … — so a contention burst hits
   * different queries in different passes instead of poisoning one query's
@@ -24,64 +29,62 @@ import org.apache.spark.sql.SparkSession
   * 5 — median-of-3 cannot survive a 2-rep burst, median-of-5 can. The
   * artifact names the re-measured queries (`spread_flagged`) and those
   * still dirty after 5 reps (`spread_dirty`) so a poisoned environment
-  * self-identifies.
+  * self-identifies. The 1-minute load average at the start of each pass
+  * is recorded (`load`) so a contended record can be told from a quiet
+  * one.
   *
-  * Output contract (restored in round 15 after the driver's comparator
-  * failed to parse rounds 13 and 14): stdout carries EXACTLY ONE JSON
-  * line — the full record, keys in the declared order {"metric",
-  * "value", "unit", "queries", ...extras..., "sf"}. The short human
-  * summary that used to be a second stdout line (added for 2 KB
-  * tail-captures in round 6) goes to stderr instead, so a parser that
-  * json.loads every stdout line, or the last one, sees one unambiguous
-  * record. The numbers and methodology are unchanged — this is an
-  * output-format fix only (declared in OPTIMIZATION_r15.md).
-  *
-  * Round artifact: a full-registry pass additionally writes the
-  * complete record (all per-query medians + minima) to `BENCH_r{N}.json`
-  * in the working directory as its LAST act — the standalone,
-  * json.load-able artifact the judge reads, independent of any stdout
-  * tail-capture (see the block comment at the write site for how N
-  * resolves). Runs at a non-default core count (SPARK_GRAFT_CPUS != 32)
-  * write `BENCH_r{N}_c{cpus}.json` instead: the round-14 driver's 8-core
-  * scaling rerun overwrote the 32-core round record, destroying the only
-  * clean driver measurement — the suffixed name makes that impossible.
-  *
-  * Host-load guard: before each pass the 1-minute load average is read
-  * from /proc/loadavg; if it exceeds `SPARK_GRAFT_BENCH_MAX_LOAD`
-  * (default 1.5 — this process's own Spark threads are idle between
-  * passes), the pass is delayed up to two 30 s waits. The observed
-  * per-pass loads are recorded in the output (`load`) so a reader can
-  * tell a contended record from a quiet one without external notes.
+  * Output contract: stdout carries EXACTLY ONE JSON line — the full
+  * record, keys in the declared order {"metric", "value", "unit",
+  * "queries", ...extras..., "sf"}. Per-pass times and a short human
+  * summary go to stderr. A query that throws in any pass is not run
+  * again, has no time in the record, and is named in `failed`; the run
+  * then exits non-zero. A full-registry run also writes the record to
+  * `PROGRESS_BENCH_LATEST.json` in the working directory.
   */
 object Bench {
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    GraftSession.runtimeConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark) // graft_* functions + as-of planner strategy
+  /** The named queries, or the whole registry when none are named.
+    * Unknown names are rejected before anything runs. */
+  def queries(args: Seq[String]): Seq[String] = {
+    val unknown = args.filterNot(Registry.byName.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (args.isEmpty) Registry.all.map(_.name) else args.distinct
+  }
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try Registry.byName(name).run(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch {
+  /** Wall seconds of one run of `name` materialized through the noop sink. */
+  def runOnce(spark: SparkSession, sfDir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    Registry.byName(name).run(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  def main(args: Array[String]): Unit = {
+    val names = queries(args.toSeq)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val spark = GraftSession.fromEnv(32, "graft-bench")
+
+    // samples(q) accumulates one time per pass; a query that throws is
+    // marked failed and not run again
+    val samples: Map[String, mutable.ArrayBuffer[Double]] =
+      names.map(_ -> mutable.ArrayBuffer[Double]()).toMap
+    val failed = mutable.LinkedHashSet[String]()
+    def sample(name: String, pass: Int): Unit =
+      try {
+        val t = runOnce(spark, sfDir, name)
+        System.err.println(f"[bench] pass $pass $name%-28s $t%8.3f s")
+        samples(name) += t
+      } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          return -1.0
+          failed += name
       }
-      (System.nanoTime() - t0) / 1e9
-    }
 
     // warmup: flagship query pays codegen/classload once
-    runOnce("q03_group_agg")
+    try runOnce(spark, sfDir, "q03_group_agg") catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+    }
 
     /** 1-minute load average, or -1 where /proc/loadavg is unavailable. */
     def loadAvg1m(): Double =
@@ -90,50 +93,19 @@ object Bench {
         try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
       } catch { case _: Throwable => -1.0 }
 
-    val maxLoad =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "1.5").toDouble
-    /** Delay a pass while the host is visibly contended (bounded: two
-      * 30 s waits), returning the load the pass actually started under. */
-    def guardLoad(): Double = {
-      var l = loadAvg1m()
-      var waits = 0
-      while (l > maxLoad && waits < 2) {
-        System.err.println(
-          f"[bench] 1m load $l%.2f > $maxLoad%.2f — delaying pass 30s")
-        Thread.sleep(30000)
-        waits += 1
-        l = loadAvg1m()
-      }
-      l
+    // interleaved passes: pass 1 of every query, then pass 2, …
+    val passLoads = (1 to reps).map { pass =>
+      val load = loadAvg1m()
+      names.filterNot(failed).foreach(sample(_, pass))
+      load
     }
 
-    // optional comma-separated subset for targeted re-measurement
-    // (e.g. SPARK_GRAFT_BENCH_ONLY=q27h_sketch_err,dedup_cc_stars)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = Registry.all.map(_.name)
-      .filter(n => only.forall(_.contains(n)))
-    // interleaved passes: samples(q) accumulates one time per pass
-    val samples: Map[String, Array[Double]] =
-      names.map(_ -> Array.fill(reps)(-1.0)).toMap
-    val passLoads = Array.fill(reps)(-1.0)
-    var pass = 0
-    while (pass < reps) {
-      passLoads(pass) = guardLoad()
-      names.foreach { n => samples(n)(pass) = runOnce(n) }
-      pass += 1
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.length % 2 == 1) s(s.length / 2)
+      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
-
-    def median(xs: Array[Double]): Double = {
-      val ok = xs.filter(_ >= 0).sorted
-      if (ok.isEmpty) -1.0
-      else if (ok.length % 2 == 1) ok(ok.length / 2)
-      else (ok(ok.length / 2 - 1) + ok(ok.length / 2)) / 2.0
-    }
-    def minOf(xs: Array[Double]): Double = {
-      val ok = xs.filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.min
-    }
+    def spread(n: String): Double = median(samples(n).toSeq) / samples(n).min
     // Contention re-measurement (round-13 verdict #1): median-of-3
     // cannot survive a burst that poisons 2 of 3 interleaved reps — the
     // r11–r13 close artifacts repeatedly read 5–10× medians on a
@@ -147,36 +119,26 @@ object Bench {
     // after 5 reps could not be measured cleanly on this host.
     val spreadFlagged: Seq[String] =
       if (reps < 2) Seq.empty
-      else names.filter { n =>
-        val m = median(samples(n)); val mn = minOf(samples(n))
-        m >= 0.3 && mn > 0 && m / mn > 2.0
+      else names.filterNot(failed).filter { n =>
+        median(samples(n).toSeq) >= 0.3 && samples(n).min > 0 && spread(n) > 2.0
       }
-    val extra: Map[String, Array[Double]] =
-      spreadFlagged.map(_ -> Array.fill(2)(-1.0)).toMap
     if (spreadFlagged.nonEmpty) {
       System.err.println(s"[bench] spread>2x on ${spreadFlagged.size} " +
         s"queries — re-running 2 extra passes: ${spreadFlagged.mkString(",")}")
-      var ep = 0
-      while (ep < 2) {
-        guardLoad()
-        spreadFlagged.foreach { n => extra(n)(ep) = runOnce(n) }
-        ep += 1
+      (reps + 1 to reps + 2).foreach { pass =>
+        spreadFlagged.filterNot(failed).foreach(sample(_, pass))
       }
     }
-    def allSamples(n: String): Array[Double] =
-      samples(n) ++ extra.getOrElse(n, Array.empty[Double])
-    val med = names.map(n => n -> median(allSamples(n)))
-    val mins = names.map(n => n -> minOf(allSamples(n)))
+    val ok = names.filterNot(failed)
+    val med = ok.map(n => n -> median(samples(n).toSeq))
+    val mins = ok.map(n => n -> samples(n).min)
     // still-dirty after 5 reps: named so the reader knows these medians
     // could not be cleanly measured on this host
-    val stillFlagged = spreadFlagged.filter { n =>
-      val m = median(allSamples(n)); val mn = minOf(allSamples(n))
-      mn > 0 && m / mn > 2.0
-    }
-    val ok = med.filter(_._2 >= 0)
-    val total = ok.map(_._2).sum
+    val stillFlagged = spreadFlagged.filter(n => !failed(n) &&
+      samples(n).min > 0 && spread(n) > 2.0)
+    val total = med.map(_._2).sum
     val headline = Registry.all.filter(_.bench).map(_.name).toSet
-    val headlineTotal = ok.collect { case (n, t) if headline(n) => t }.sum
+    val headlineTotal = med.collect { case (n, t) if headline(n) => t }.sum
     // locale-pinned formatting: f"" uses the default locale, which on
     // comma-decimal locales would emit invalid JSON ("13,700")
     def num(v: Double): String =
@@ -184,26 +146,26 @@ object Bench {
     def obj(kvs: Seq[(String, Double)]): String = kvs
       .map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
+    def strArr(xs: Iterable[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val totalS = num(total)
     val headS = num(headlineTotal)
     val loads = passLoads.map(num).mkString("[", ",", "]")
-    def strArr(xs: Seq[String]): String =
-      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val flaggedS = strArr(spreadFlagged)
-    val dirtyS = strArr(stillFlagged)
     // key order follows the declared contract: metric, value, unit,
     // queries first; extras (headline/minima/load diagnostics) after
     val fullRecord =
-      s"""{"metric":"total","value":$totalS,"unit":"sec","queries":${obj(med)},"headline_sec":$headS,"reps":$reps,"load":$loads,"spread_flagged":$flaggedS,"spread_dirty":$dirtyS,"queries_min":${obj(mins)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}"""
-    // The full record (241 queries ≈ 12 KB) cannot fit a ~2 KB stdout
-    // tail-capture, so it is ALSO written to a file in the working
-    // directory — the self-sufficient artifact the round notes commit
-    // (PROGRESS_BENCH_r{N}.json is a copy of this file).
-    val fullPath = java.nio.file.Paths.get("PROGRESS_BENCH_LATEST.json")
-    try java.nio.file.Files.write(fullPath,
-      (fullRecord + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
+      s"""{"metric":"total","value":$totalS,"unit":"sec","queries":${obj(med)},"headline_sec":$headS,"reps":$reps,"load":$loads,"spread_flagged":${strArr(spreadFlagged)},"spread_dirty":${strArr(stillFlagged)},"failed":${strArr(failed)},"queries_min":${obj(mins)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}"""
+    // The full-registry record (327 queries ≈ 16 KB) cannot fit a ~2 KB
+    // stdout tail-capture, so it is ALSO written to a file in the working
+    // directory. A run of named queries leaves that file alone: a partial
+    // record must not replace the full one.
+    if (args.isEmpty) {
+      val fullPath = java.nio.file.Paths.get("PROGRESS_BENCH_LATEST.json")
+      try java.nio.file.Files.write(fullPath,
+        (fullRecord + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
+      }
     }
     // stdout: EXACTLY ONE JSON line (the declared contract). The human
     // summary (headline medians) goes to stderr — a tail-capture of
@@ -211,88 +173,12 @@ object Bench {
     // unambiguous record.
     println(fullRecord)
     val headMed = med.filter { case (n, _) => headline(n) }
-    System.err.println(s"""[bench] summary {"metric":"total","value":$totalS,"unit":"sec","headline_sec":$headS,"reps":$reps,"load":$loads,"queries":${obj(headMed)},"queries_n":${names.length},"ok_n":${ok.length},"full":"${fullPath.toAbsolutePath}","sf":"$sfDir"}""")
-    // LAST act (r12 verdict #3): when this was a FULL-registry pass at
-    // the driver's bench scale, also write the complete record as the
-    // ROUND artifact BENCH_r{N}.json, so `json.load(open('BENCH_r13
-    // .json'))['queries']` yields every per-query median without
-    // depending on any stdout tail-capture. N resolves as:
-    // SPARK_GRAFT_ROUND if set; else VERDICT.md's round + 1 (the judge
-    // writes "# VERDICT — round K" at round K+1's START and it stays
-    // fixed all round, so this is stable across any same-round rerun —
-    // unlike inferring from BENCH_r{k}.json files, which self-defeats
-    // once this code has written one); else the highest existing
-    // BENCH/CORRECTNESS artifact + 1. Guards: targeted BENCH_ONLY
-    // passes and scale-replica runs (sf1/sf10 live outside
-    // /root/testdata, or a non-sf0.1 dir) never touch the round
-    // artifact — a 10× rehearsal must not clobber the round record.
-    // canonical-path basename, not a string suffix: a trailing slash
-    // must not skip a legit pass, and "/tmp/replica-sf0.1" must not
-    // masquerade as the bench-scale directory
-    val atBenchScale =
-      try new java.io.File(sfDir).getCanonicalFile.getName == "sf0.1"
-      catch { case _: Throwable => false }
-    if (only.isEmpty && atBenchScale) {
-      try {
-        def maxArtifact(pattern: String): Int = {
-          val pat = java.util.regex.Pattern.compile(pattern)
-          val s = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-          try {
-            val it = s.iterator()
-            var kmax = -1
-            while (it.hasNext) {
-              val m = pat.matcher(it.next().getFileName.toString)
-              if (m.matches() && m.group(1).toInt > kmax) kmax = m.group(1).toInt
-            }
-            kmax
-          } finally s.close()
-        }
-        def verdictRound(): Option[Int] =
-          try {
-            val p = java.nio.file.Paths.get("VERDICT.md")
-            if (!java.nio.file.Files.exists(p)) None
-            else {
-              val head = new String(java.nio.file.Files.readAllBytes(p),
-                java.nio.charset.StandardCharsets.UTF_8).linesIterator
-                .take(3).mkString("\n")
-              val m = java.util.regex.Pattern.compile("round\\s+(\\d+)").matcher(head)
-              if (m.find()) Some(m.group(1).toInt + 1) else None
-            }
-          } catch { case _: Throwable => None }
-        val n = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
-          .orElse(verdictRound())
-          .getOrElse {
-            // no VERDICT.md (round 1, or renamed at close): infer from
-            // artifacts, REUSING a same-round file of our own (the
-            // graft_full_record marker) so repeated full passes cannot
-            // mint a new spurious round each run
-            val bmax = maxArtifact("BENCH_r(\\d+)\\.json")
-            val cmax = maxArtifact("CORRECTNESS_r(\\d+)\\.json")
-            val bOurs = bmax >= 0 && {
-              try new String(java.nio.file.Files.readAllBytes(
-                java.nio.file.Paths.get(s"BENCH_r$bmax.json")),
-                java.nio.charset.StandardCharsets.UTF_8)
-                .contains("\"graft_full_record\":true")
-              catch { case _: Throwable => false }
-            }
-            val fromBench = if (bOurs) bmax else bmax + 1
-            math.max(1, math.max(fromBench, cmax + 1))
-          }
-        // Scaling reruns must never clobber the canonical 32-core round
-        // record (the round-14 incident): any non-default core count gets
-        // its own suffixed artifact, BENCH_r{N}_c{cpus}.json.
-        val roundPath =
-          if (cpus == "32") java.nio.file.Paths.get(s"BENCH_r$n.json")
-          else java.nio.file.Paths.get(s"BENCH_r${n}_c$cpus.json")
-        val roundRecord =
-          s"""{"n":$n,"cpus":"$cpus","graft_full_record":true,"metric":"total","value":$totalS,"unit":"sec","queries":${obj(med)},"headline_sec":$headS,"reps":$reps,"load":$loads,"spread_flagged":$flaggedS,"spread_dirty":$dirtyS,"queries_min":${obj(mins)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}"""
-        java.nio.file.Files.write(roundPath,
-          (roundRecord + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        System.err.println(s"[bench] round artifact: ${roundPath.toAbsolutePath}")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write round artifact: ${e.getMessage}")
-      }
-    }
+    System.err.println(s"""[bench] summary {"metric":"total","value":$totalS,"unit":"sec","headline_sec":$headS,"reps":$reps,"load":$loads,"queries":${obj(headMed)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[bench] ${failed.size} of ${names.length} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,100 +1,38 @@
 package graft
 
-import graft.functions.expr.{CosineSimilarity, DamerauLevenshteinExpr, DistinctSketchAgg, DistinctSketchEstimate, JaroWinklerExpr, MinHashSketch, PolyFingerprint, SimHashAgg, SketchUnionAgg, TDigestAgg, TopKAgg}
+import graft.functions.expr.{CosineSimilarity, CountMinAgg, CountMinEstimate,
+  CountMinUnionAgg, DamerauLevenshteinExpr, DistinctSketchAgg,
+  DistinctSketchEstimate, DistinctSketchSingleton, GramMatrixAgg,
+  JaroWinklerExpr, MinHashSketch, PolyFingerprint, SimHashAgg, SketchUnionAgg,
+  TDigestAgg, TopKAgg}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.Bridge
 
 /** Session extension installing the graft SQL surface
-  * (`SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`): the native expressions
+  * (`GraftSession.local`, a builder's `withExtensions(new GraftExtensions)`
+  * or `spark.sql.extensions=graft.GraftExtensions`): the native expressions
   * become callable from SQL text, the analogue of the reference's
   * FunctionRegistry additions (cpp/src/arrow/compute/registry.h).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[PolyFingerprint].getName, "graft_fingerprint"),
-      (exprs: Seq[Expression]) => PolyFingerprint(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerExpr].getName, "graft_jaro_winkler"),
-      (exprs: Seq[Expression]) => JaroWinklerExpr(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_damerau_levenshtein"),
-      new ExpressionInfo(classOf[DamerauLevenshteinExpr].getName,
-        "graft_damerau_levenshtein"),
-      (exprs: Seq[Expression]) => DamerauLevenshteinExpr(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_tdigest"),
-      new ExpressionInfo(classOf[TDigestAgg].getName, "graft_tdigest"),
-      GraftFunctions.tdigestBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSketch].getName, "graft_minhash"),
-      GraftFunctions.minhashBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashAgg].getName, "graft_simhash"),
-      GraftFunctions.simhashBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_top_k"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "graft_top_k"),
-      GraftFunctions.topKBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_distinct_sketch"),
-      new ExpressionInfo(classOf[DistinctSketchAgg].getName, "graft_distinct_sketch"),
-      GraftFunctions.distinctSketchBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_sketch_union"),
-      new ExpressionInfo(classOf[SketchUnionAgg].getName, "graft_sketch_union"),
-      GraftFunctions.sketchUnionBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_sketch_estimate"),
-      new ExpressionInfo(classOf[DistinctSketchEstimate].getName, "graft_sketch_estimate"),
-      GraftFunctions.sketchEstimateBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_sketch_singleton"),
-      new ExpressionInfo(
-        classOf[graft.functions.expr.DistinctSketchSingleton].getName,
-        "graft_sketch_singleton"),
-      GraftFunctions.sketchSingletonBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_count_min"),
-      new ExpressionInfo(
-        classOf[graft.functions.expr.CountMinAgg].getName, "graft_count_min"),
-      GraftFunctions.countMinBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_count_min_union"),
-      new ExpressionInfo(
-        classOf[graft.functions.expr.CountMinUnionAgg].getName,
-        "graft_count_min_union"),
-      GraftFunctions.countMinUnionBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_count_min_estimate"),
-      new ExpressionInfo(
-        classOf[graft.functions.expr.CountMinEstimate].getName,
-        "graft_count_min_estimate"),
-      GraftFunctions.countMinEstimateBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_gram_matrix"),
-      new ExpressionInfo(
-        classOf[graft.functions.expr.GramMatrixAgg].getName, "graft_gram_matrix"),
-      GraftFunctions.gramMatrixBuilder))
+    GraftFunctions.table.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.exprClass.getName, f.name), f.builder))
+    }
   }
 }
 
 object GraftFunctions {
-  /** Idempotently register the graft_* SQL functions and the as-of-join
-    * planner strategy on a live session (covers driver-created sessions
-    * that didn't go through `withExtensions`). */
+
+  /** One graft_* SQL function: its name, the expression class that
+    * implements it and the builder from SQL arguments. */
+  final case class SqlFunction(
+      name: String, exprClass: Class[_], builder: Seq[Expression] => Expression)
+
   /** `graft_tdigest(x, p1, p2, ...)` — quantile percentages must be
     * foldable literals (same contract as percentile_approx). */
   val tdigestBuilder: Seq[Expression] => Expression = exprs => {
@@ -197,7 +135,6 @@ object GraftFunctions {
   /** `graft_sketch_singleton(hash64 [, exactCap, lgK])` — one-element
     * serialized state, the SQL seed for `graft_sketch_union`. */
   val sketchSingletonBuilder: Seq[Expression] => Expression = exprs => {
-    import graft.functions.expr.DistinctSketchSingleton
     exprs match {
       case Seq(c) => DistinctSketchSingleton(c)
       case Seq(c, cap, lg) =>
@@ -211,7 +148,6 @@ object GraftFunctions {
   /** `graft_count_min(col [, exactCap, depth, width])` — mergeable
     * Count-Min frequency state. */
   val countMinBuilder: Seq[Expression] => Expression = exprs => {
-    import graft.functions.expr.CountMinAgg
     exprs match {
       case Seq(c) => CountMinAgg(c).toAggregateExpression()
       case Seq(c, cap, d, w) =>
@@ -225,7 +161,6 @@ object GraftFunctions {
 
   /** `graft_count_min_union(state [, exactCap, depth, width])`. */
   val countMinUnionBuilder: Seq[Expression] => Expression = exprs => {
-    import graft.functions.expr.CountMinUnionAgg
     exprs match {
       case Seq(c) => CountMinUnionAgg(c).toAggregateExpression()
       case Seq(c, cap, d, w) =>
@@ -240,7 +175,6 @@ object GraftFunctions {
   /** `graft_count_min_estimate(state, xxhash64(key) [, exactCap, depth,
     * width])`. */
   val countMinEstimateBuilder: Seq[Expression] => Expression = exprs => {
-    import graft.functions.expr.CountMinEstimate
     exprs match {
       case Seq(s, h) => CountMinEstimate(s, h)
       case Seq(s, h, cap, d, w) =>
@@ -254,7 +188,6 @@ object GraftFunctions {
 
   /** `graft_gram_matrix(vec, dim)` — exact integer Gram/moment state. */
   val gramMatrixBuilder: Seq[Expression] => Expression = exprs => {
-    import graft.functions.expr.GramMatrixAgg
     require(exprs.length == 2,
       "graft_gram_matrix takes (vec, dim literal)")
     GramMatrixAgg(exprs.head, intLitOf(exprs(1), "graft_gram_matrix dim"))
@@ -271,27 +204,40 @@ object GraftFunctions {
     }
   }
 
+  /** Every graft_* SQL function, declared once: [[GraftExtensions]]
+    * injects the table into new sessions, [[register]] into live ones. */
+  lazy val table: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_cosine", classOf[CosineSimilarity],
+      exprs => CosineSimilarity(exprs(0), exprs(1))),
+    SqlFunction("graft_fingerprint", classOf[PolyFingerprint],
+      exprs => PolyFingerprint(exprs.head)),
+    SqlFunction("graft_jaro_winkler", classOf[JaroWinklerExpr],
+      exprs => JaroWinklerExpr(exprs(0), exprs(1))),
+    SqlFunction("graft_damerau_levenshtein", classOf[DamerauLevenshteinExpr],
+      exprs => DamerauLevenshteinExpr(exprs(0), exprs(1))),
+    SqlFunction("graft_tdigest", classOf[TDigestAgg], tdigestBuilder),
+    SqlFunction("graft_minhash", classOf[MinHashSketch], minhashBuilder),
+    SqlFunction("graft_simhash", classOf[SimHashAgg], simhashBuilder),
+    SqlFunction("graft_top_k", classOf[TopKAgg], topKBuilder),
+    SqlFunction("graft_distinct_sketch", classOf[DistinctSketchAgg],
+      distinctSketchBuilder),
+    SqlFunction("graft_sketch_union", classOf[SketchUnionAgg], sketchUnionBuilder),
+    SqlFunction("graft_sketch_estimate", classOf[DistinctSketchEstimate],
+      sketchEstimateBuilder),
+    SqlFunction("graft_sketch_singleton", classOf[DistinctSketchSingleton],
+      sketchSingletonBuilder),
+    SqlFunction("graft_count_min", classOf[CountMinAgg], countMinBuilder),
+    SqlFunction("graft_count_min_union", classOf[CountMinUnionAgg],
+      countMinUnionBuilder),
+    SqlFunction("graft_count_min_estimate", classOf[CountMinEstimate],
+      countMinEstimateBuilder),
+    SqlFunction("graft_gram_matrix", classOf[GramMatrixAgg], gramMatrixBuilder))
+
+  /** Idempotently register the graft_* SQL functions and the as-of-join
+    * planner strategy on a live session (covers driver-created sessions
+    * that didn't go through `withExtensions`). */
   def register(spark: SparkSession): Unit = {
-    Bridge.registerFunction(spark, "graft_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
-    Bridge.registerFunction(spark, "graft_fingerprint",
-      exprs => PolyFingerprint(exprs.head))
-    Bridge.registerFunction(spark, "graft_jaro_winkler",
-      exprs => JaroWinklerExpr(exprs(0), exprs(1)))
-    Bridge.registerFunction(spark, "graft_damerau_levenshtein",
-      exprs => DamerauLevenshteinExpr(exprs(0), exprs(1)))
-    Bridge.registerFunction(spark, "graft_tdigest", tdigestBuilder)
-    Bridge.registerFunction(spark, "graft_minhash", minhashBuilder)
-    Bridge.registerFunction(spark, "graft_simhash", GraftFunctions.simhashBuilder)
-    Bridge.registerFunction(spark, "graft_top_k", topKBuilder)
-    Bridge.registerFunction(spark, "graft_distinct_sketch", distinctSketchBuilder)
-    Bridge.registerFunction(spark, "graft_sketch_union", sketchUnionBuilder)
-    Bridge.registerFunction(spark, "graft_sketch_estimate", sketchEstimateBuilder)
-    Bridge.registerFunction(spark, "graft_sketch_singleton", sketchSingletonBuilder)
-    Bridge.registerFunction(spark, "graft_count_min", countMinBuilder)
-    Bridge.registerFunction(spark, "graft_count_min_union", countMinUnionBuilder)
-    Bridge.registerFunction(spark, "graft_count_min_estimate", countMinEstimateBuilder)
-    Bridge.registerFunction(spark, "graft_gram_matrix", gramMatrixBuilder)
+    table.foreach(f => Bridge.registerFunction(spark, f.name, f.builder))
     if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy

@@ -58,8 +58,7 @@ object GraftSession {
       cores: Int = 32,
       shufflePartitions: Int = 32,
       appName: String = "graft"): SparkSession = {
-    val b = SparkSession
-      .builder()
+    val b = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .withExtensions(new GraftExtensions)
@@ -70,5 +69,18 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(spark)
     spark
+  }
+
+  /** The session of the command-line mains: [[local]] with as many cores
+    * and shuffle partitions as `SPARK_GRAFT_CPUS` names, `defaultCores`
+    * when it is unset. Anything but a positive integer is rejected. */
+  def fromEnv(defaultCores: Int, appName: String): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS") match {
+      case None => defaultCores
+      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+    local(cores, cores, appName)
   }
 }

@@ -9,16 +9,18 @@ import java.nio.file.{Files, Paths}
   * broadcast choices, exchange counts and codegen spans are all visible;
   * PlanSpec pins the load-bearing properties as tests.
   *
-  * Regenerate with: `sbt "runMain graft.Plans"` (optional args: out-file,
-  * sf dir).
+  * Regenerate with: `sbt "runMain graft.Plans"`. Usage:
+  * `runMain graft.Plans [out-file [query...]]` — out-file defaults to
+  * `PLANS.md`; named queries replace the default set, e.g. before/after
+  * evidence for one change: `runMain graft.Plans /tmp/before.md q16_math`
+  * (env: SPARK_GRAFT_SF_DIR, default sf0.01; SPARK_GRAFT_CPUS, default 8).
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
-    val sfDir =
-      if (args.length > 1) args(1)
-      else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.local(cores = 8, shufflePartitions = 8, appName = "graft-plans")
+    val named = if (args.length > 1) Bench.queries(args.toSeq.drop(1)) else Nil
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = GraftSession.fromEnv(8, "graft-plans")
 
     val extra = Seq(
       "q21d_asof_multi",         // N-right one-pass as-of: 3 clustered exchanges, chained narrow merges
@@ -198,7 +200,8 @@ object Plans {
       "q109_partial_corr",       // one ten-moment scalar exchange, 1-row readout
       "q110_page_trend")         // Friedman rank frame + k-row index window
     val names =
-      (Registry.all.filter(_.bench).map(_.name) ++ extra).distinct
+      if (named.nonEmpty) named
+      else (Registry.all.filter(_.bench).map(_.name) ++ extra).distinct
         .filter(Registry.byName.contains)
 
     val sections = names.map { name =>
@@ -212,7 +215,7 @@ object Plans {
     // graph_pagerank's returned frame is localCheckpoint-truncated, so its
     // own section would show only a checkpoint scan; dump ONE un-checkpointed
     // iteration instead — the plan that runs every round
-    val prSection = {
+    lazy val prSection = {
       import org.apache.spark.sql.functions._
       val pairs = Tables.lineitem(spark, sfDir)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
@@ -235,7 +238,7 @@ object Plans {
 
     // graph_hits / graph_lpa are localCheckpoint-truncated like pageRank;
     // dump one live half-step / round instead — the plan every iteration runs
-    val hitsSection = {
+    lazy val hitsSection = {
       import org.apache.spark.sql.functions._
       val pairs = Tables.lineitem(spark, sfDir)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
@@ -259,7 +262,7 @@ object Plans {
         s"```\n${plan.trim}\n```\n"
     }
 
-    val lpaSection = {
+    lazy val lpaSection = {
       import org.apache.spark.sql.functions._
       val pairs = Tables.lineitem(spark, sfDir)
         .filter(col("l_partkey") < 300)
@@ -297,10 +300,11 @@ object Plans {
          |in `PlanSpec`/`RangeJoinSpec`/`QuantilesSpec`/`BucketingSpec`.
          |""".stripMargin
 
-    Files.writeString(Paths.get(out),
-      header + "\n" +
-        (sections ++ Seq(prSection, hitsSection, lpaSection)).mkString("\n"))
-    println(s"[plans] wrote ${names.size + 3} plans to $out")
+    // the one-iteration sections belong to the default set only
+    val all = sections ++
+      (if (named.nonEmpty) Nil else Seq(prSection, hitsSection, lpaSection))
+    Files.writeString(Paths.get(out), header + "\n" + all.mkString("\n"))
+    println(s"[plans] wrote ${all.size} plans to $out")
     spark.stop()
   }
 }

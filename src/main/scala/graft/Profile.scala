@@ -1,13 +1,12 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
 /** Per-stage profiler for one or more registry queries — the measurement
-  * companion of [[BenchOne]] (optimization guide §1: find WHERE the time
-  * goes before touching anything).
+  * companion of [[Bench]] (find WHERE the time goes before touching
+  * anything).
   *
   * For each named query it runs the plan once through the noop sink with
   * a listener attached, then prints every stage's wall time, task count,
@@ -27,16 +26,9 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "Profile: pass query names")
+    val names = Bench.queries(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    GraftSession.runtimeConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.fromEnv(32, "graft-profile")
 
     val stages = mutable.Map[Int, StageRow]()
     val submitted = mutable.Map[Int, Long]()
@@ -59,19 +51,13 @@ object Profile {
       }
     }
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      Registry.byName(name).run(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // warmup: codegen/classload paid outside the profile
+    Bench.runOnce(spark, sfDir, names.head)
 
-    runOnce(args.head) // warmup: codegen/classload paid outside the profile
-
-    args.foreach { name =>
+    names.foreach { name =>
       stages.clear(); submitted.clear()
       spark.sparkContext.addSparkListener(listener)
-      val sec = runOnce(name)
+      val sec = Bench.runOnce(spark, sfDir, name)
       spark.sparkContext.removeSparkListener(listener)
       // listener bus is async; give completion events a moment to drain
       Thread.sleep(300)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data builder: replicates an existing testdata
@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `runMain graft.ScaleUp <srcDir> <outDir> <factor>`
   * (e.g. /root/testdata/sf0.1 /tmp/sf1 10), then
-  * `SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Bench` with
-  * `SPARK_GRAFT_BENCH_ONLY` = the flagship + documented-quadratic set.
+  * `SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Bench <query>...` with the
+  * flagship + documented-quadratic set as the queries.
   */
 object ScaleUp {
 
@@ -43,14 +43,7 @@ object ScaleUp {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    GraftSession.runtimeConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(32, "graft-scaleup")
 
     // replicas as a broadcast 1-column frame: the cross join is the
     // narrow factor-way fan-out, never a shuffle

@@ -690,6 +690,15 @@ class IoSpec extends AnyFunSuite {
 
   test("graft_* functions are callable from SQL") {
     GraftFunctions.register(spark)
+    val names = GraftFunctions.table.map(_.name)
+    assert(names.distinct == names, s"duplicate names in the table: $names")
+    names.foreach(n => assert(spark.catalog.functionExists(n), n))
+    // [n, M_0, M_1, G_00, G_01, G_10, G_11], moments in units of 2^40
+    val u = 1L << 40
+    val gm = spark.sql(
+      "SELECT graft_gram_matrix(array(CAST(v AS DOUBLE), 1.0D), 2) AS g " +
+        "FROM VALUES (1), (2) AS t(v)").head().getSeq[Long](0)
+    assert(gm == Seq(2L, 3 * u, 2 * u, 5 * u, 3 * u, 3 * u, 2 * u))
     val c = spark.sql(
       "SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
         "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c").head().getDouble(0)

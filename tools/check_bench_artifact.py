@@ -9,14 +9,15 @@ artifact fails HERE, in-round, instead of silently zeroing the round's
 performance evidence.
 
 Usage:
-  tools/check_bench_artifact.py BENCH_r15.json          # check a round file
-  tools/check_bench_artifact.py --stdout capture.txt    # check a stdout capture
+  tools/check_bench_artifact.py PROGRESS_BENCH_LATEST.json  # check a full record
+  tools/check_bench_artifact.py --stdout capture.txt        # check a stdout capture
 
 Contract checked:
   * the file is standalone JSON (json.load works);
   * top-level keys metric ("total"), value (number), unit ("sec"),
     queries (non-empty dict of name -> number), sf (string) exist;
-  * every query value is a finite non-negative number;
+  * value and every query value are finite non-negative numbers, not
+    booleans;
   * for --stdout: EXACTLY ONE line of the capture parses as a JSON
     object with those keys (the bench prints one JSON line; sbt noise
     and stderr leakage must not add parseable impostors).
@@ -26,21 +27,26 @@ import math
 import sys
 
 
+def is_number(v):
+    """A finite non-negative int or float; bool is an int subclass but
+    not a measurement."""
+    return (isinstance(v, (int, float)) and not isinstance(v, bool)
+            and math.isfinite(v) and v >= 0)
+
+
 def check_record(rec, source):
     errs = []
     if rec.get("metric") != "total":
         errs.append(f"metric != 'total' (got {rec.get('metric')!r})")
-    if not isinstance(rec.get("value"), (int, float)):
-        errs.append("value is not a number")
+    if not is_number(rec.get("value")):
+        errs.append("value is not a finite non-negative number")
     if rec.get("unit") != "sec":
         errs.append(f"unit != 'sec' (got {rec.get('unit')!r})")
     q = rec.get("queries")
     if not isinstance(q, dict) or not q:
         errs.append("queries missing or empty")
     else:
-        bad = [k for k, v in q.items()
-               if not isinstance(v, (int, float))
-               or not math.isfinite(v) or v < 0]
+        bad = [k for k, v in q.items() if not is_number(v)]
         if bad:
             errs.append(f"{len(bad)} query values non-numeric/negative, "
                         f"e.g. {bad[:3]}")
@@ -57,7 +63,10 @@ def check_record(rec, source):
 
 
 def main(argv):
-    if len(argv) >= 2 and argv[0] == "--stdout":
+    if argv and argv[0] == "--stdout" and len(argv) != 2:
+        print(__doc__)
+        return 2
+    if argv and argv[0] == "--stdout":
         lines = open(argv[1], encoding="utf-8", errors="replace").readlines()
         recs = []
         for ln in lines:

@@ -33,13 +33,17 @@ import scala.collection.mutable
   * is recorded (`load`) so a contended record can be told from a quiet
   * one.
   *
-  * Output contract: stdout carries EXACTLY ONE JSON line — the full
-  * record, keys in the declared order {"metric", "value", "unit",
-  * "queries", ...extras..., "sf"}. Per-pass times and a short human
-  * summary go to stderr. A query that throws in any pass is not run
-  * again, has no time in the record, and is named in `failed`; the run
-  * then exits non-zero. A full-registry run also writes the record to
-  * `PROGRESS_BENCH_LATEST.json` in the working directory.
+  * Output contract: stdout carries EXACTLY ONE JSON line, a compact
+  * record that fits a 2000-char tail capture: {"metric", "value",
+  * "unit", "queries", "failed", "queries_n", "ok_n", "sf"}, where
+  * `queries` holds the headline queries' medians on a full-registry run
+  * and the named queries' medians otherwise. Per-pass times and the run
+  * diagnostics (headline total, reps, load, spread) go to stderr. A
+  * query that throws in any pass is not run again, has no time in the
+  * record, and is named in `failed`; the run then exits non-zero. A
+  * full-registry run writes the full record (every query's median and
+  * minimum, plus the diagnostics) to `PROGRESS_BENCH_LATEST.json` in the
+  * working directory.
   */
 object Bench {
 
@@ -155,10 +159,10 @@ object Bench {
     // queries first; extras (headline/minima/load diagnostics) after
     val fullRecord =
       s"""{"metric":"total","value":$totalS,"unit":"sec","queries":${obj(med)},"headline_sec":$headS,"reps":$reps,"load":$loads,"spread_flagged":${strArr(spreadFlagged)},"spread_dirty":${strArr(stillFlagged)},"failed":${strArr(failed)},"queries_min":${obj(mins)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}"""
-    // The full-registry record (327 queries ≈ 16 KB) cannot fit a ~2 KB
-    // stdout tail-capture, so it is ALSO written to a file in the working
-    // directory. A run of named queries leaves that file alone: a partial
-    // record must not replace the full one.
+    // The full record (327 queries ≈ 16 KB) cannot fit a 2000-char
+    // stdout tail-capture, so it goes to a file in the working directory.
+    // A run of named queries leaves that file alone: a partial record
+    // must not replace the full one.
     if (args.isEmpty) {
       val fullPath = java.nio.file.Paths.get("PROGRESS_BENCH_LATEST.json")
       try java.nio.file.Files.write(fullPath,
@@ -167,13 +171,10 @@ object Bench {
         System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
       }
     }
-    // stdout: EXACTLY ONE JSON line (the declared contract). The human
-    // summary (headline medians) goes to stderr — a tail-capture of
-    // stderr still shows the headline, and a stdout parser sees one
-    // unambiguous record.
-    println(fullRecord)
-    val headMed = med.filter { case (n, _) => headline(n) }
-    System.err.println(s"""[bench] summary {"metric":"total","value":$totalS,"unit":"sec","headline_sec":$headS,"reps":$reps,"load":$loads,"queries":${obj(headMed)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}""")
+    System.err.println(s"""[bench] summary {"headline_sec":$headS,"reps":$reps,"load":$loads,"spread_flagged":${strArr(spreadFlagged)},"spread_dirty":${strArr(stillFlagged)}}""")
+    // stdout: EXACTLY ONE JSON line, the compact record
+    val shown = if (args.isEmpty) med.filter { case (n, _) => headline(n) } else med
+    println(s"""{"metric":"total","value":$totalS,"unit":"sec","queries":${obj(shown)},"failed":${strArr(failed)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(

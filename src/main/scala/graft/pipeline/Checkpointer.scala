@@ -3,7 +3,22 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-truncation policy for iterative fixpoints (PageRank rounds, CC
-  * label propagation, LPA, k-core peeling, HITS, SCC coloring, HyperBall).
+  * label propagation, LPA, k-core peeling, HITS, SCC coloring, HyperBall),
+  * and the two round loops those operators run on: [[rounds]] (a fixed
+  * round count) and [[fixpoint]] (until a convergence key stops changing).
+  *
+  * The loop contract, the same for both: round `i` computes
+  * `step(prev, i)`, materializes it with [[truncate]] and then [[free]]s
+  * `prev`, the frame it replaces — after truncation no action reads
+  * `prev` again, so its blocks go at once instead of at the next driver
+  * GC. Round 1 frees `init` the same way, so a loop owns the frame it
+  * starts from. Every round, the last included, is truncated, so the
+  * returned frame never references the caller's cached inputs and the
+  * caller may unpersist them. If a round throws (or [[fixpoint]] runs
+  * out of rounds), the loop frees its current frame before rethrowing,
+  * so a failed operator leaves no round state cached. Every Spark job a
+  * round submits runs under the call site `"<op> round <i>"`, so its
+  * stages carry the operator's name.
   *
   * Default (no config): eager `localCheckpoint` — lineage truncates into
   * EXECUTOR-LOCAL cached blocks. Fast (no durable write), and exactly
@@ -29,7 +44,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Output values are policy-independent: both paths materialize the same
   * deterministic frame, only its storage changes (CheckpointSpec asserts
-  * bit-identical PageRank/CC/SCC output under a checkpoint dir).
+  * bit-identical operator output under a checkpoint dir).
   */
 object Checkpointer {
   /** Durable checkpoint directory; empty/unset = localCheckpoint mode. */
@@ -60,16 +75,13 @@ object Checkpointer {
   }
 
   /** Release the executor blocks behind a frame [[truncate]] produced in
-    * LOCAL-checkpoint mode, for loops that supersede round i's frame once
-    * round i+1 has materialized — without this, every round's blocks
-    * linger until the driver GCs the Dataset reference (ContextCleaner),
-    * and a bench/pipeline that runs many iterative queries back-to-back
-    * accumulates gigabytes of dead round-state in the block manager,
-    * evicting live caches. ONLY call on a frame no action will ever read
-    * again: a localCheckpoint's lineage is truncated, so its data is
-    * unrecoverable after this. Durable checkpoints (reliable mode) and
-    * non-checkpoint frames are left untouched (no-op) — their cleanup
-    * stays with the ContextCleaner. */
+    * LOCAL-checkpoint mode, at once instead of at the next driver GC — a
+    * bench/pipeline running many iterative queries back-to-back would
+    * otherwise pile up dead round state in the block manager, evicting
+    * live caches. ONLY call on a frame no action will ever read again:
+    * its lineage is truncated, so its data is unrecoverable after this.
+    * Durable checkpoints and non-checkpoint frames are left to the
+    * ContextCleaner (no-op). */
   def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
     // a localCheckpoint's RDD is persisted (MEMORY_AND_DISK blocks); a
     // reliable checkpoint's RDD reads from files and carries StorageLevel
@@ -79,4 +91,61 @@ object Checkpointer {
       l.rdd.unpersist(blocking = false)
     case _ => ()
   }
+
+  /** [[truncate]] `f(prev)`, then [[free]] `prev`: one round of the loop
+    * contract, for a frame that replaces `prev` outside a loop. */
+  def replace(prev: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
+    val next = truncate(f(prev))
+    free(prev)
+    next
+  }
+
+  /** Run `n` rounds of `step` from `init` (rounds numbered from 1) and
+    * return the last round's frame. */
+  def rounds(op: String, init: DataFrame, n: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var cur = init
+    try (1 to n).foreach { i =>
+      cur = inRound(cur, op, i)(replace(cur)(step(_, i)))
+    } catch { case t: Throwable => free(cur); throw t }
+    cur
+  }
+
+  /** Run `step` from `init` until `key` of a round's frame equals `key` of
+    * the frame it replaced, and return that frame. An empty `init` is
+    * already converged. Throws `IllegalStateException` naming `op` if
+    * `maxIter` rounds do not converge. */
+  def fixpoint[K](op: String, init: DataFrame, maxIter: Int)(
+      step: (DataFrame, Int) => DataFrame)(key: DataFrame => K): DataFrame = {
+    var cur = init
+    try {
+      var k = key(cur)
+      var converged = cur.isEmpty
+      var i = 0
+      while (!converged) {
+        if (i == maxIter) throw new IllegalStateException(
+          s"$op did not converge in $maxIter rounds; raise maxIter")
+        i += 1
+        val nk = inRound(cur, op, i) {
+          cur = replace(cur)(step(_, i))
+          key(cur)
+        }
+        converged = nk == k
+        k = nk
+      }
+    } catch { case t: Throwable => free(cur); throw t }
+    cur
+  }
+
+  /** Run `body` with the call site `"<op> round <i>"`, restoring the
+    * caller's afterwards. */
+  private def inRound[A](df: DataFrame, op: String, i: Int)(body: => A): A = {
+    val sc = df.sparkSession.sparkContext
+    val caller = sc.getLocalProperty(CallSiteShort)
+    sc.setCallSite(s"$op round $i")
+    try body finally sc.setLocalProperty(CallSiteShort, caller)
+  }
+
+  // the local property SparkContext.setCallSite writes (CallSite.SHORT_FORM)
+  private val CallSiteShort = "callSite.short"
 }

@@ -537,65 +537,23 @@ object Dedup {
     * Components in MapReduce and Beyond") without changing callers.
     *
     * Scale: every round is one hash shuffle of (id, label) pairs keyed by
-    * vertex id — never the documents themselves. Each round's labels are
-    * materialized through [[Checkpointer]] (default: eager
-    * `localCheckpoint`, which truncates the growing lineage — round N's
-    * plan does not re-analyze rounds 1..N-1 — but is NOT executor-loss
-    * safe; set `spark.graft.checkpoint.dir` for the durable mode);
-    * superseded label RDDs are dropped by the ContextCleaner once
-    * unreferenced. Convergence is detected with a
-    * single scalar aggregate (labels only ever decrease, so an unchanged
-    * sum means a fixed point — summed as decimal so arbitrary vertex-id
-    * magnitudes cannot overflow).
+    * vertex id — never the documents themselves; the rounds are
+    * [[GraphOps.minLabels]] over the symmetrized pairs. Unconverged
+    * labels are WRONG (one component reported as several, leaving
+    * duplicates in a "keep one per cluster" pipeline), so `maxIter`
+    * rounds without convergence throw `IllegalStateException`; raise
+    * `maxIter` for long-chain graphs or use [[connectedComponentsStars]].
     */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 25): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .persist(lvl)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component"))
-      .transform(Checkpointer.truncate)
-    // sum over an empty frame is null — an empty pair graph has no
-    // vertices and is already converged
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("component").cast("decimal(38,0)"))).head.getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s
-    }
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = labels.isEmpty
-    while (!converged && iter < maxIter) {
-      // one join + one aggregate per round: neighbor labels (edges joined
-      // to labels on src, re-keyed by dst) unioned with each vertex's own
-      // label, then a min per vertex — the self row makes a second
-      // "keep-own-label" join unnecessary
-      val next = edges
-        .join(labels.select(col("id").as("src"), col("component")), "src")
-        .select(col("dst").as("id"), col("component"))
-        .union(labels)
-        .groupBy(col("id"))
-        .agg(min(col("component")).as("component"))
-        .transform(Checkpointer.truncate)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      // superseded round's label blocks are freed NOW rather than at the
-      // next driver GC (Checkpointer.free contract)
-      Checkpointer.free(labels)
-      labels = next
-      iter += 1
-    }
-    edges.unpersist(blocking = false)
-    // unconverged labels are WRONG (one component reported as several) and
-    // would silently leave duplicates in a "keep one per cluster" pipeline
-    // — fail loudly; the caller can raise maxIter for long-chain graphs
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — the " +
-          "graph has a component of diameter > maxIter; raise maxIter")
-    labels
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try GraphOps.minLabels("connectedComponents",
+        edges.select(col("src").as("node")).distinct(), edges, "src", "dst",
+        maxIter)
+      .select(col("node").as("id"), col("lab").as("component"))
+    finally edges.unpersist(blocking = false)
   }
 
   /** Connected components via ALTERNATING LARGE-STAR / SMALL-STAR
@@ -613,8 +571,8 @@ object Dedup {
     * The edge set converges to disjoint stars rooted at component minima;
     * a fingerprint (edge count + hash sum) detects the fixed point. Each
     * round is two grouped aggregates + joins keyed by vertex id, nothing
-    * heavier than (id, id) pairs ever shuffles, and `localCheckpoint`
-    * truncates lineage exactly as the propagation variant does.
+    * heavier than (id, id) pairs ever shuffles; the rounds run on
+    * [[Checkpointer.fixpoint]].
     *
     * Correctness guard: after convergence one min-propagation round is
     * run over the ORIGINAL edges; if any label would still decrease, the
@@ -622,13 +580,12 @@ object Dedup {
     * returning split components. */
   def connectedComponentsStars(
       pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 30): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val rawEdges = pairs
       .select(least(col(aCol), col(bCol)).as("lo"),
         greatest(col(aCol), col(bCol)).as("hi"))
       .filter(col("lo") =!= col("hi"))
       .distinct()
-      .persist(lvl)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // derive the vertex set from the PERSISTED canonical edges, not from
     // `pairs` — a second read of `pairs` would recompute its entire
     // upstream pipeline (for the gated query: the whole minhash pass).
@@ -638,71 +595,65 @@ object Dedup {
     val vertices = rawEdges.select(col("lo").as("id"))
       .union(rawEdges.select(col("hi").as("id"))).distinct()
 
-    def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
+    def fingerprint(df: DataFrame): (Long, BigDecimal) = {
       val r = df.agg(
         count(lit(1)),
-        sum(xxhash64(col("lo"), col("hi")).cast("decimal(38,0)"))).head
-      (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
+        sum(xxhash64(col("lo"), col("hi")).cast("decimal(38,0)"))).head()
+      (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)).getOrElse(BigDecimal(0)))
     }
 
-    var edges = Checkpointer.truncate(rawEdges)
-    var prev = fingerprint(edges)
-    var iter = 0
-    var converged = edges.isEmpty
-    while (!converged && iter < maxIter) {
-      // ---- large-star ----
-      val dir = edges.select(col("lo").as("u"), col("hi").as("v"))
-        .union(edges.select(col("hi").as("u"), col("lo").as("v")))
-      val mL = dir.groupBy(col("u"))
-        .agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val afterLarge = dir.filter(col("v") > col("u"))
-        .join(mL, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("m").as("lo"), col("v").as("hi")) // m ≤ u < v: canonical
-        .distinct()
-      // ---- small-star (directed hi → lo on the canonical edges) ----
-      val mS = afterLarge.groupBy(col("hi").as("u"))
-        .agg(min(col("lo")).as("m")) // all lo < u, so min(Γ⁻ ∪ u) = min(lo)
-      val smallOut = afterLarge
-        .join(mS, afterLarge("hi") === mS("u"))
-        .filter(col("lo") =!= col("m"))
-        .select(col("m").as("lo"), col("lo").as("hi")) // m ≤ lo: canonical
-      val selfOut = mS.select(col("m").as("lo"), col("u").as("hi"))
-      val next = smallOut.union(selfOut)
-        .filter(col("lo") =!= col("hi"))
-        .distinct()
-        .transform(Checkpointer.truncate)
-      val cur = fingerprint(next)
-      converged = cur._1 == prev._1 && cur._2.compareTo(prev._2) == 0
-      prev = cur
-      // free superseded star-edge rounds eagerly — NOT the round-0 frame,
-      // which is the still-persisted rawEdges behind a different plan
-      if (iter > 0) Checkpointer.free(edges)
-      edges = next
-      iter += 1
-    }
-    // star edges → labels: non-roots point at their root; roots label themselves
-    val nonRoot = edges.groupBy(col("hi").as("id")).agg(min(col("lo")).as("c"))
-    val labels = vertices
-      .join(nonRoot, Seq("id"), "left")
-      .select(col("id"), coalesce(col("c"), col("id")).as("component"))
-      .transform(Checkpointer.truncate)
-    if (iter > 0) Checkpointer.free(edges) // final star frame now folded into labels
-    // one verification propagation round over the ORIGINAL edges
-    val dirAll = rawEdges.select(col("lo").as("src"), col("hi").as("dst"))
-      .union(rawEdges.select(col("hi").as("src"), col("lo").as("dst")))
-    val improved = dirAll
-      .join(labels.select(col("id").as("src"), col("component").as("cs")), "src")
-      .join(labels.select(col("id").as("dst"), col("component").as("cd")), "dst")
-      .filter(col("cs") < col("cd"))
-      .limit(1).count()
-    rawEdges.unpersist(blocking = false)
-    if (!converged || improved > 0)
-      throw new IllegalStateException(
-        s"connectedComponentsStars did not reach a star fixed point in " +
-          s"$maxIter rounds (converged=$converged, improvable=$improved)")
-    labels
+    try {
+      // round 0 is a localCheckpoint of its own, not the persisted
+      // rawEdges, so the loop frees it like any other round
+      val stars = Checkpointer.fixpoint("connectedComponentsStars",
+          Checkpointer.truncate(rawEdges), maxIter) { (edges, _) =>
+        // ---- large-star ----
+        val dir = edges.select(col("lo").as("u"), col("hi").as("v"))
+          .union(edges.select(col("hi").as("u"), col("lo").as("v")))
+        val mL = dir.groupBy(col("u"))
+          .agg(min(col("v")).as("mn"))
+          .select(col("u"), least(col("u"), col("mn")).as("m"))
+        val afterLarge = dir.filter(col("v") > col("u"))
+          .join(mL, "u")
+          .filter(col("v") =!= col("m"))
+          .select(col("m").as("lo"), col("v").as("hi")) // m ≤ u < v: canonical
+          .distinct()
+        // ---- small-star (directed hi → lo on the canonical edges) ----
+        val mS = afterLarge.groupBy(col("hi").as("u"))
+          .agg(min(col("lo")).as("m")) // all lo < u, so min(Γ⁻ ∪ u) = min(lo)
+        val smallOut = afterLarge
+          .join(mS, afterLarge("hi") === mS("u"))
+          .filter(col("lo") =!= col("m"))
+          .select(col("m").as("lo"), col("lo").as("hi")) // m ≤ lo: canonical
+        val selfOut = mS.select(col("m").as("lo"), col("u").as("hi"))
+        smallOut.union(selfOut)
+          .filter(col("lo") =!= col("hi"))
+          .distinct()
+      }(fingerprint)
+      // star edges → labels: non-roots point at their root; roots label
+      // themselves. The final star frame is folded into the labels.
+      val labels = Checkpointer.replace(stars) { edges =>
+        val nonRoot = edges.groupBy(col("hi").as("id")).agg(min(col("lo")).as("c"))
+        vertices
+          .join(nonRoot, Seq("id"), "left")
+          .select(col("id"), coalesce(col("c"), col("id")).as("component"))
+      }
+      // one verification propagation round over the ORIGINAL edges
+      val dirAll = rawEdges.select(col("lo").as("src"), col("hi").as("dst"))
+        .union(rawEdges.select(col("hi").as("src"), col("lo").as("dst")))
+      val improved = dirAll
+        .join(labels.select(col("id").as("src"), col("component").as("cs")), "src")
+        .join(labels.select(col("id").as("dst"), col("component").as("cd")), "dst")
+        .filter(col("cs") < col("cd"))
+        .limit(1).count()
+      if (improved > 0) {
+        Checkpointer.free(labels)
+        throw new IllegalStateException(
+          "connectedComponentsStars did not reach a star fixed point: " +
+            "a propagation round still lowers a label")
+      }
+      labels
+    } finally rawEdges.unpersist(blocking = false)
   }
 
   /** Brute top-k closest pairs by cosine (rounded cosine + ids give an

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Iterative graph scoring over edge-list DataFrames — the link-authority
   * side of corpus curation (Common Crawl publishes exactly this: per-host
@@ -34,40 +35,17 @@ object GraphOps {
     * sinks are a narrow `deg IS NULL` filter of the small rank frame —
     * no per-iteration degree join, no anti-join). The node count is
     * the op's single bounded driver exchange (one long). Ranks are
-    * lineage-truncated every round via [[Checkpointer]] — including the
-    * last, so the cached edge and node/degree frames can be unpersisted
-    * before returning instead of leaking blocks for the session's
-    * lifetime. Fault tolerance: the default localCheckpoint mode dies
-    * with a lost executor; set `spark.graft.checkpoint.dir` for the
-    * durable-checkpoint mode a real cluster run needs (contract in
-    * [[Checkpointer]]). */
+    * lineage-truncated every round by [[Checkpointer.rounds]], so the
+    * cached edge and node/degree frames are unpersisted before returning.
+    * Fault tolerance: the default localCheckpoint mode dies with a lost
+    * executor; set `spark.graft.checkpoint.dir` for the durable-checkpoint
+    * mode a real cluster run needs (contract in [[Checkpointer]]). */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, damping: Double = 0.85,
-      roundContrib: Int = 12): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0.0 && damping < 1.0, s"damping in (0,1), got $damping")
-    val g = prepare(edges, srcCol, dstCol)
-    var ranks = g.nd.withColumn("rank", lit(1.0 / g.n))
-    var it = 0
-    while (it < iterations) {
-      // materialize every round: chaining lazily makes iteration i replay
-      // every earlier round (O(iterations²) joins) and grows the lineage
-      // unboundedly — the same localCheckpoint policy as the CC loop. The
-      // FINAL round checkpoints too (ranks is just (node, deg, rank)) so
-      // the returned frame no longer references the cached inputs.
-      // Round i's blocks are FREED once round i+1 is materialized
-      // (Checkpointer.free) — superseded round state must not sit in the
-      // block manager until the driver GCs the reference.
-      val prev = ranks
-      ranks = Checkpointer.truncate(
-        iterate(g, ranks, damping, roundContrib))
-      Checkpointer.free(prev)
-      it += 1
-    }
-    g.e.unpersist(); g.nd.unpersist()
-    ranks.select(col("node"), col("rank"))
-  }
+      roundContrib: Int = 12): DataFrame =
+    ranked("pageRank", edges, srcCol, dstCol, None,
+      iterations, damping, roundContrib)
 
   /** WEIGHTED PageRank: rank splits over out-edges in proportion to a
     * positive edge weight (contribution `rank·w/Σw`) instead of
@@ -81,18 +59,20 @@ object GraphOps {
   def pageRankWeighted(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int, damping: Double = 0.85,
-      roundContrib: Int = 12): DataFrame = {
+      roundContrib: Int = 12): DataFrame =
+    ranked("pageRankWeighted", edges, srcCol, dstCol, Some(weightCol),
+      iterations, damping, roundContrib)
+
+  private def ranked(
+      op: String, edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], iterations: Int, damping: Double,
+      roundContrib: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0.0 && damping < 1.0, s"damping in (0,1), got $damping")
-    val g = prepare(edges, srcCol, dstCol, Some(weightCol))
-    var ranks = g.nd.withColumn("rank", lit(1.0 / g.n))
-    var it = 0
-    while (it < iterations) {
-      val prev = ranks
-      ranks = Checkpointer.truncate(
-        iterate(g, ranks, damping, roundContrib))
-      Checkpointer.free(prev) // superseded round state (pageRank comment)
-      it += 1
+    val g = prepare(edges, srcCol, dstCol, weightCol)
+    val ranks = Checkpointer.rounds(op,
+        g.nd.withColumn("rank", lit(1.0 / g.n)), iterations) { (r, _) =>
+      iterate(g, r, damping, roundContrib)
     }
     g.e.unpersist(); g.nd.unpersist()
     ranks.select(col("node"), col("rank"))
@@ -120,27 +100,23 @@ object GraphOps {
     val seedSet = g.nd.select(col("node"))
       .join(broadcast(seeds.select(col(seedCol).as("node")).distinct()),
         Seq("node"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val nt = seedSet.count() // bounded driver exchange: one long
     require(nt > 0, "no seed node is present in the graph")
     val flagged = Checkpointer.truncate(g.nd.join(
       seedSet.withColumn("__t", lit(1)), Seq("node"), "left")
       .select(col("node"), col("deg"), coalesce(col("__t"), lit(0)).as("__t")))
-    def exactSum(c: Column): Column =
-      coalesce(sum(c.cast("decimal(38,18)")).cast("double"), lit(0.0))
-    var ranks = flagged.select(col("node"), col("deg"),
+    val init = flagged.select(col("node"), col("deg"),
       (col("__t") * lit(1.0 / nt)).as("rank"))
-    var it = 0
-    while (it < iterations) {
+    val ranks = Checkpointer.rounds("pageRankPersonalized", init,
+        iterations) { (prev, _) =>
       val contribs = g.e
-        .join(ranks, g.e("src") === ranks("node"))
+        .join(prev, g.e("src") === prev("node"))
         .select(col("dst").as("node"),
           round(col("rank") / col("deg"), roundContrib).as("contrib"))
-      val sinkMass = ranks
-        .filter(col("deg").isNull)
-        .agg(coalesce(sum(col("rank").cast("decimal(38,18)")).cast("double"),
-          lit(0.0)).as("dm"))
-      ranks = flagged
+      val sinkMass = prev.filter(col("deg").isNull)
+        .agg(exactSum(col("rank")).as("dm"))
+      flagged
         .join(contribs, Seq("node"), "left")
         .groupBy(col("node"), col("__t"))
         .agg(first(col("deg")).as("deg"), exactSum(col("contrib")).as("csum"))
@@ -150,12 +126,6 @@ object GraphOps {
             lit(damping) *
               (col("csum") +
                 col("__t") * round(col("dm") / nt, roundContrib))).as("rank"))
-        .transform { next =>
-          val t = Checkpointer.truncate(next)
-          Checkpointer.free(ranks) // superseded round state (pageRank comment)
-          t
-        }
-      it += 1
     }
     g.e.unpersist(); g.nd.unpersist(); seedSet.unpersist()
     ranks.select(col("node"), col("rank"))
@@ -188,26 +158,22 @@ object GraphOps {
     * round's (est, h) rides the same union (neighbor rows carry nulls,
     * `max` folds out the one non-null per node), so there is no second
     * per-depth join back to the previous frame. Only (node, ball) pairs
-    * ever shuffle, balls bounded by the tier caps. localCheckpoint
-    * truncates lineage per round exactly as [[pageRank]]. */
+    * ever shuffle, balls bounded by the tier caps. */
   def harmonicCentrality(
       edges: DataFrame, srcCol: String, dstCol: String, maxDepth: Int,
       exactCap: Int = graft.functions.expr.DistinctSketchAgg.DefaultExactCap,
       lgK: Int = graft.functions.expr.DistinctSketchAgg.DefaultLgK): DataFrame = {
     import graft.functions.expr.{DistinctSketchEstimate, DistinctSketchSingleton, SketchUnionAgg}
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("dst")).persist(disk)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(disk)
-    var cur = nodes.select(col("node"),
+      .repartition(col("dst")).persist(MEMORY_AND_DISK)
+    val nodes = nodesOf(e).persist(MEMORY_AND_DISK)
+    val init = nodes.select(col("node"),
         DistinctSketchSingleton(xxhash64(col("node")), exactCap, lgK).as("ball"),
         lit(1L).as("est"), lit(0.0).as("h"))
       .transform(Checkpointer.truncate)
-    var t = 1
-    while (t <= maxDepth) {
+    val balls = Checkpointer.rounds("harmonicCentrality", init,
+        maxDepth) { (cur, t) =>
       // previous round's (est, h) rides the union as extra columns:
       // neighbor rows carry nulls, every node has exactly one own row,
       // so max() recovers (prev, h) inside the ONE node-keyed aggregate
@@ -216,7 +182,7 @@ object GraphOps {
         .join(cur.select(col("node"), col("ball")), e("dst") === cur("node"))
         .select(e("src").as("node"), col("ball"),
           lit(null).cast("long").as("prev"), lit(null).cast("double").as("h"))
-      cur = neigh
+      neigh
         .unionByName(cur.select(col("node"), col("ball"),
           col("est").as("prev"), col("h")))
         .groupBy(col("node"))
@@ -226,15 +192,9 @@ object GraphOps {
         .select(col("node"), col("ball"), col("est"),
           (col("h") +
             (col("est") - col("prev")).cast("double") / lit(t.toDouble)).as("h"))
-        .transform { next =>
-          val tr = Checkpointer.truncate(next)
-          Checkpointer.free(cur) // superseded ball state (pageRank comment)
-          tr
-        }
-      t += 1
     }
     e.unpersist(); nodes.unpersist()
-    cur.select(col("node"), col("est"), col("h"))
+    balls.select(col("node"), col("est"), col("h"))
   }
 
   /** Strongly connected components of a DIRECTED graph — the coloring /
@@ -256,12 +216,10 @@ object GraphOps {
     * drop out; at least the global-min node's SCC retires every round,
     * so the loop terminates.
     *
-    * Scale shape: every fixpoint round is ONE label join + min
-    * aggregate over the persisted remaining-edge frame — (node, label)
-    * longs on the wire, never adjacency lists; localCheckpoint
-    * truncates lineage; convergence is detected by the strictly
-    * decreasing label sum (the [[Dedup.connectedComponents]] trick: one
-    * scalar action per round, no diff join). Round count is the
+    * Scale shape: both fixpoints are [[minLabels]] over the persisted
+    * remaining-edge frame — (node, label) longs on the wire, never
+    * adjacency lists, one label join + min aggregate and one scalar
+    * convergence action per round. Round count is the
     * remaining graph's diameter per fixpoint × the SCC "peeling depth"
     * — shallow on web-shaped graphs, O(n) on a pathological directed
     * path (the documented worst case of the whole FW-BW family);
@@ -271,80 +229,71 @@ object GraphOps {
   def stronglyConnected(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 50): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("lab").cast("decimal(38,0)"))).head.getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s
-    }
-    // min-label fixpoint over `ed` with labels flowing fromCol → toCol
-    def fixpoint(nodes: DataFrame, ed: DataFrame,
-        fromCol: String, toCol: String): DataFrame = {
-      var lab = nodes.select(col("node"), col("node").as("lab"))
-        .transform(Checkpointer.truncate)
-      var prev = labelSum(lab)
-      var it = 0
-      var converged = lab.isEmpty
-      while (!converged) {
-        require(it < maxIter,
-          s"stronglyConnected: label fixpoint did not converge in $maxIter rounds")
-        val next = ed
-          .join(lab.select(col("node").as(fromCol), col("lab")), fromCol)
-          .select(col(toCol).as("node"), col("lab"))
-          .unionByName(lab)
-          .groupBy(col("node"))
-          .agg(min(col("lab")).as("lab"))
-          .transform(Checkpointer.truncate)
-        val ns = labelSum(next)
-        converged = ns.compareTo(prev) == 0
-        prev = ns
-        Checkpointer.free(lab) // superseded round state (pageRank comment)
-        lab = next
-        it += 1
-      }
-      lab
-    }
     var e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .persist(lvl)
-    var nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .transform(Checkpointer.truncate)
-    var result: DataFrame = null
-    var outer = 0
-    while (!nodes.isEmpty) {
-      require(outer < maxIter,
-        s"stronglyConnected: peeling did not finish in $maxIter rounds")
-      val f0 = fixpoint(nodes, e, "src", "dst")
-      val b0 = fixpoint(nodes, e, "dst", "src")
-      val f = f0.withColumnRenamed("lab", "flab")
-      val b = b0.withColumnRenamed("lab", "blab")
-      val done = f.join(b, "node")
-        .filter(col("flab") === col("blab"))
-        .select(col("node"), col("flab").as("scc_id"))
-        .transform(Checkpointer.truncate)
-      // the fixpoint label frames are dead once `done` is materialized
-      Checkpointer.free(f0); Checkpointer.free(b0)
-      result = if (result == null) done else result.unionByName(done)
-      val prevNodes = nodes
-      nodes = nodes.join(done.select("node"), Seq("node"), "left_anti")
-        .transform(Checkpointer.truncate)
-      Checkpointer.free(prevNodes) // superseded peel frontier
-      val e2 = e
-        .join(done.select(col("node").as("src")), Seq("src"), "left_anti")
-        .join(done.select(col("node").as("dst")), Seq("dst"), "left_anti")
-        .persist(lvl)
-      e2.count() // materialize before dropping the parent
-      e.unpersist()
-      e = e2
-      outer += 1
-    }
-    e.unpersist()
-    if (result == null)
+      .persist(MEMORY_AND_DISK)
+    var nodes = nodesOf(e).transform(Checkpointer.truncate)
+    val retired = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    try {
+      while (!nodes.isEmpty) {
+        require(retired.length < maxIter,
+          s"stronglyConnected: peeling did not finish in $maxIter rounds")
+        val f = minLabels("stronglyConnected", nodes, e, "src", "dst", maxIter)
+        // the label frames are dead once `done` is materialized
+        val done = try {
+          val b = minLabels("stronglyConnected", nodes, e, "dst", "src", maxIter)
+          try f.withColumnRenamed("lab", "flab")
+            .join(b.withColumnRenamed("lab", "blab"), "node")
+            .filter(col("flab") === col("blab"))
+            .select(col("node"), col("flab").as("scc_id"))
+            .transform(Checkpointer.truncate)
+          finally Checkpointer.free(b)
+        } finally Checkpointer.free(f)
+        retired += done
+        nodes = Checkpointer.replace(nodes)(
+          _.join(done.select("node"), Seq("node"), "left_anti"))
+        val e2 = e
+          .join(done.select(col("node").as("src")), Seq("src"), "left_anti")
+          .join(done.select(col("node").as("dst")), Seq("dst"), "left_anti")
+          .persist(MEMORY_AND_DISK)
+        e2.count() // materialize before dropping the parent
+        e.unpersist()
+        e = e2
+      }
+    } catch { case t: Throwable =>
+      (nodes +: retired).foreach(Checkpointer.free)
+      throw t
+    } finally e.unpersist()
+    retired.reduceOption(_ unionByName _).getOrElse(
       edges.sparkSession.range(0)
-        .select(col("id").as("node"), col("id").as("scc_id"))
-    else result
+        .select(col("id").as("node"), col("id").as("scc_id")))
+  }
+
+  /** Min-label propagation, the fixpoint under [[stronglyConnected]] and
+    * [[Dedup.connectedComponents]]: every node of `nodes` starts labeled
+    * with itself, and each round takes the min of its own label and the
+    * labels flowing along `ed` from `fromCol` to `toCol` — one join and
+    * one min aggregate, the node's own row in the union standing in for a
+    * second keep-own-label join. Labels only decrease, so an unchanged
+    * label sum (decimal, so no id magnitude overflows) is the fixed point:
+    * one scalar action per round, no diff join. Output: (node, lab). */
+  private[pipeline] def minLabels(op: String, nodes: DataFrame,
+      ed: DataFrame, fromCol: String, toCol: String, maxIter: Int): DataFrame = {
+    // an empty frame sums to null
+    def labelSum(df: DataFrame): BigDecimal =
+      Option(df.agg(sum(col("lab").cast("decimal(38,0)"))).head().getDecimal(0))
+        .map(BigDecimal(_)).getOrElse(BigDecimal(0))
+    val init = nodes.select(col("node"), col("node").as("lab"))
+      .transform(Checkpointer.truncate)
+    Checkpointer.fixpoint(op, init, maxIter) { (lab, _) =>
+      ed.join(lab.select(col("node").as(fromCol), col("lab")), fromCol)
+        .select(col(toCol).as("node"), col("lab"))
+        .unionByName(lab)
+        .groupBy(col("node"))
+        .agg(min(col("lab")).as("lab"))
+    }(labelSum)
   }
 
   /** Per-node triangle counts via DEGREE-ORDERED orientation — the
@@ -372,11 +321,7 @@ object GraphOps {
     * node incident to at least one triangle (others are zero by
     * absence). */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("dg"))
@@ -428,37 +373,25 @@ object GraphOps {
     * Scale shape: per iteration two score-keyed equi-joins over the ONE
     * pre-partitioned persisted edge frame and two node-keyed aggregates —
     * only (node, score) pairs shuffle; each L1 total is a 1-row broadcast.
-    * localCheckpoint truncates lineage per round exactly as [[pageRank]];
-    * nodes with no in-edges hold authority 0 (resp. no out-edges, hub 0).
+    * Nodes with no in-edges hold authority 0 (resp. no out-edges, hub 0).
     * Output: (node, hub, auth). */
   def hits(
       edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, roundContrib: Int = 12): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src")).persist(disk)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(disk)
-    var cur = nodes.select(col("node"), lit(1.0).as("hub"), lit(1.0).as("auth"))
-    var it = 0
-    while (it < iterations) {
-      // checkpoint EACH half-step: the auth frame feeds both the hub
-      // half-step and the final join — left live, its whole subtree
-      // would be embedded (and computed) in both consumers, doubling
-      // the per-iteration work and growing the plan superlinearly
-      val auth = Checkpointer.truncate(
-        hitsHalfStep(e, nodes, cur, "hub", "src", "dst", "auth",
-          roundContrib))
-      val hub = hitsHalfStep(e, nodes, auth, "auth", "dst", "src", "hub",
-        roundContrib)
-      val prev = cur
-      cur = Checkpointer.truncate(hub.join(auth, Seq("node")))
-      // both half-step inputs are dead once the joined round frame is
-      // materialized (pageRank free comment)
-      Checkpointer.free(prev); Checkpointer.free(auth)
-      it += 1
+      .repartition(col("src")).persist(MEMORY_AND_DISK)
+    val nodes = nodesOf(e).persist(MEMORY_AND_DISK)
+    val init = nodes.select(col("node"), lit(1.0).as("hub"), lit(1.0).as("auth"))
+    // one round per HALF-step, so the (node, auth) frame is checkpointed:
+    // it feeds both the hub half-step and the join, and left live its
+    // subtree would be computed twice and the plan would grow superlinearly
+    val cur = Checkpointer.rounds("hits", init, 2 * iterations) { (prev, i) =>
+      if (i % 2 == 1)
+        hitsHalfStep(e, nodes, prev, "hub", "src", "dst", "auth", roundContrib)
+      else
+        hitsHalfStep(e, nodes, prev, "auth", "dst", "src", "hub", roundContrib)
+          .join(prev, Seq("node"))
     }
     e.unpersist(); nodes.unpersist()
     cur.select(col("node"), col("hub"), col("auth"))
@@ -472,8 +405,6 @@ object GraphOps {
   private[graft] def hitsHalfStep(
       e: DataFrame, nodes: DataFrame, scores: DataFrame, scoreCol: String,
       from: String, to: String, outCol: String, roundContrib: Int): DataFrame = {
-    def exactSum(c: Column): Column =
-      coalesce(sum(c.cast("decimal(38,18)")).cast("double"), lit(0.0))
     val raw = e
       .join(scores.select(col("node"), col(scoreCol)), e(from) === col("node"))
       .groupBy(e(to).as("node"))
@@ -512,22 +443,12 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = und
-      .union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src")).persist(disk)
-    var lab = sym.select(col("src").as("node")).distinct()
+    val sym = symmetric(edges, srcCol, dstCol)
+      .repartition(col("src")).persist(MEMORY_AND_DISK)
+    val init = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    var r = 0
-    while (r < rounds) {
-      val prev = lab
-      lab = Checkpointer.truncate(lpaRound(sym, lab))
-      Checkpointer.free(prev) // superseded round state (pageRank comment)
-      r += 1
+    val lab = Checkpointer.rounds("labelPropagation", init, rounds) {
+      (prev, _) => lpaRound(sym, prev)
     }
     sym.unpersist()
     lab
@@ -560,11 +481,7 @@ object GraphOps {
     * wire. Determinism: integer counts, one IEEE division rounded at 9. */
   def clusteringCoefficients(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -595,11 +512,7 @@ object GraphOps {
     * (n_edges, assortativity). */
   def assortativity(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val sym = und.select(col("u").as("src"), col("v").as("dst"))
       .union(und.select(col("v").as("src"), col("u").as("dst")))
     val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("dg"))
@@ -636,36 +549,24 @@ object GraphOps {
     * Scale shape: edges symmetrized + dedup'd once; per round one
     * src-keyed degree aggregate with map-side combine and two semi-joins
     * of the edge frame against the surviving-node set — (node, degree)
-    * pairs and id-pair edges are all that shuffle. localCheckpoint per
-    * round truncates the shrinking edge frame's lineage exactly as the
-    * rank loops. Output: (node, deg) of survivors, deg = degree INSIDE
-    * the surviving subgraph. */
+    * pairs and id-pair edges are all that shuffle. Output: (node, deg) of
+    * survivors, deg = degree INSIDE the surviving subgraph. */
   def kCore(
       edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    var e = und
-      .union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val init = symmetric(edges, srcCol, dstCol)
       .transform(Checkpointer.truncate)
-    var r = 0
-    while (r < rounds) {
-      val keep = e.groupBy(col("src").as("node"))
+    val e = Checkpointer.rounds("kCore", init, rounds) { (prev, _) =>
+      val keep = prev.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-      val prev = e
-      e = e
+      prev
         .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .transform(Checkpointer.truncate)
-      Checkpointer.free(prev) // superseded round state (pageRank comment)
-      r += 1
     }
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
@@ -685,29 +586,26 @@ object GraphOps {
     * table is persisted on the node key it joins and aggregates on.
     * Without the persists the upstream distinct would recompute per
     * iteration; without the pre-partitioning every iteration would
-    * re-shuffle the full edge set. */
-  /** `weightCol = None` carries weight 1.0 per edge, and `deg` becomes
-    * the plain out-degree; multiplying a rank by 1.0 is IEEE-exact, so
-    * the unweighted arithmetic is bit-identical to a weightless
-    * formulation. Weights must be positive — a zero-total-weight source
-    * would divide by zero. */
+    * re-shuffle the full edge set. `weightCol = None` carries weight 1.0
+    * per edge, and `deg` becomes the plain out-degree; multiplying a rank
+    * by 1.0 is IEEE-exact, so the unweighted arithmetic is bit-identical
+    * to a weightless formulation. Weights must be positive — a
+    * zero-total-weight source would divide by zero. */
   private[graft] def prepare(
       edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String] = None): PrGraph = {
-    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val w = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         w.as("w"))
-      .repartition(col("src")).persist(disk)
+      .repartition(col("src")).persist(MEMORY_AND_DISK)
     // rename BEFORE grouping so every node-keyed exchange in this frame's
     // plan prints on `node` — PlanSpec's no-live-src-exchange pin reads
     // the plan text, cached relations included
     val deg = e.select(col("src").as("node"), col("w")).groupBy(col("node"))
       .agg(sum(col("w")).as("deg"))
-    val nd = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val nd = nodesOf(e)
       .join(deg, Seq("node"), "left")
-      .persist(disk)
+      .persist(MEMORY_AND_DISK)
     val n = nd.count() // bounded driver exchange: one long
     PrGraph(e, nd, n)
   }
@@ -720,8 +618,6 @@ object GraphOps {
       g: PrGraph, ranks: DataFrame,
       damping: Double, roundContrib: Int): DataFrame = {
     val base = lit((1.0 - damping) / g.n)
-    def exactSum(c: Column): Column =
-      coalesce(sum(c.cast("decimal(38,18)")).cast("double"), lit(0.0))
     // only rows with out-edges match the join, so `deg` is non-null on
     // every contribution; rank splits over out-edges in proportion to
     // edge weight (w = 1.0 and deg = out-degree in the unweighted case —
@@ -734,10 +630,8 @@ object GraphOps {
     // rank frame itself; one narrow filter + 1-row aggregate, broadcast
     // into the update. Its uniform per-node share joins the edge
     // contributions inside the damping term (textbook formulation).
-    val sinkMass = ranks
-      .filter(col("deg").isNull)
-      .agg(coalesce(sum(col("rank").cast("decimal(38,18)")).cast("double"),
-        lit(0.0)).as("dm"))
+    val sinkMass = ranks.filter(col("deg").isNull)
+      .agg(exactSum(col("rank")).as("dm"))
     g.nd
       .join(contribs, Seq("node"), "left")
       .groupBy(col("node"))
@@ -747,6 +641,33 @@ object GraphOps {
         (base + lit(damping) *
           (col("csum") + round(col("dm") / g.n, roundContrib))).as("rank"))
   }
+
+  /** The canonical undirected edge set: one (u, v) row per unordered
+    * pair, u < v, self-loops dropped. */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+
+  /** Both directions of every non-self-loop edge, once each: (src, dst). */
+  private def symmetric(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val und = edges
+      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src") =!= col("dst"))
+    und.union(und.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
+  /** The distinct endpoints of a (src, dst) edge frame, as `node`. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+      .distinct()
+
+  /** Exact sum of doubles: summed as decimal(38,18), so the result does
+    * not depend on summation order; 0.0 over no rows. */
+  private def exactSum(c: Column): Column =
+    coalesce(sum(c.cast("decimal(38,18)")).cast("double"), lit(0.0))
 
   /** Newman modularity Q of a LABELED partition over an undirected
     * simple graph: Q = Σ_c (e_c/m − (D_c/2m)²) — "how much denser are
@@ -775,10 +696,7 @@ object GraphOps {
     val lab = labels.select(col(nodeCol).as("__node"),
       col(labelCol).as("__lab"))
       .groupBy(col("__node")).agg(min(col("__lab")).as("__lab"))
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .join(lab.select(col("__node").as("u"), col("__lab").as("lu")), Seq("u"))
       .join(lab.select(col("__node").as("v"), col("__lab").as("lv")), Seq("v"))
     val mTot = und.agg(count(lit(1)).as("m"))

@@ -638,6 +638,13 @@ class AnalyticsSpec extends AnyFunSuite {
     val p = graft.pipeline.GraphOps.stronglyConnected(path, "s", "d")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(p == Map(10L -> 10L, 11L -> 11L, 12L -> 12L, 13L -> 13L))
+    // too few rounds for the path fails loudly and leaves nothing cached
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException] {
+      graft.pipeline.GraphOps.stronglyConnected(path, "s", "d", maxIter = 2)
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
     // one big cycle through ALL nodes: a single component under min id
     val ring = (1L to 6L).map(i => i -> (i % 6 + 1)).toDF("s", "d")
     val rOut = graft.pipeline.GraphOps.stronglyConnected(ring, "s", "d")

@@ -211,9 +211,14 @@ class DedupSpec extends AnyFunSuite {
     // rounds and fails loudly at the default maxIter, while the
     // alternating star rounds collapse it in O(log n)
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("da", "db")
-    intercept[IllegalStateException] {
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, "da", "db") // maxIter=25 < diameter
     }
+    assert(err.getMessage.contains("connectedComponents"), err.getMessage)
+    // the throw leaves neither the edge frame nor a label round cached
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
     val comp = Dedup.connectedComponentsStars(chain, "da", "db")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size == 200)

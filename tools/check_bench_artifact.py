@@ -18,13 +18,19 @@ Contract checked:
     queries (non-empty dict of name -> number), sf (string) exist;
   * value and every query value are finite non-negative numbers, not
     booleans;
-  * for --stdout: EXACTLY ONE line of the capture parses as a JSON
-    object with those keys (the bench prints one JSON line; sbt noise
-    and stderr leakage must not add parseable impostors).
+  * for --stdout: only the LAST 2000 chars of the capture are read (a
+    harness that keeps a tail of stdout keeps that much), and EXACTLY
+    ONE line of them parses as a JSON object with those keys (the bench
+    prints one compact JSON line; sbt noise and stderr leakage must not
+    add parseable impostors, and a record longer than the tail cannot
+    parse).
 """
 import json
 import math
 import sys
+
+# trailing chars of a run's stdout that a tail capture keeps
+TAIL_CHARS = 2000
 
 
 def is_number(v):
@@ -67,9 +73,10 @@ def main(argv):
         print(__doc__)
         return 2
     if argv and argv[0] == "--stdout":
-        lines = open(argv[1], encoding="utf-8", errors="replace").readlines()
+        with open(argv[1], encoding="utf-8", errors="replace") as f:
+            tail = f.read()[-TAIL_CHARS:]
         recs = []
-        for ln in lines:
+        for ln in tail.splitlines():
             ln = ln.strip()
             if not (ln.startswith("{") and ln.endswith("}")):
                 continue
@@ -80,8 +87,8 @@ def main(argv):
             if isinstance(obj, dict) and "metric" in obj and "queries" in obj:
                 recs.append(obj)
         if len(recs) != 1:
-            print(f"FAIL {argv[1]}: expected exactly 1 bench JSON line on "
-                  f"stdout, found {len(recs)}")
+            print(f"FAIL {argv[1]}: expected exactly 1 bench JSON line in "
+                  f"the last {TAIL_CHARS} chars of stdout, found {len(recs)}")
             return 1
         return 0 if check_record(recs[0], argv[1]) else 1
     if len(argv) != 1:

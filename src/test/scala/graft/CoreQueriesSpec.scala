@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
+
+import scala.jdk.CollectionConverters._
 
 class CoreQueriesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -53,11 +58,30 @@ class CoreQueriesSpec extends AnyFunSuite {
   }
 
   test("every declared capability runs at sf0.001") {
-    val failures = Registry.all.flatMap { c =>
-      try { c.run(spark, sf).count(); None }
-      catch { case e: Throwable => Some(s"${c.name}: ${e.getMessage}") }
-    }
+    // one build + count per capability, shared with LintSpec's inventory
+    val failures = TestSpark.reviewed.collect { case (name, Left(err)) => s"$name: $err" }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("Bench.runOnce names the query's jobs and restores the caller's description") {
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("caller")
+      Bench.runOnce(spark, sf, "q03_group_agg")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      eventually(timeout(Span(10, Seconds))) { assert(!descriptions.isEmpty) }
+      assert(descriptions.asScala.forall(_ == "q03_group_agg"), descriptions)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("flagship query is deterministic across runs") {

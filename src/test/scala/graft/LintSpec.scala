@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.Lint
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +10,100 @@ class LintSpec extends AnyFunSuite {
 
   private def rules(df: org.apache.spark.sql.DataFrame): Set[String] =
     Lint.lint(df).map(_.rule).toSet
+
+  // The one inventory of allowed plan findings: (rules, queries) groups,
+  // one reason each. The registry-wide test below fails on a finding not
+  // listed and on a listed (query, rule) pair that no longer occurs, so
+  // the table stays exact; its global-window entries are the allowed
+  // unpartitioned windows.
+  private val justified: Set[(String, String)] = Seq(
+    // -- cartesian --------------------------------------------------
+    // the declared cross-join capability: the product IS the output
+    Seq("cartesian") -> Seq("q30_cross_join"),
+    // group-pair theta joins (a < b) over #groups-row moment or sketch
+    // frames, never over fact rows
+    Seq("cartesian") -> Seq("q48_sketch_overlap", "q55_welch", "q66_fdr",
+      "q76_two_proportion", "q77_cohens_d", "q95_tukey_hsd"),
+    // the dense contingency grid: row marginals x column marginals,
+    // bounded by the category counts
+    Seq("cartesian") -> Seq("q57_chisq", "q73_cramers_v"),
+    // pairwise estimators cross two budget-lottery samples: O(target²)
+    // rows by the Budget guarantee at any input size
+    Seq("cartesian") -> Seq("q84_hodges_lehmann", "q102_energy"),
+    // naive-Bayes scoring fans each document out over the broadcast
+    // #labels-row class frame
+    Seq("cartesian") -> Seq("pipeline_nb_classify", "pipeline_nb_eval",
+      "pipeline_nb_auc", "pipeline_nb_kappa"),
+    // exact vector tiers: a fixed, broadcast query (or eval) set against
+    // the corpus — the brute baselines and re-ranks the scale paths are
+    // gated against; dedup_embedding is the declared quadratic twin
+    Seq("cartesian") -> Seq("ann_brute", "ann_filtered", "ann_int8",
+      "ann_binary", "ann_ladder", "ann_pq", "hybrid_rrf", "ann_lsh_recall",
+      "ann_ivf_recall", "ann_ivf_incremental_recall", "ann_int8_recall",
+      "ann_pq_recall", "pipeline_decontam_semantic", "dedup_embedding"),
+    // IVF cell assignment: vectors x the broadcast nCentroids-row table
+    Seq("cartesian") -> Seq("ann_ivf", "ann_ivf_incremental"),
+    // -- global-window + single-partition-shuffle --------------------
+    // cumulative sums over a distinct-VALUE count frame (2-decimal
+    // measures, bins, integer durations): bounded by the value domain
+    Seq("global-window", "single-partition-shuffle") -> Seq(
+      "q56_mannwhitney", "q56b_mannwhitney_binned", "q58_ks",
+      "q58c_ks_binned", "q58b_cvm", "q58d_cvm_binned", "q78_kruskal_wallis",
+      "q108_jonckheere", "q108b_jonckheere_binned", "q65_kaplan_meier",
+      "q88_logrank", "q91_nelson_aalen"),
+    // the same cumsum over distinct pair differences of a budget sample
+    // (q84) and over distinct classifier scores (nb_auc)
+    Seq("global-window", "single-partition-shuffle") -> Seq(
+      "q84_hodges_lehmann", "pipeline_nb_auc"),
+    // the conformal rank pick runs over the distinct 1e-9 |residual|
+    // frame of the calibration half, which grows with it: the one entry
+    // here not bounded by construction (Quantiles.exact is the scale path)
+    Seq("global-window", "single-partition-shuffle") -> Seq("q63_conformal"),
+    // ranks over frames with one row per group, group pair or condition:
+    // BH's C(groups,2) pairs, Page's condition index, the
+    // largest-remainder allocation table of the temperature mix
+    Seq("global-window", "single-partition-shuffle") -> Seq("q66_fdr",
+      "q110_page_trend", "pipeline_mix_temperature", "pipeline_e2e_v2"),
+    // exact RFM quintiles rank the one-row-per-customer rollup, far
+    // below the fact table (q27a's cutoff literals are the scale path)
+    Seq("global-window", "single-partition-shuffle") -> Seq("orders_rfm"),
+    // the Zipf rank runs over the vocabulary-sized count frame (top 100
+    // kept), never the corpus
+    Seq("global-window") -> Seq("text_zipf"),
+    // -- expand-distinct ---------------------------------------------
+    // the Expand IS the operator: grouping sets, unpivot and sliding
+    // windows multiply each row once by design (one scan, one shuffle)
+    Seq("expand-distinct") -> Seq("q28_rollup", "q28b_cube",
+      "q28c_grouping_sets", "q13_unpivot", "q22c_sliding_window"),
+    // the declared exact multi-distinct profile; profile_stats_sketch
+    // is its mergeable-sketch scale path
+    Seq("expand-distinct") -> Seq("profile_stats"),
+    // the dof's two countDistincts run over the r x c grid, never the
+    // corpus
+    Seq("expand-distinct") -> Seq("q57_chisq"),
+    // -- unpushed-filter ---------------------------------------------
+    // gate fixtures slice tables by key residue (id % k, pmod): parquet
+    // has no modulo predicate, so the filter evaluates post-scan
+    Seq("unpushed-filter") -> Seq("q38_range_join", "q38b_interval_overlap",
+      "q63_conformal", "q88_logrank", "dedup_incremental", "text_pii",
+      "text_urls", "pipeline_nb_classify", "pipeline_nb_eval",
+      "pipeline_nb_auc", "pipeline_nb_kappa", "pipeline_upsert",
+      "pipeline_scd2", "pipeline_diff", "mm_decode", "mm_decode_meta",
+      "mm_frames", "mm_frames_meta", "mm_video_pairs", "mm_phash_pairs",
+      "mm_audio_fp_pairs"),
+    // md5-prefix lotteries and buckets are computed columns
+    Seq("unpushed-filter") -> Seq("pipeline_decontam",
+      "pipeline_decontam_bloom", "pipeline_mix"),
+    // guards over computed columns: the non-empty embedding check and
+    // the word-count / ratio quality screens over split(text)
+    Seq("unpushed-filter") -> Seq("ann_centroids", "pipeline_e2e"),
+    // the one-ship-year kernel coverage slice is year(l_shipdate) =
+    // 1995, which parquet cannot push (a date range could)
+    Seq("unpushed-filter") -> Seq("q16b_trig", "q19_ranking"),
+    // the exact-quantile cutoff is a double; comparing the long
+    // n_chars column to it casts the column
+    Seq("unpushed-filter") -> Seq("pipeline_quality_cut")
+  ).flatMap { case (rules, queries) => for (r <- rules; q <- queries) yield q -> r }.toSet
 
   test("lint flags a cartesian join") {
     import spark.implicits._
@@ -20,8 +115,7 @@ class LintSpec extends AnyFunSuite {
   test("lint flags a global (no PARTITION BY) window") {
     import spark.implicits._
     val df = Seq(3, 1, 2).toDF("v")
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("v"))))
+      .withColumn("rn", row_number().over(Window.orderBy(col("v"))))
     assert(rules(df).contains("global-window"))
   }
 
@@ -43,128 +137,67 @@ class LintSpec extends AnyFunSuite {
       defeated.queryExecution.executedPlan.toString.take(1500))
   }
 
-  test("flagship queries carry no UNJUSTIFIED plan findings") {
-    // every bench-flagged query's plan is linted; a finding is allowed
-    // only where the design doc justifies it (bounded side, bounded
-    // frame). Anything new fails the build until justified here.
-    val justified: Map[String, Set[String]] = Map(
-      // broadcast 1-row aggregate frames (bounds/scalars) joined back
-      "profile_histogram" -> Set("cartesian"),
-      "text_drift_bucketed" -> Set("cartesian"),
-      // ann_lsh/ivf probe tables and PQ codebooks ride tiny broadcasts
-      "ann_lsh" -> Set("cartesian"),
-      "ann_ivf" -> Set("cartesian"),
-      "ann_pq" -> Set("cartesian"),
-      "ann_ladder" -> Set("cartesian"),
-      "ann_kmeans_quality" -> Set("cartesian"),
-      "sparse_topk" -> Set("cartesian"),
-      "sparse_bm25" -> Set("cartesian"),
-      // gate fixtures slice corpora with parquet-inexpressible
-      // predicates (doc_id % 2, md5-prefix buckets, date arithmetic):
-      // the filter CANNOT push and evaluates post-scan by design —
-      // reviewed, not a defeated-pushdown bug
-      "q38_range_join" -> Set("unpushed-filter"),
-      "dedup_incremental" -> Set("cartesian", "unpushed-filter"),
-      "pipeline_decontam_bloom" -> Set("unpushed-filter"),
-      "mm_video_pairs" -> Set("cartesian", "unpushed-filter"),
-      "pipeline_decontam_semantic" -> Set("cartesian"),
-      "graph_harmonic" -> Set("cartesian"),
-      "graph_pagerank" -> Set("cartesian"),
-      "graph_wpr" -> Set("cartesian"),
-      "graph_ppr" -> Set("cartesian"),
-      "text_unigram_lm" -> Set("cartesian"),
-      "text_bigram_lm" -> Set("cartesian"),
-      "dedup_keep_best" -> Set("cartesian"),
-      "pipeline_mix" -> Set("cartesian"))
-    val flagged = Registry.all.filter(_.bench)
-    val offenders = flagged.flatMap { cap =>
-      val findings = graft.plans.Lint.lint(cap.run(spark, TestSpark.sf))
-      val allowed = justified.getOrElse(cap.name, Set.empty)
-      val bad = findings.map(_.rule).toSet -- allowed
-      if (bad.isEmpty) None else Some(s"${cap.name}: $bad")
+  test("lint exempts a cross join against a one-row aggregate") {
+    val li = Tables.lineitem(spark, TestSpark.sf)
+    val total = li.agg(sum(col("l_quantity")).as("total_qty"))
+    val shares = li.select(col("l_orderkey"), col("l_quantity")).crossJoin(total)
+    assert(!rules(shares).contains("cartesian"), Lint.report(shares))
+  }
+
+  test("lint flags a grouped aggregate funnelled into one partition") {
+    // a GROUPED count is unbounded (one row per part), so the exchange a
+    // global rank puts above it is not the scalar-aggregate exemption
+    val counts = Tables.lineitem(spark, TestSpark.sf).groupBy(col("l_partkey")).count()
+    val ranked = counts.withColumn("r", rank().over(Window.orderBy(col("count").desc)))
+    assert(rules(ranked).contains("single-partition-shuffle"), Lint.report(ranked))
+  }
+
+  /** The findings of `names` (built, linted and counted once, in
+    * TestSpark.reviewed) that `justified` does not list, plus any query
+    * that threw. */
+  private def unjustified(names: Seq[String]): Seq[String] = {
+    val byName = TestSpark.reviewed.toMap
+    names.flatMap { name =>
+      byName(name) match {
+        case Left(err) => Seq(s"$name: $err")
+        case Right(findings) => findings.filterNot(f => justified(name -> f.rule))
+          .map(f => s"$name: unjustified [${f.rule}] ${f.detail}")
+      }
     }
+  }
+
+  test("every declared capability runs at sf0.001 with exactly the justified plan findings") {
+    val problems = unjustified(TestSpark.reviewed.map(_._1))
+    val seen = TestSpark.reviewed.collect { case (name, Right(findings)) =>
+      findings.map(f => name -> f.rule)
+    }.flatten.toSet
+    val stale = (justified -- seen).toSeq.sorted
+      .map { case (q, r) => s"$q: justified [$r] no longer occurs" }
+    assert(problems.isEmpty && stale.isEmpty, (problems ++ stale).mkString("\n"))
+  }
+
+  // The per-round views below check the query sets each round added
+  // against the same inventory, so a regression names its round.
+
+  test("flagship queries carry no UNJUSTIFIED plan findings") {
+    val offenders = unjustified(Registry.all.filter(_.bench).map(_.name))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("late round-9 additions carry no UNJUSTIFIED plan findings") {
-    // not bench-flagged (yet), so the flagship sweep misses them; the
-    // graph twins are localCheckpoint-truncated (their live per-round
-    // plans are dumped by graft.Plans instead — the pageRank precedent)
-    val justified: Map[String, Set[String]] = Map(
-      // DSIR: the 64-row ratio/total frames ride tiny broadcasts
-      "pipeline_dsir" -> Set("cartesian"),
-      // RRF: the dense ranker is the declared brute baseline (broadcast
-      // query side, theta self-join) — the fusion itself adds nothing
-      "hybrid_rrf" -> Set("cartesian"),
-      // 1-row totals (PMI's n/nb, assortativity's moments) broadcast
-      "text_pmi" -> Set("cartesian"),
-      "text_jm_lm" -> Set("cartesian"),
-      "pipeline_e2e_v3" -> Set("cartesian"),
-      // the gate fixture slices the update waves with doc_id % k
-      // predicates — parquet-inexpressible by design, the
-      // dedup_incremental precedent
-      "pipeline_scd2" -> Set("unpushed-filter"),
-      // 5-audience pair frame: the theta self-join is a broadcast NLJ
-      // over a #segments-sized frame of sketch artifacts by design
-      "q48_sketch_overlap" -> Set("cartesian"))
-    val offenders = Seq("pipeline_dsir", "hybrid_rrf", "graph_kcore",
+    // the graph twins are localCheckpoint-truncated; PlanSpec pins their
+    // live per-round plans
+    val offenders = unjustified(Seq("pipeline_dsir", "hybrid_rrf", "graph_kcore",
       "q45_ewma", "q46_anomaly", "text_pmi", "text_jm_lm",
       "graph_clustering", "graph_assortativity", "pipeline_e2e_v3",
       "q47b_grouped_weighted_quantiles", "pipeline_scd2",
       "q48_sketch_overlap", "events_funnel_latency",
-      "q49_interarrival").flatMap { name =>
-      val cap = Registry.byName(name)
-      val findings = graft.plans.Lint.lint(cap.run(spark, TestSpark.sf))
-      val bad = findings.map(_.rule).toSet -- justified.getOrElse(name, Set.empty)
-      if (bad.isEmpty) None else Some(s"$name: $bad")
-    }
+      "q49_interarrival"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("round-11 additions carry no UNJUSTIFIED plan findings") {
-    val justified: Map[String, Set[String]] = Map(
-      // BH machinery runs on the C(groups,2)-row pair frame: the rank
-      // window (and its one-partition exchange) is unpartitioned over
-      // ≤ dozens of rows by construction (the KM/Mann-Whitney
-      // small-frame convention) and the cutoff / pair-count frames
-      // ride 1-row broadcasts
-      "q66_fdr" -> Set("cartesian", "global-window",
-        "single-partition-shuffle"),
-      // md5-lottery thinning / computed-column guards are
-      // parquet-inexpressible by design (the md5-prefix-bucket
-      // precedent): theilSen's sample filter and winnow's
-      // nonempty-hash-array guard evaluate post-scan
-      "q67_theil_sen" -> Set("unpushed-filter"),
-      "dedup_winnow" -> Set("unpushed-filter"),
-      // the zipf rank window runs over the vocabulary-sized count
-      // frame, never the corpus (the KM/Mann-Whitney distinct-value
-      // convention)
-      "text_zipf" -> Set("global-window", "single-partition-shuffle"),
-      // exact RFM quintiles NEED global ranks; they run over the
-      // one-row-per-customer rollup, orders of magnitude below the
-      // fact table, and the documented 100 TB path swaps them for
-      // Quantiles.exact cutoff literals (q27a); the n total is a 1-row
-      // broadcast (the text_pmi convention), as is benford's
-      "orders_rfm" -> Set("global-window", "single-partition-shuffle",
-        "cartesian"),
-      "profile_benford" -> Set("cartesian"),
-      // q72 shares q67's md5-lottery thinning — parquet-inexpressible
-      "q72_mann_kendall" -> Set("unpushed-filter"),
-      // NB chain: broadcast label fan-out + 1-row totals (the
-      // nb_classify shapes); the doc_id % 2 train/test split is
-      // parquet-inexpressible (dedup_incremental precedent); AUC's rank
-      // cumsum runs over the distinct-SCORE frame (MW convention)
-      "pipeline_nb_auc" -> Set("cartesian", "unpushed-filter",
-        "global-window", "single-partition-shuffle"),
-      "pipeline_nb_kappa" -> Set("cartesian", "unpushed-filter"),
-      // the chi-squared dense grid is a broadcast NLJ over the two
-      // marginal frames by design (q57's documented shape)
-      "q73_cramers_v" -> Set("cartesian"),
-      // the q55-welch convention: group-pair theta joins over
-      // broadcast moment frames (#groups / #variants rows)
-      "q76_two_proportion" -> Set("cartesian"),
-      "q77_cohens_d" -> Set("cartesian"))
-    val offenders = Seq("dedup_fuzzy_jw", "pipeline_split_stratified",
+    val offenders = unjustified(Seq("dedup_fuzzy_jw", "pipeline_split_stratified",
       "q66_fdr", "graph_scc", "dedup_containment",
       "q67_theil_sen", "dedup_winnow", "q26q_ipc_fsl",
       "dedup_fuzzy_dl", "q68_ridge", "q69_hampel",
@@ -174,153 +207,35 @@ class LintSpec extends AnyFunSuite {
       "pipeline_nb_auc", "pipeline_nb_kappa", "q73_cramers_v",
       "q74_ccf", "q75_dispersion", "text_source_overlap",
       "q76_two_proportion", "q77_cohens_d",
-      "pipeline_k_anonymity", "text_simpson")
-      .flatMap { name =>
-      val cap = Registry.byName(name)
-      val findings = graft.plans.Lint.lint(cap.run(spark, TestSpark.sf))
-      val bad = findings.map(_.rule).toSet -- justified.getOrElse(name, Set.empty)
-      if (bad.isEmpty) None else Some(s"$name: $bad")
-    }
+      "pipeline_k_anonymity", "text_simpson"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("round-12 additions carry no UNJUSTIFIED plan findings") {
-    val justified: Map[String, Set[String]] = Map(
-      // same parquet-inexpressible guards as the exact winnow (md5
-      // fingerprint selection + nonempty-hash-array filter)
-      "dedup_winnow_capped" -> Set("unpushed-filter"),
-      // budget lottery: the keep threshold is a computed column over
-      // the broadcast per-group count — post-scan by design
-      "q67_theil_sen" -> Set("unpushed-filter"),
-      "q72_mann_kendall" -> Set("unpushed-filter"),
-      // the composed release chain inherits its stages' justified
-      // findings: winnow/decontam md5 + computed-column guards are
-      // parquet-inexpressible; the stratified-split windows partition
-      // by lang (never global) and any 1-row totals broadcast
-      "pipeline_e2e_v4" -> Set("unpushed-filter"))
-    val offenders = Seq("dedup_winnow_capped", "q26r_csv_multiline",
-      "q67_theil_sen", "q72_mann_kendall", "pipeline_e2e_v4").flatMap { name =>
-      val cap = Registry.byName(name)
-      val findings = graft.plans.Lint.lint(cap.run(spark, TestSpark.sf))
-      val bad = findings.map(_.rule).toSet -- justified.getOrElse(name, Set.empty)
-      if (bad.isEmpty) None else Some(s"$name: $bad")
-    }
+    val offenders = unjustified(Seq("dedup_winnow_capped", "q26r_csv_multiline",
+      "q67_theil_sen", "q72_mann_kendall", "pipeline_e2e_v4"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("round-12 stats battery carries no UNJUSTIFIED plan findings") {
-    val justified: Map[String, Set[String]] = Map(
-      // KW midranks run over the distinct-VALUE frame (the
-      // Mann-Whitney/KM bounded-frame convention: the 2-decimal event
-      // measure bounds it at any corpus size); the per-group/total/tie
-      // frames are 1-row-to-#groups broadcasts
-      "q78_kruskal_wallis" -> Set("global-window",
-        "single-partition-shuffle", "cartesian"),
-      // #groups-row medians/moments/totals ride broadcasts (q55 shape)
-      "q79_brown_forsythe" -> Set("cartesian"),
-      // marginal-cardinality and total frames are 1-row broadcasts
-      "q80_gtest" -> Set("cartesian"),
-      // the 1-row OLS model broadcast (the q63 composition shape)
-      "q81_durbin_watson" -> Set("cartesian"),
-      // shares q67/q72's md5-lottery thinning — parquet-inexpressible
-      "q82_kendall_tau" -> Set("unpushed-filter"),
-      // the Expand IS the operator here: GROUPING SETS deliberately
-      // multiplies rows once (3 sets) to buy one scan + one shuffle
-      // where three UNION'd aggregates would pay three — not the
-      // accidental multi-distinct shape the rule hunts
-      "q28c_grouping_sets" -> Set("expand-distinct"),
-      // 1-row m/parts totals ride broadcasts (the text_pmi convention)
-      "graph_modularity" -> Set("cartesian"),
-      // the HL pair frame is a deliberate cross of two budget-bounded
-      // (~400-row) lottery samples; the md5 lottery is
-      // parquet-inexpressible; the median cumsum runs over the
-      // distinct-DIFFERENCE frame (MW convention)
-      "q84_hodges_lehmann" -> Set("cartesian", "unpushed-filter",
-        "global-window", "single-partition-shuffle"),
-      // #groups-row term frames and 1-row sums ride broadcasts
-      "q85_welch_anova" -> Set("cartesian"),
-      // risk sets cumulate over the distinct-DURATION frame (the
-      // KM/MW convention); subject totals ride a 1-row broadcast; the
-      // operator's g IN {0,1} domain guard folds to a user_id % 2
-      // predicate at the scan — parquet-inexpressible by design (the
-      // dedup_incremental precedent)
-      "q88_logrank" -> Set("cartesian", "global-window",
-        "single-partition-shuffle", "unpushed-filter"),
-      // k-count / term / tie frames ride 1-row-to-#conditions
-      // broadcasts; ranks partition per block (never global)
-      "q89_friedman" -> Set("cartesian"),
-      // the md5 lottery is parquet-inexpressible (q67 precedent)
-      "q90_qn_scale" -> Set("unpushed-filter"),
-      // hazard steps cumulate over the distinct-duration frame (the
-      // KM convention); the subject total rides a 1-row broadcast
-      "q91_nelson_aalen" -> Set("cartesian", "global-window",
-        "single-partition-shuffle"),
-      // the true-count frame rides a 1-row broadcast next to the
-      // estimate (the gate exposes accuracy, not just determinism)
-      "q93_chapman" -> Set("cartesian"),
-      // the 1-row variant sides cross as broadcasts (q76 shape); the
-      // v = 0/1 side filters fold to user_id % 2 scan predicates —
-      // parquet-inexpressible (the q88 precedent)
-      "q94_poisson_rate" -> Set("cartesian", "unpushed-filter"))
-      // (q86 medians broadcast-join; q87 is two aggregates — both clean)
-    val offenders = Seq("q78_kruskal_wallis", "q79_brown_forsythe",
+    val offenders = unjustified(Seq("q78_kruskal_wallis", "q79_brown_forsythe",
       "q80_gtest", "q81_durbin_watson", "q82_kendall_tau",
       "graph_link_predict", "q28c_grouping_sets", "q83_pacf",
       "graph_modularity", "q84_hodges_lehmann",
       "q85_welch_anova", "q86_runs_test", "q87_mcnemar",
       "q88_logrank", "q89_friedman", "q90_qn_scale",
       "q91_nelson_aalen", "q92_wilson_ci", "q93_chapman",
-      "q94_poisson_rate").flatMap { name =>
-      val cap = Registry.byName(name)
-      val findings = graft.plans.Lint.lint(cap.run(spark, TestSpark.sf))
-      val bad = findings.map(_.rule).toSet -- justified.getOrElse(name, Set.empty)
-      if (bad.isEmpty) None else Some(s"$name: $bad")
-    }
+      "q94_poisson_rate"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("round-13 drift/causal additions carry no UNJUSTIFIED plan findings") {
-    val justified: Map[String, Set[String]] = Map(
-      // the global time midpoint is a 1-row broadcast (the psiSided
-      // shape q101/q102 already justify)
-      "q104_wasserstein" -> Set("cartesian"),
-      "q104b_wasserstein_fixed" -> Set("cartesian"),
-      "q104c_wasserstein_windowed" -> Set("cartesian"),
-      "q101c_psi_windowed" -> Set("cartesian"),
-      // the (kr, kc, nt) dims frame is a 1-row broadcast the IPF cell
-      // frame rides; the cell frame itself is marginal-bounded
-      "pipeline_raking" -> Set("cartesian"),
-      // shares q67/q72's md5-lottery thinning — parquet-inexpressible
-      "q72b_seasonal_mk" -> Set("unpushed-filter"),
-      // the CDF cumsum runs over the distinct-VALUE frame (the q56/q58
-      // MW convention); the n1/n2 total is a 1-row broadcast
-      "q58b_cvm" -> Set("global-window", "single-partition-shuffle",
-        "cartesian"),
-      // the dims + max-weight 1-row frames ride broadcasts over the
-      // corpus filter (the weightedSample narrow-lottery shape)
-      "pipeline_raking_apply" -> Set("cartesian"),
-      // the three 1-row total frames cross as broadcasts (q55 shape)
-      "q107_cochran_q" -> Set("cartesian"),
-      // 2J cumulates over the distinct-VALUE frame (the q56/q58 MW
-      // convention); the dose/tie totals ride 1-row broadcasts
-      "q108_jonckheere" -> Set("global-window",
-        "single-partition-shuffle", "cartesian"),
-      "q110_page_trend" -> Set("global-window",
-        "single-partition-shuffle", "cartesian"))
-      // (q109_partial_corr is one scalar aggregate — clean)
-      // q110: the k-row condition-index window + the Friedman frame's
-      // complete-block broadcast (the q89 shapes)
-    val offenders = Seq("q104_wasserstein", "q104b_wasserstein_fixed",
+    val offenders = unjustified(Seq("q104_wasserstein", "q104b_wasserstein_fixed",
       "q104c_wasserstein_windowed", "q101c_psi_windowed",
       "pipeline_raking", "q105_adf", "q105b_adf_hourly",
       "q106_granger", "q72b_seasonal_mk", "q58b_cvm",
       "pipeline_raking_apply", "q107_cochran_q",
-      "q108_jonckheere", "q109_partial_corr", "q110_page_trend").flatMap { name =>
-      val cap = Registry.byName(name)
-      val findings = graft.plans.Lint.lint(cap.run(spark, TestSpark.sf))
-      val bad = findings.map(_.rule).toSet -- justified.getOrElse(name, Set.empty)
-      if (bad.isEmpty) None else Some(s"$name: $bad")
-    }
+      "q108_jonckheere", "q109_partial_corr", "q110_page_trend"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
@@ -329,8 +244,5 @@ class LintSpec extends AnyFunSuite {
     val good = li.filter(col("l_quantity") > 10)
       .groupBy(col("l_returnflag")).agg(sum(col("l_quantity")).as("q"))
     assert(Lint.lint(good).isEmpty, Lint.report(good))
-    // the house queries should be lint-clean too
-    val q03 = Registry.byName("q03_group_agg").run(spark, TestSpark.sf)
-    assert(Lint.lint(q03).isEmpty, Lint.report(q03))
   }
 }

@@ -28,10 +28,12 @@ object GraftSession {
     // (default 1 MB) — on compact columnar rows (hashed shingles, id
     // pairs) 1 MB is ~100 K rows, so a CPU-heavy stage fed by a small-
     // byte exchange (rank windows over inverted indexes, pair verifies)
-    // collapses onto ONE core. 64 KB keeps those stages at the session's
-    // parallelism; at cluster scale big shuffles are unaffected (their
-    // partitions sit near advisoryPartitionSizeInBytes) and the floor
-    // only admits more small tasks where the alternative was idle cores.
+    // collapses onto ONE core. 256 KB keeps those stages at the session's
+    // parallelism (a 64 KB floor over-fragmented CPU-light small
+    // exchanges and was rolled back); at cluster scale big shuffles are
+    // unaffected (their partitions sit near advisoryPartitionSizeInBytes)
+    // and the floor only admits more small tasks where the alternative
+    // was idle cores.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",

@@ -2,21 +2,26 @@ package graft.sources
 
 import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
-import java.nio.channels.{Channels, SeekableByteChannel}
+import java.nio.channels.{Channels, SeekableByteChannel, WritableByteChannel}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.arrow.compression.CommonsCompressionFactory
 import org.apache.arrow.memory.{ArrowBuf, RootAllocator}
-import org.apache.arrow.vector.{BigIntVector, FieldVector, IntVector, SmallIntVector, TypeLayout, VarBinaryVector, VarCharVector, VectorLoader, VectorSchemaRoot, VectorUnloader, ViewVarBinaryVector, ViewVarCharVector}
-import org.apache.arrow.vector.complex.{LargeListViewVector, ListVector, ListViewVector, RunEndEncodedVector}
-import org.apache.arrow.vector.dictionary.DictionaryEncoder
-import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter, ArrowReader, ArrowStreamReader, ArrowStreamWriter, ArrowWriter, SeekableReadChannel, WriteChannel}
-import org.apache.arrow.vector.ipc.message.{ArrowFieldNode, ArrowRecordBatch, MessageSerializer}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
+import org.apache.arrow.vector.{BigIntVector, FieldVector, IntVector, SmallIntVector, TypeLayout, VarCharVector, VariableWidthFieldVector, VectorLoader, VectorSchemaRoot, VectorUnloader}
+import org.apache.arrow.vector.complex.{FixedSizeListVector, LargeListViewVector, ListVector, ListViewVector, RunEndEncodedVector}
+import org.apache.arrow.vector.compression.CompressionUtil.CodecType
+import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryEncoder, DictionaryProvider}
+import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter, ArrowReader, ArrowStreamReader, ArrowStreamWriter, ArrowWriter, ReadChannel, SeekableReadChannel, WriteChannel}
+import org.apache.arrow.vector.ipc.message.{ArrowFieldNode, ArrowRecordBatch, IpcOption, MessageSerializer}
+import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType, Schema => ArrowSchema}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType, StructType}
 
 /** Hadoop `Configuration` is not Java-serializable; standard writable
   * wrapper so executor tasks see the driver's filesystem configuration. */
@@ -49,6 +54,20 @@ final class SerializableHadoopConf(@transient var value: Configuration) extends 
   * IO goes through the Hadoop FileSystem API, so any configured scheme
   * (file://, hdfs://, s3a://) works, and discovery is an FS glob, not a
   * driver-local directory listing.
+  *
+  * Layouts (SURVEY §1.2): dictionary, run-end, view (string/binary/list
+  * views) and fixed-size-list columns are PHYSICAL layout variants of one
+  * logical type, and so are the 64-bit-offset LARGE_* types. Spark's
+  * Arrow bridge speaks only the plain value layouts, so each variant is
+  * converted at the boundary, batch by batch, top-level columns only:
+  * the writers encode flat value vectors into the declared layout
+  * ([[Layout.encode]]) and the readers decode every layout back to its
+  * value type ([[Layout.decode]]) — memory is one batch, never the file.
+  * The large-offset types are the exception: they differ from their
+  * 32-bit twins only in the offsets buffer, so the read path narrows that
+  * buffer in place ([[narrowBatch]]) and never touches values. Layouts
+  * nested below the top level are read only for the large types; nested
+  * views are rejected loudly.
   */
 object ArrowIpc {
 
@@ -76,15 +95,28 @@ object ArrowIpc {
     * cpp/src/arrow/ipc/options.h:118-124): "none", "zstd" or "lz4"
     * (LZ4_FRAME — the only LZ4 framing the IPC spec admits). Readers
     * decode transparently from the per-batch compression header. */
-  private def codecOf(codec: String)
-      : Option[org.apache.arrow.vector.compression.CompressionUtil.CodecType] =
+  private def codecOf(codec: String): Option[CodecType] =
     codec match {
       case "none" => None
-      case "zstd" => Some(org.apache.arrow.vector.compression.CompressionUtil.CodecType.ZSTD)
-      case "lz4"  => Some(org.apache.arrow.vector.compression.CompressionUtil.CodecType.LZ4_FRAME)
+      case "zstd" => Some(CodecType.ZSTD)
+      case "lz4"  => Some(CodecType.LZ4_FRAME)
       case other  => throw new IllegalArgumentException(
         s"unknown IPC codec '$other' (none|zstd|lz4)")
     }
+
+  private type MkWriter = (VectorSchemaRoot, DictionaryProvider, WritableByteChannel) => ArrowWriter
+
+  private def fileWriter(ct: Option[CodecType]): MkWriter = (root, dicts, ch) => ct match {
+    case None => new ArrowFileWriter(root, dicts, ch)
+    case Some(c) => new ArrowFileWriter(root, dicts, ch,
+      null, IpcOption.DEFAULT, CommonsCompressionFactory.INSTANCE, c)
+  }
+
+  private def streamWriter(ct: Option[CodecType]): MkWriter = (root, dicts, ch) => ct match {
+    case None => new ArrowStreamWriter(root, dicts, ch)
+    case Some(c) => new ArrowStreamWriter(root, dicts, ch,
+      IpcOption.DEFAULT, CommonsCompressionFactory.INSTANCE, c)
+  }
 
   /** Write `df` as a directory of Arrow IPC files, one per partition.
     * Per partition: Spark's columnar serializer produces framed record
@@ -92,74 +124,21 @@ object ArrowIpc {
     * buffer transfers end to end (compressed at the writer when a codec
     * is set). */
   def write(df: DataFrame, dir: String, batchSize: Int = 4096,
-      codec: String = "none"): Unit = {
-    val ct = codecOf(codec)
-    writeWith(df, dir, batchSize, "arrow",
-      (root, ch) => ct match {
-        case None => new ArrowFileWriter(root, null, ch)
-        case Some(c) => new ArrowFileWriter(root, null, ch,
-          null, org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT,
-          org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE, c)
-      })
-  }
+      codec: String = "none"): Unit =
+    writeWith(df, dir, batchSize, "arrow", fileWriter(codecOf(codec)))
 
   /** Write `df` in the IPC STREAM format (`.arrows`), one stream per
     * partition — byte-for-byte what a socket peer would send. */
   def writeStream(df: DataFrame, dir: String, batchSize: Int = 4096,
-      codec: String = "none"): Unit = {
-    val ct = codecOf(codec)
-    writeWith(df, dir, batchSize, "arrows",
-      (root, ch) => ct match {
-        case None => new ArrowStreamWriter(root, null, ch)
-        case Some(c) => new ArrowStreamWriter(root, null, ch,
-          org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT,
-          org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE, c)
-      })
-  }
-
-  private def writeWith(
-      df: DataFrame, dir: String, batchSize: Int, ext: String,
-      mkWriter: (VectorSchemaRoot, java.nio.channels.WritableByteChannel) => ArrowWriter): Unit = {
-    val schema = df.schema
-    val hconf = new SerializableHadoopConf(df.sparkSession.sparkContext.hadoopConfiguration)
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(hconf.value)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true) // overwrite semantics
-    fs.mkdirs(dirPath)
-    Bridge.toInternalRdd(df).foreachPartition { rows =>
-      if (rows.nonEmpty) {
-        val part = TaskContext.getPartitionId()
-        val path = new Path(dir, f"part-$part%05d.$ext")
-        val pfs = path.getFileSystem(hconf.value)
-        val allocator = new RootAllocator(Long.MaxValue)
-        val root = VectorSchemaRoot.create(Bridge.toArrowSchema(schema), allocator)
-        val loader = new VectorLoader(root)
-        val out = pfs.create(path, true)
-        val writer = mkWriter(root, Channels.newChannel(out))
-        try {
-          writer.start()
-          Bridge.toArrowBatchIterator(rows, schema, batchSize, TaskContext.get()).foreach { bytes =>
-            // framed record-batch payload → ArrowRecordBatch (buffer move)
-            val batch = MessageSerializer.deserializeRecordBatch(
-              new org.apache.arrow.vector.ipc.ReadChannel(
-                Channels.newChannel(new java.io.ByteArrayInputStream(bytes))), allocator)
-            try loader.load(batch) finally batch.close()
-            writer.writeBatch()
-          }
-          writer.end()
-        } finally {
-          writer.close(); out.close(); root.close(); allocator.close()
-        }
-      }
-    }
-  }
+      codec: String = "none"): Unit =
+    writeWith(df, dir, batchSize, "arrows", streamWriter(codecOf(codec)))
 
   /** Write `df` with the named string columns DICTIONARY-ENCODED — the
-    * write half of the reference's categorical transport (the read path
-    * already decodes dictionary batches; `dictionary_encode` is the
-    * reference default for categorical columns, so a file we hand to an
-    * Arrow consumer should offer the same layout). Each encoded column
-    * ships as an int32 index vector plus one dictionary batch per file.
+    * write half of the reference's categorical transport
+    * (`dictionary_encode` is the reference default for categorical
+    * columns, so a file we hand to an Arrow consumer should offer the
+    * same layout). Each encoded column ships as an int32 index vector
+    * plus one dictionary batch per file.
     *
     * The dictionary is GLOBAL and computed by one distributed
     * distinct-aggregate whose result lands on the driver — a bounded
@@ -177,554 +156,447 @@ object ArrowIpc {
     * value; nothing else changes vs [[write]]. */
   def writeDict(df: DataFrame, dir: String, dictCols: Seq[String],
       batchSize: Int = 4096, maxDictSize: Int = 1 << 16): Unit = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.arrow.vector.VarCharVector
-    import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
-    import org.apache.arrow.vector.types.pojo.DictionaryEncoding
-    import org.apache.spark.sql.functions.col
     require(dictCols.nonEmpty, "writeDict needs at least one dictionary column")
-    val schema = df.schema
-    dictCols.foreach { c =>
-      require(schema(c).dataType == org.apache.spark.sql.types.StringType,
-        s"dictionary column '$c' must be string, got ${schema(c).dataType}")
-    }
+    requireColumns(df, dictCols, "dictionary", "string")(_ == StringType)
     // one bounded driver exchange per declared categorical column
-    val dictValues: Map[String, Array[String]] = dictCols.map { c =>
+    val dictionaries = dictCols.zipWithIndex.map { case (c, i) =>
       val vals = df.select(col(c)).filter(col(c).isNotNull).distinct()
         .orderBy(col(c)).limit(maxDictSize + 1).collect().map(_.getString(0))
       require(vals.length <= maxDictSize,
         s"column '$c' exceeds maxDictSize=$maxDictSize distinct values — " +
           "not a categorical column; write it unencoded")
-      c -> vals
-    }.toMap
-    val dictIds: Map[String, Long] = dictCols.zipWithIndex
-      .map { case (c, i) => c -> i.toLong }.toMap
-
-    val hconf = new SerializableHadoopConf(df.sparkSession.sparkContext.hadoopConfiguration)
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(hconf.value)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true)
-    fs.mkdirs(dirPath)
-    Bridge.toInternalRdd(df).foreachPartition { rows =>
-      if (rows.nonEmpty) {
-        val part = TaskContext.getPartitionId()
-        val path = new Path(dir, f"part-$part%05d.arrow")
-        val pfs = path.getFileSystem(hconf.value)
-        val allocator = new RootAllocator(Long.MaxValue)
-        // task-local dictionary vectors from the broadcast value arrays
-        val provider = new DictionaryProvider.MapDictionaryProvider()
-        val dicts: Map[String, Dictionary] = dictValues.map { case (c, vals) =>
-          val vec = new VarCharVector(s"$c-dict", allocator)
-          vec.allocateNew(vals.length)
-          vals.zipWithIndex.foreach { case (v, i) =>
-            vec.setSafe(i, v.getBytes("UTF-8"))
-          }
-          vec.setValueCount(vals.length)
-          val enc = new DictionaryEncoding(dictIds(c), /*ordered=*/ false,
-            new ArrowType.Int(32, true))
-          c -> new Dictionary(vec, enc)
-        }
-        dicts.values.foreach(provider.put)
-        val valueSchema = Bridge.toArrowSchema(schema)
-        val valueRoot = VectorSchemaRoot.create(valueSchema, allocator)
-        val loader = new VectorLoader(valueRoot)
-        val outFields = valueSchema.getFields.asScala.map { f =>
-          if (dicts.contains(f.getName))
-            new Field(f.getName,
-              new FieldType(f.isNullable, new ArrowType.Int(32, true),
-                dicts(f.getName).getEncoding, f.getMetadata),
-              java.util.Collections.emptyList[Field]())
-          else f
-        }.toSeq
-        val outRoot = VectorSchemaRoot.create(
-          new ArrowSchema(outFields.asJava), allocator)
-        val out = pfs.create(path, true)
-        val writer = new ArrowFileWriter(outRoot, provider, Channels.newChannel(out))
-        try {
-          writer.start()
-          Bridge.toArrowBatchIterator(rows, schema, batchSize, TaskContext.get()).foreach { bytes =>
-            val batch = MessageSerializer.deserializeRecordBatch(
-              new org.apache.arrow.vector.ipc.ReadChannel(
-                Channels.newChannel(new java.io.ByteArrayInputStream(bytes))), allocator)
-            try loader.load(batch) finally batch.close()
-            val n = valueRoot.getRowCount
-            schema.fieldNames.zipWithIndex.foreach { case (name, i) =>
-              val src = valueRoot.getVector(i)
-              val dst = outRoot.getVector(i)
-              if (dicts.contains(name)) {
-                // hash-lookup encode against the fixed global dictionary
-                val encoded = DictionaryEncoder.encode(src, dicts(name))
-                try encoded.makeTransferPair(dst).transfer()
-                finally encoded.close()
-              } else src.makeTransferPair(dst).transfer()
-            }
-            outRoot.setRowCount(n)
-            writer.writeBatch()
-          }
-          writer.end()
-        } finally {
-          writer.close(); out.close()
-          outRoot.close(); valueRoot.close()
-          dicts.values.foreach(_.getVector.close())
-          allocator.close()
-        }
-      }
+      i.toLong -> vals
     }
+    writeWith(df, dir, batchSize, "arrow", fileWriter(None),
+      dictCols.zipWithIndex.map { case (c, i) => c -> Dict(i.toLong) }.toMap,
+      dictionaries.toMap)
   }
 
   /** Run-end-encoded IPC WRITE — the transport half of the reference's
-    * `run_end_encode` kernel (ArrowType::RUN_END_ENCODED, type id 38;
-    * read support in [[decodeRee]]): each declared string column is
-    * written as (run_ends int32, values utf8) children instead of a flat
-    * vector, batch by batch. The win is proportional to run length, so
-    * sort-within-partitions by the encoded column first (the caller's
-    * job, mirroring how the reference applies the kernel to sorted
-    * output); a column with no repetition degrades to nnz runs, never
-    * breaks. Pure per-batch task-local work — no exchange, no driver
-    * state; nulls ride the values child (the REE layout has no top-level
-    * validity). */
+    * `run_end_encode` kernel (ArrowType::RUN_END_ENCODED, type id 38):
+    * each declared string column is written as (run_ends int32, values
+    * utf8) children instead of a flat vector. The win is proportional to
+    * run length, so sort-within-partitions by the encoded column first
+    * (the caller's job, mirroring how the reference applies the kernel to
+    * sorted output); a column with no repetition degrades to nnz runs,
+    * never breaks. Nulls ride the values child (the REE layout has no
+    * top-level validity). */
   def writeRee(df: DataFrame, dir: String, reeCols: Seq[String],
       batchSize: Int = 4096): Unit = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.arrow.vector.VarCharVector
     require(reeCols.nonEmpty, "writeRee needs at least one run-end column")
-    val schema = df.schema
-    reeCols.foreach { c =>
-      require(schema(c).dataType == org.apache.spark.sql.types.StringType,
-        s"run-end column '$c' must be string, got ${schema(c).dataType}")
-    }
-    val reeSet = reeCols.toSet
-    val hconf = new SerializableHadoopConf(df.sparkSession.sparkContext.hadoopConfiguration)
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(hconf.value)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true)
-    fs.mkdirs(dirPath)
-    Bridge.toInternalRdd(df).foreachPartition { rows =>
-      if (rows.nonEmpty) {
-        val part = TaskContext.getPartitionId()
-        val path = new Path(dir, f"part-$part%05d.arrow")
-        val pfs = path.getFileSystem(hconf.value)
-        val allocator = new RootAllocator(Long.MaxValue)
-        val valueSchema = Bridge.toArrowSchema(schema)
-        val valueRoot = VectorSchemaRoot.create(valueSchema, allocator)
-        val loader = new VectorLoader(valueRoot)
-        val outVectors: Seq[FieldVector] = valueSchema.getFields.asScala.toSeq.map { f =>
-          if (reeSet(f.getName)) {
-            val reField = new Field("run_ends",
-              FieldType.notNullable(new ArrowType.Int(32, true)), null)
-            val valField = new Field("values",
-              FieldType.nullable(ArrowType.Utf8.INSTANCE), null)
-            val reeField = new Field(f.getName,
-              FieldType.notNullable(ArrowType.RunEndEncoded.INSTANCE),
-              Seq(reField, valField).asJava)
-            new RunEndEncodedVector(reeField, allocator,
-              new IntVector(reField, allocator),
-              new VarCharVector(valField, allocator), null)
-          } else f.createVector(allocator)
-        }
-        val outRoot = new VectorSchemaRoot(outVectors.asJava)
-        val out = pfs.create(path, true)
-        val writer = new ArrowFileWriter(outRoot, null, Channels.newChannel(out))
-        try {
-          writer.start()
-          Bridge.toArrowBatchIterator(rows, schema, batchSize, TaskContext.get()).foreach { bytes =>
-            val batch = MessageSerializer.deserializeRecordBatch(
-              new org.apache.arrow.vector.ipc.ReadChannel(
-                Channels.newChannel(new java.io.ByteArrayInputStream(bytes))), allocator)
-            try loader.load(batch) finally batch.close()
-            val n = valueRoot.getRowCount
-            schema.fieldNames.zipWithIndex.foreach { case (name, i) =>
-              val src = valueRoot.getVector(i)
-              outVectors(i) match {
-                case ree: RunEndEncodedVector =>
-                  // scan the flat column into (run_end, value) pairs
-                  val sv = src.asInstanceOf[VarCharVector]
-                  val ends = Array.newBuilder[Int]
-                  val vals = Array.newBuilder[Option[Array[Byte]]]
-                  var runVal: Option[Array[Byte]] = None
-                  var started = false
-                  var r = 0
-                  while (r < n) {
-                    val cur = if (sv.isNull(r)) None else Some(sv.get(r))
-                    val same = started && ((cur, runVal) match {
-                      case (None, None)       => true
-                      case (Some(a), Some(b)) => java.util.Arrays.equals(a, b)
-                      case _                  => false
-                    })
-                    if (!same) {
-                      if (started) { ends += r; vals += runVal }
-                      runVal = cur; started = true
-                    }
-                    r += 1
-                  }
-                  if (started) { ends += n; vals += runVal }
-                  val endArr = ends.result(); val valArr = vals.result()
-                  val reV = ree.getRunEndsVector.asInstanceOf[IntVector]
-                  val vaV = ree.getValuesVector.asInstanceOf[VarCharVector]
-                  reV.allocateNew(endArr.length)
-                  endArr.zipWithIndex.foreach { case (e, j) => reV.setSafe(j, e) }
-                  reV.setValueCount(endArr.length)
-                  vaV.allocateNew()
-                  valArr.zipWithIndex.foreach {
-                    case (Some(b), j) => vaV.setSafe(j, b)
-                    case (None, j)    => vaV.setNull(j)
-                  }
-                  vaV.setValueCount(valArr.length)
-                  ree.setValueCount(n)
-                case dst =>
-                  src.makeTransferPair(dst).transfer()
-              }
-            }
-            outRoot.setRowCount(n)
-            writer.writeBatch()
-          }
-          writer.end()
-        } finally {
-          writer.close(); out.close()
-          outRoot.close(); valueRoot.close()
-          allocator.close()
-        }
-      }
-    }
+    requireColumns(df, reeCols, "run-end", "string")(_ == StringType)
+    writeWith(df, dir, batchSize, "arrow", fileWriter(None),
+      reeCols.map(_ -> RunEnd).toMap)
   }
 
-  /** View-layout IPC WRITE — the write half of [[decodeView]]: each
-    * declared string column ships in the STRING_VIEW layout (type id 39,
-    * reference cpp/src/arrow/type_fwd.h:458-467 — the default string
-    * layout for Arrow C++ >= 14 consumers): a 16-byte (length, prefix,
-    * buffer_id, offset) view struct per element, short strings inlined,
-    * long ones referenced in variadic data buffers. Pure per-batch
-    * task-local work exactly like [[writeRee]] — no exchange, no driver
-    * state; values are copied once into the view vector per batch. */
+  /** View-layout IPC WRITE: each declared string/binary column ships in
+    * the STRING_VIEW/BINARY_VIEW layout (type ids 39/40, reference
+    * cpp/src/arrow/type_fwd.h:458-467 — the default string layout for
+    * Arrow C++ >= 14 consumers): a 16-byte (length, prefix, buffer_id,
+    * offset) view struct per element, short strings inlined, long ones
+    * referenced in variadic data buffers. Values are copied once into the
+    * view vector per batch. */
   def writeViews(df: DataFrame, dir: String, viewCols: Seq[String],
       batchSize: Int = 4096): Unit = {
-    import scala.jdk.CollectionConverters._
     require(viewCols.nonEmpty, "writeViews needs at least one view column")
-    val schema = df.schema
-    viewCols.foreach { c =>
-      val dt = schema(c).dataType
-      require(dt == org.apache.spark.sql.types.StringType ||
-          dt == org.apache.spark.sql.types.BinaryType,
-        s"view column '$c' must be string or binary, got $dt")
-    }
-    val viewSet = viewCols.toSet
-    val hconf = new SerializableHadoopConf(df.sparkSession.sparkContext.hadoopConfiguration)
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(hconf.value)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true)
-    fs.mkdirs(dirPath)
-    Bridge.toInternalRdd(df).foreachPartition { rows =>
-      if (rows.nonEmpty) {
-        val part = TaskContext.getPartitionId()
-        val path = new Path(dir, f"part-$part%05d.arrow")
-        val pfs = path.getFileSystem(hconf.value)
-        val allocator = new RootAllocator(Long.MaxValue)
-        val valueSchema = Bridge.toArrowSchema(schema)
-        val valueRoot = VectorSchemaRoot.create(valueSchema, allocator)
-        val loader = new VectorLoader(valueRoot)
-        val outVectors: Seq[FieldVector] = valueSchema.getFields.asScala.toSeq.map { f =>
-          if (viewSet(f.getName)) {
-            val isBinary = schema(f.getName).dataType ==
-              org.apache.spark.sql.types.BinaryType
-            if (isBinary)
-              new ViewVarBinaryVector(
-                new Field(f.getName,
-                  new FieldType(f.isNullable, ArrowType.BinaryView.INSTANCE, null,
-                    f.getMetadata),
-                  java.util.Collections.emptyList[Field]()),
-                allocator)
-            else
-              new ViewVarCharVector(
-                new Field(f.getName,
-                  new FieldType(f.isNullable, ArrowType.Utf8View.INSTANCE, null,
-                    f.getMetadata),
-                  java.util.Collections.emptyList[Field]()),
-                allocator)
-          } else f.createVector(allocator)
-        }
-        val outRoot = new VectorSchemaRoot(outVectors.asJava)
-        val out = pfs.create(path, true)
-        val writer = new ArrowFileWriter(outRoot, null, Channels.newChannel(out))
-        try {
-          writer.start()
-          Bridge.toArrowBatchIterator(rows, schema, batchSize, TaskContext.get()).foreach { bytes =>
-            val batch = MessageSerializer.deserializeRecordBatch(
-              new org.apache.arrow.vector.ipc.ReadChannel(
-                Channels.newChannel(new java.io.ByteArrayInputStream(bytes))), allocator)
-            try loader.load(batch) finally batch.close()
-            val n = valueRoot.getRowCount
-            schema.fieldNames.zipWithIndex.foreach { case (name, i) =>
-              val src = valueRoot.getVector(i)
-              outVectors(i) match {
-                case vv: ViewVarCharVector =>
-                  val sv = src.asInstanceOf[VarCharVector]
-                  vv.clear()
-                  vv.allocateNew(n)
-                  var r = 0
-                  while (r < n) {
-                    if (sv.isNull(r)) vv.setNull(r) else vv.setSafe(r, sv.get(r))
-                    r += 1
-                  }
-                  vv.setValueCount(n)
-                case vb: ViewVarBinaryVector =>
-                  val sv = src.asInstanceOf[VarBinaryVector]
-                  vb.clear()
-                  vb.allocateNew(n)
-                  var r = 0
-                  while (r < n) {
-                    if (sv.isNull(r)) vb.setNull(r) else vb.setSafe(r, sv.get(r))
-                    r += 1
-                  }
-                  vb.setValueCount(n)
-                case dst =>
-                  src.makeTransferPair(dst).transfer()
-              }
-            }
-            outRoot.setRowCount(n)
-            writer.writeBatch()
-          }
-          writer.end()
-        } finally {
-          writer.close(); out.close()
-          outRoot.close(); valueRoot.close()
-          allocator.close()
-        }
-      }
-    }
+    requireColumns(df, viewCols, "view", "string or binary")(
+      dt => dt == StringType || dt == BinaryType)
+    writeWith(df, dir, batchSize, "arrow", fileWriter(None),
+      viewCols.map(_ -> View).toMap)
   }
 
-  /** Fixed-size-list IPC WRITE — the write half of [[decodeFsl]]: each
-    * declared array column ships as `fixed_size_list<child, size>` (type
-    * id 32), THE Arrow transport reference consumers expect for
-    * embedding columns (and the storage layout of fixed_shape_tensor).
-    * Offsets are implicit, so the on-disk column drops the offset buffer
-    * entirely — 4 bytes/row smaller and aligned for vectorized readers.
-    * Every row must carry exactly `size` elements and no nulls inside
-    * the list (the fixed layout has nowhere to put raggedness) — both
-    * enforced LOUDLY per row. Pure per-batch task-local work like
-    * [[writeViews]]. */
+  /** Fixed-size-list IPC WRITE: each declared array column ships as
+    * `fixed_size_list<child, size>` (type id 32), THE Arrow transport
+    * reference consumers expect for embedding columns (and the storage
+    * layout of fixed_shape_tensor). Offsets are implicit, so the on-disk
+    * column drops the offset buffer entirely — 4 bytes/row smaller and
+    * aligned for vectorized readers. Every row must carry exactly `size`
+    * elements and no nulls inside the list (the fixed layout has nowhere
+    * to put raggedness) — both enforced LOUDLY per row. */
   def writeFsl(df: DataFrame, dir: String, fslCols: Map[String, Int],
       batchSize: Int = 4096): Unit = {
-    import scala.jdk.CollectionConverters._
     require(fslCols.nonEmpty, "writeFsl needs at least one fixed-size column")
-    val schema = df.schema
     fslCols.foreach { case (c, sz) =>
       require(sz >= 1, s"fixed size for '$c' must be >= 1, got $sz")
-      require(schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType],
-        s"fixed-size column '$c' must be an array, got ${schema(c).dataType}")
     }
+    requireColumns(df, fslCols.keys, "fixed-size", "an array")(_.isInstanceOf[ArrayType])
+    writeWith(df, dir, batchSize, "arrow", fileWriter(None),
+      fslCols.map { case (c, sz) => c -> FixedSize(sz) })
+  }
+
+  private def requireColumns(df: DataFrame, cols: Iterable[String], what: String,
+      want: String)(ok: DataType => Boolean): Unit =
+    cols.foreach { c =>
+      val dt = df.schema(c).dataType
+      require(ok(dt), s"$what column '$c' must be $want, got $dt")
+    }
+
+  /** The one partition loop under every writer: per partition, Spark's
+    * columnar serializer produces framed record batches and a
+    * VectorLoader moves their buffers into `root`. With no `layouts` the
+    * writer writes `root` itself; otherwise each batch is encoded column
+    * by column into a second root of the written fields (a buffer
+    * transfer for plain columns). `dictionaries` (id → sorted values)
+    * back the [[Dict]] layouts as one task-local dictionary provider. */
+  private def writeWith(
+      df: DataFrame, dir: String, batchSize: Int, ext: String, mkWriter: MkWriter,
+      layouts: Map[String, Layout] = Map.empty,
+      dictionaries: Map[Long, Array[String]] = Map.empty): Unit = {
+    val schema = df.schema
     val hconf = new SerializableHadoopConf(df.sparkSession.sparkContext.hadoopConfiguration)
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(hconf.value)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true)
+    if (fs.exists(dirPath)) fs.delete(dirPath, true) // overwrite semantics
     fs.mkdirs(dirPath)
     Bridge.toInternalRdd(df).foreachPartition { rows =>
       if (rows.nonEmpty) {
         val part = TaskContext.getPartitionId()
-        val path = new Path(dir, f"part-$part%05d.arrow")
+        val path = new Path(dir, f"part-$part%05d.$ext")
         val pfs = path.getFileSystem(hconf.value)
         val allocator = new RootAllocator(Long.MaxValue)
         val valueSchema = Bridge.toArrowSchema(schema)
-        val valueRoot = VectorSchemaRoot.create(valueSchema, allocator)
-        val loader = new VectorLoader(valueRoot)
-        val outVectors: Seq[FieldVector] = valueSchema.getFields.asScala.toSeq.map { f =>
-          fslCols.get(f.getName) match {
-            case Some(sz) =>
-              new Field(f.getName,
-                new FieldType(f.isNullable, new ArrowType.FixedSizeList(sz), null,
-                  f.getMetadata),
-                f.getChildren)
-                .createVector(allocator)
-            case None => f.createVector(allocator)
-          }
-        }
-        val outRoot = new VectorSchemaRoot(outVectors.asJava)
+        val root = VectorSchemaRoot.create(valueSchema, allocator)
+        val loader = new VectorLoader(root)
+        val dicts = new DictionaryProvider.MapDictionaryProvider(
+          dictionaries.toSeq.map { case (id, vals) => Dict(id).dictionary(vals, allocator) }: _*)
+        // built from vectors: list children then carry arrow-java's `$data$`
+        // name, the on-disk schema the layout writers have always written
+        val outRoot =
+          if (layouts.isEmpty) root
+          else new VectorSchemaRoot(valueSchema.getFields.asScala
+            .map(f => layouts.get(f.getName).fold(f)(_.written(f)).createVector(allocator)).asJava)
         val out = pfs.create(path, true)
-        val writer = new ArrowFileWriter(outRoot, null, Channels.newChannel(out))
+        val writer = mkWriter(outRoot, dicts, Channels.newChannel(out))
         try {
           writer.start()
           Bridge.toArrowBatchIterator(rows, schema, batchSize, TaskContext.get()).foreach { bytes =>
+            // framed record-batch payload → ArrowRecordBatch (buffer move)
             val batch = MessageSerializer.deserializeRecordBatch(
-              new org.apache.arrow.vector.ipc.ReadChannel(
-                Channels.newChannel(new java.io.ByteArrayInputStream(bytes))), allocator)
+              new ReadChannel(Channels.newChannel(new java.io.ByteArrayInputStream(bytes))),
+              allocator)
             try loader.load(batch) finally batch.close()
-            val n = valueRoot.getRowCount
-            schema.fieldNames.zipWithIndex.foreach { case (name, i) =>
-              val src = valueRoot.getVector(i)
-              outVectors(i) match {
-                case fv: org.apache.arrow.vector.complex.FixedSizeListVector =>
-                  val sv = src.asInstanceOf[ListVector]
-                  val sz = fv.getListSize
-                  fv.clear()
-                  fv.setInitialCapacity(n)
-                  fv.allocateNew()
-                  val sData = sv.getDataVector
-                  val dData = fv.getDataVector
-                  var r = 0
-                  while (r < n) {
-                    if (sv.isNull(r)) fv.setNull(r)
-                    else {
-                      val s0 = sv.getElementStartIndex(r)
-                      val e0 = sv.getElementEndIndex(r)
-                      require(e0 - s0 == sz,
-                        s"writeFsl: column '$name' row has ${e0 - s0} elements " +
-                          s"but is declared fixed_size_list<$sz>")
-                      var j = s0
-                      while (j < e0) {
-                        require(!sData.isNull(j),
-                          s"writeFsl: column '$name' carries a NULL element — " +
-                            "the fixed layout requires dense values")
-                        j += 1
-                      }
-                      fv.setNotNull(r)
-                      j = s0
-                      while (j < e0) {
-                        dData.copyFromSafe(j, r * sz + (j - s0), sData)
-                        j += 1
-                      }
-                    }
-                    r += 1
-                  }
-                  fv.setValueCount(n)
-                  dData.setValueCount(n * sz)
-                case dst =>
-                  src.makeTransferPair(dst).transfer()
+            if (outRoot ne root) {
+              root.getFieldVectors.asScala.zip(outRoot.getFieldVectors.asScala).foreach {
+                case (src, dst) => layouts.get(src.getName) match {
+                  case Some(l) => l.encode(src, dst, dicts)
+                  case None => src.makeTransferPair(dst).transfer()
+                }
               }
+              outRoot.setRowCount(root.getRowCount)
             }
-            outRoot.setRowCount(n)
             writer.writeBatch()
           }
           writer.end()
         } finally {
           writer.close(); out.close()
-          outRoot.close(); valueRoot.close()
-          allocator.close()
+          if (outRoot ne root) outRoot.close()
+          root.close(); dicts.close(); allocator.close()
         }
       }
     }
   }
 
-  // --- 64-bit-offset layout variants -------------------------------------
-  // LARGE_STRING / LARGE_BINARY / LARGE_LIST (reference type ids 34/35/36,
-  // cpp/src/arrow/type.h:442-448) are per SURVEY §1.2 "layout variants,
-  // same semantics" of their 32-bit twins. Spark's columnar loader speaks
-  // only the 32-bit layouts, so the read path NARROWS them at the batch
-  // level: the int64 offsets buffer is rewritten as int32 (rejecting any
-  // offset past 2^31-1 — a single task-local >2 GiB column has no 32-bit
-  // representation), every other buffer passes through untouched, at any
-  // nesting depth. Values are never copied — only offsets.
+  // --- column layouts ------------------------------------------------------
 
-  // --- dictionary-encoded columns ----------------------------------------
-  // Dictionary encoding is a PHYSICAL layout (SURVEY §1.2 — same stance as
-  // run-end encoding): the reference's `dictionary_encode` is the default
-  // for categorical columns, so IPC files in the wild routinely carry
-  // index vectors + dictionary batches (reference
-  // cpp/src/arrow/ipc/reader.cc dictionary handling). Spark's columnar
-  // bridge speaks only value-typed vectors, so the read path DECODES at
-  // the boundary: each encoded column's indices are resolved against the
-  // reader's dictionary provider into a plain value vector, batch by
-  // batch. Memory is one decoded batch, not the file; the dictionary
-  // itself stays loaded once per file, exactly as the reader framing
-  // delivers it.
-
-  private def hasDictionary(s: ArrowSchema): Boolean = {
-    import scala.jdk.CollectionConverters._
-    s.getFields.asScala.exists(_.getDictionary != null)
+  /** One physical layout of a top-level column (see the object scaladoc).
+    * `written`/`encode` are the write half (flat value vector → layout),
+    * `valueField`/`decode` the read half (layout → the value type
+    * Spark's bridge reads). `dicts` resolves dictionary ids: the task's
+    * provider on write, the reader on read. */
+  private sealed trait Layout extends Serializable {
+    /** The field value column `f` is written as. */
+    def written(f: Field): Field
+    /** Encode one batch of `src` (a value vector) into `dst`, a vector of
+      * `written(src.getField)`. */
+    def encode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit
+    /** The value field an on-disk column `f` of this layout reads as. */
+    def valueField(f: Field, dicts: DictionaryProvider): Field
+    /** Decode one batch of `src` into `dst`, a fresh vector of
+      * `valueField(src.getField, dicts)`. */
+    def decode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit
   }
 
-  /** The value-typed field an encoded column decodes to: the dictionary
-    * VALUES' type and children under the encoded column's name and
-    * nullability (indices may be null independently of the values). */
-  private def decodedField(reader: ArrowReader, f: Field): Field = {
-    val enc = f.getDictionary
-    if (enc == null) f
-    else {
-      val dict = reader.lookup(enc.getId)
-      require(dict != null,
-        s"field ${f.getName} references dictionary ${enc.getId} " +
-          "but the file carries no such dictionary batch")
-      val values = dict.getVector.getField
+  /** The layout an on-disk field uses, or None for a plain value layout. */
+  private def layoutOf(f: Field): Option[Layout] =
+    if (f.getDictionary != null) Some(Dict(f.getDictionary.getId))
+    else f.getType match {
+      case _: ArrowType.RunEndEncoded => Some(RunEnd)
+      case t if isViewType(t) => Some(View)
+      case t: ArrowType.FixedSizeList => Some(FixedSize(t.getListSize))
+      case _ => None
+    }
+
+  /** Dictionary encoding (the reference's `dictionary_encode`, default for
+    * categorical columns; reference cpp/src/arrow/ipc/reader.cc dictionary
+    * handling): int32 indices plus a dictionary batch per file. Indices
+    * are resolved by hash lookup on write and against the reader's
+    * dictionary provider on read; the dictionary itself stays loaded
+    * once per file, exactly as the reader framing delivers it. */
+  private final case class Dict(id: Long) extends Layout {
+    def encoding = new DictionaryEncoding(id, /*ordered=*/ false, new ArrowType.Int(32, true))
+    /** A task-local utf8 dictionary over `vals` (index = position). */
+    def dictionary(vals: Array[String], allocator: RootAllocator): Dictionary = {
+      val vec = new VarCharVector(s"dict-$id", allocator)
+      vec.allocateNew(vals.length)
+      vals.zipWithIndex.foreach { case (v, i) => vec.setSafe(i, v.getBytes("UTF-8")) }
+      vec.setValueCount(vals.length)
+      new Dictionary(vec, encoding)
+    }
+    def written(f: Field): Field =
+      new Field(f.getName,
+        new FieldType(f.isNullable, new ArrowType.Int(32, true), encoding, f.getMetadata),
+        java.util.Collections.emptyList[Field]())
+    def encode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit = {
+      val encoded = DictionaryEncoder.encode(src, dicts.lookup(id))
+      try encoded.makeTransferPair(dst).transfer() finally encoded.close()
+    }
+    /** The dictionary VALUES' type and children under the encoded
+      * column's name and nullability (indices may be null independently
+      * of the values). */
+    def valueField(f: Field, dicts: DictionaryProvider): Field = {
+      val values = lookup(f, dicts).getVector.getField
       new Field(f.getName,
         new FieldType(f.isNullable, values.getType, null, f.getMetadata),
         values.getChildren)
     }
-  }
-
-  // --- run-end-encoded columns -------------------------------------------
-  // The second physical compression layout the IPC format ships
-  // (reference ArrowType::RUN_END_ENCODED, cpp/src/arrow/type.h;
-  // `run_end_encode` kernel in compute/kernels/vector_run_end_encode.cc).
-  // Same stance as dictionaries: decode to the value layout at the read
-  // boundary, top-level columns, batch by batch. A run-end child of
-  // int16/int32/int64 is expanded by repeating each values entry through
-  // its run (generic `copyFromSafe`, so every value type arrow-java can
-  // copy — nested included — comes along).
-
-  private def isRee(f: Field): Boolean =
-    f.getType.isInstanceOf[ArrowType.RunEndEncoded]
-
-  private def hasRee(s: ArrowSchema): Boolean = {
-    import scala.jdk.CollectionConverters._
-    s.getFields.asScala.exists(isRee)
-  }
-
-  /** The value-typed field an REE column decodes to: child 1 ("values")
-    * under the column's name; run boundaries cannot be null, so
-    * nullability comes from the values child. */
-  private def reeValueField(f: Field): Field = {
-    require(f.getChildren.size == 2,
-      s"run-end-encoded field ${f.getName} must have [run_ends, values] " +
-        s"children, got ${f.getChildren.size}")
-    val values = f.getChildren.get(1)
-    new Field(f.getName,
-      new FieldType(values.isNullable, values.getType, null, f.getMetadata),
-      values.getChildren)
-  }
-
-  /** Expand one REE vector into a flat value vector (caller closes). */
-  private def decodeRee(v: FieldVector, allocator: RootAllocator): FieldVector = {
-    val ree = v.asInstanceOf[RunEndEncodedVector]
-    val children = ree.getChildrenFromFields
-    val runEnds = children.get(0)
-    val values = children.get(1).asInstanceOf[FieldVector]
-    val n = ree.getValueCount
-    val getEnd: Int => Int = runEnds match {
-      case iv: IntVector      => iv.get(_)
-      case sv: SmallIntVector => sv.get(_).toInt
-      case bv: BigIntVector   => (i: Int) => math.toIntExact(bv.get(i))
-      case other => throw new IllegalArgumentException(
-        s"run ends must be int16/int32/int64, got ${other.getField.getType}")
+    def decode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit = {
+      val decoded = DictionaryEncoder.decode(src, lookup(src.getField, dicts), dst.getAllocator)
+      try decoded.makeTransferPair(dst).transfer() finally decoded.close()
     }
-    val out = new Field(v.getField.getName, values.getField.getFieldType,
-      values.getField.getChildren).createVector(allocator)
-    out.setInitialCapacity(n)
+    private def lookup(f: Field, dicts: DictionaryProvider): Dictionary = {
+      val dict = dicts.lookup(id)
+      require(dict != null,
+        s"field ${f.getName} references dictionary $id " +
+          "but the file carries no such dictionary batch")
+      dict
+    }
+  }
+
+  /** Run-end encoding (reference ArrowType::RUN_END_ENCODED,
+    * cpp/src/arrow/type.h; `run_end_encode` kernel in
+    * compute/kernels/vector_run_end_encode.cc): (run_ends, values)
+    * children. Written as int32 ends over utf8 values; read with int16,
+    * int32 or int64 ends over any value type arrow-java can
+    * `copyFromSafe` (nested included). */
+  private case object RunEnd extends Layout {
+    def written(f: Field): Field =
+      new Field(f.getName, FieldType.notNullable(ArrowType.RunEndEncoded.INSTANCE),
+        Seq(new Field("run_ends", FieldType.notNullable(new ArrowType.Int(32, true)), null),
+          new Field("values", FieldType.nullable(ArrowType.Utf8.INSTANCE), null)).asJava)
+    def encode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit = {
+      // scan the flat column into (run_end, value) pairs
+      val sv = src.asInstanceOf[VarCharVector]
+      val ree = dst.asInstanceOf[RunEndEncodedVector]
+      val ends = ree.getRunEndsVector.asInstanceOf[IntVector]
+      val vals = ree.getValuesVector.asInstanceOf[VarCharVector]
+      def same(a: Int, b: Int): Boolean =
+        if (sv.isNull(a)) sv.isNull(b)
+        else !sv.isNull(b) && java.util.Arrays.equals(sv.get(a), sv.get(b))
+      val n = sv.getValueCount
+      ends.allocateNew()
+      vals.allocateNew()
+      var runs = 0
+      var r = 0
+      while (r < n) {
+        var e = r + 1
+        while (e < n && same(r, e)) e += 1
+        ends.setSafe(runs, e)
+        if (sv.isNull(r)) vals.setNull(runs) else vals.setSafe(runs, sv.get(r))
+        runs += 1
+        r = e
+      }
+      ends.setValueCount(runs)
+      vals.setValueCount(runs)
+      ree.setValueCount(n)
+    }
+    /** Child 1 ("values") under the column's name; run boundaries cannot
+      * be null, so nullability comes from the values child. */
+    def valueField(f: Field, dicts: DictionaryProvider): Field = {
+      require(f.getChildren.size == 2,
+        s"run-end-encoded field ${f.getName} must have [run_ends, values] " +
+          s"children, got ${f.getChildren.size}")
+      val values = f.getChildren.get(1)
+      new Field(f.getName,
+        new FieldType(values.isNullable, values.getType, null, f.getMetadata),
+        values.getChildren)
+    }
+    /** Repeat each values entry through its run. */
+    def decode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit = {
+      val ree = src.asInstanceOf[RunEndEncodedVector]
+      val values = ree.getValuesVector
+      val getEnd: Int => Int = ree.getRunEndsVector match {
+        case iv: IntVector      => iv.get(_)
+        case sv: SmallIntVector => sv.get(_).toInt
+        case bv: BigIntVector   => (i: Int) => math.toIntExact(bv.get(i))
+        case other => throw new IllegalArgumentException(
+          s"run ends must be int16/int32/int64, got ${other.getField.getType}")
+      }
+      val n = ree.getValueCount
+      dst.setInitialCapacity(n)
+      var pos = 0
+      var r = 0
+      while (pos < n) {
+        val end = math.min(getEnd(r), n)
+        require(end > pos,
+          s"run ends must be strictly increasing: run $r ends at $end, " +
+            s"position already $pos")
+        while (pos < end) { dst.copyFromSafe(r, pos, values); pos += 1 }
+        r += 1
+      }
+      dst.setValueCount(n)
+    }
+  }
+
+  /** View layouts (reference type ids 39-42, cpp/src/arrow/type_fwd.h:
+    * 458-467): STRING_VIEW/BINARY_VIEW store (length, prefix, buffer_id,
+    * offset) structs over out-of-line variadic data buffers; LIST_VIEW/
+    * LARGE_LIST_VIEW store independent (offset, size) pairs that need not
+    * be monotonic or disjoint. View data is not contiguous in element
+    * order, so unlike the large-offset narrowing no buffer rewrite can
+    * avoid touching values: elements are copied in order. Written for
+    * string/binary; all four read back as utf8/binary/32-bit list. */
+  private case object View extends Layout {
+    def written(f: Field): Field =
+      new Field(f.getName,
+        new FieldType(f.isNullable,
+          if (f.getType.isInstanceOf[ArrowType.Binary]) ArrowType.BinaryView.INSTANCE
+          else ArrowType.Utf8View.INSTANCE,
+          null, f.getMetadata),
+        java.util.Collections.emptyList[Field]())
+    def encode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit =
+      copyValues(src, dst)
+    def valueField(f: Field, dicts: DictionaryProvider): Field = {
+      val (t, children) = f.getType match {
+        case _: ArrowType.Utf8View => (ArrowType.Utf8.INSTANCE, java.util.Collections.emptyList[Field]())
+        case _: ArrowType.BinaryView => (ArrowType.Binary.INSTANCE, java.util.Collections.emptyList[Field]())
+        case _ => (ArrowType.List.INSTANCE, f.getChildren)
+      }
+      new Field(f.getName, new FieldType(f.isNullable, t, null, f.getMetadata), children)
+    }
+    def decode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit = src match {
+      case lv: ListViewVector =>
+        // read (offset, size) straight from the buffers: the vector's
+        // getElementEndIndex returns the SIZE, not offset+size
+        val (off, sz) = (lv.getOffsetBuffer, lv.getSizeBuffer)
+        copyLists(lv, lv.getDataVector, dst, { i =>
+          val s = off.getInt(i.toLong * 4)
+          (s, s + sz.getInt(i.toLong * 4))
+        })
+      case lv: LargeListViewVector =>
+        val (off, sz) = (lv.getOffsetBuffer, lv.getSizeBuffer)
+        copyLists(lv, lv.getDataVector, dst, { i =>
+          val s = math.toIntExact(off.getLong(i.toLong * 8))
+          (s, s + math.toIntExact(sz.getLong(i.toLong * 8)))
+        })
+      case _ => copyValues(src, dst)
+    }
+  }
+
+  /** FIXED_SIZE_LIST (reference type id 32, type_fwd.h:435): THE standard
+    * transport for embedding columns (fixed_size_list<float, d>) and the
+    * storage layout of fixed_shape_tensor, which Spark's Arrow bridge
+    * rejects outright (UNSUPPORTED_ARROWTYPE). The logical type is a
+    * plain ArrayType whose offsets are implicit (i·size); the size
+    * constraint is layout-only and is dropped on read (enforce per-row
+    * width downstream when it matters). */
+  private final case class FixedSize(size: Int) extends Layout {
+    def written(f: Field): Field =
+      new Field(f.getName,
+        new FieldType(f.isNullable, new ArrowType.FixedSizeList(size), null, f.getMetadata),
+        f.getChildren)
+    def encode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit = {
+      val sv = src.asInstanceOf[ListVector]
+      val fv = dst.asInstanceOf[FixedSizeListVector]
+      val n = sv.getValueCount
+      fv.clear()
+      fv.setInitialCapacity(n)
+      fv.allocateNew()
+      val sData = sv.getDataVector
+      val dData = fv.getDataVector
+      var r = 0
+      while (r < n) {
+        if (sv.isNull(r)) fv.setNull(r)
+        else {
+          val s0 = sv.getElementStartIndex(r)
+          val e0 = sv.getElementEndIndex(r)
+          require(e0 - s0 == size,
+            s"writeFsl: column '${src.getName}' row has ${e0 - s0} elements " +
+              s"but is declared fixed_size_list<$size>")
+          var j = s0
+          while (j < e0) {
+            require(!sData.isNull(j),
+              s"writeFsl: column '${src.getName}' carries a NULL element — " +
+                "the fixed layout requires dense values")
+            j += 1
+          }
+          fv.setNotNull(r)
+          j = s0
+          while (j < e0) {
+            dData.copyFromSafe(j, r * size + (j - s0), sData)
+            j += 1
+          }
+        }
+        r += 1
+      }
+      fv.setValueCount(n)
+      dData.setValueCount(n * size)
+    }
+    def valueField(f: Field, dicts: DictionaryProvider): Field =
+      new Field(f.getName,
+        new FieldType(f.isNullable, ArrowType.List.INSTANCE, null, f.getMetadata),
+        f.getChildren)
+    def decode(src: FieldVector, dst: FieldVector, dicts: DictionaryProvider): Unit = {
+      val fv = src.asInstanceOf[FixedSizeListVector]
+      val sz = fv.getListSize
+      copyLists(fv, fv.getDataVector, dst, i => (i * sz, i * sz + sz))
+    }
+  }
+
+  /** Copy `src`'s string/binary elements, in order and nulls included,
+    * into `dst` (plain or view layout, either direction). */
+  private def copyValues(src: FieldVector, dst: FieldVector): Unit = {
+    val s = src.asInstanceOf[VariableWidthFieldVector]
+    val d = dst.asInstanceOf[VariableWidthFieldVector]
+    val n = s.getValueCount
+    d.clear()
+    d.allocateNew(n)
+    var i = 0
+    while (i < n) {
+      if (s.isNull(i)) d.setNull(i) else d.setSafe(i, s.get(i))
+      i += 1
+    }
+    d.setValueCount(n)
+  }
+
+  /** Copy each non-null list `i` of `src` — child elements
+    * `bounds(i)` = [start, end) of `srcChild` — in order into the plain
+    * list vector `dst`. */
+  private def copyLists(
+      src: FieldVector, srcChild: FieldVector, dst: FieldVector,
+      bounds: Int => (Int, Int)): Unit = {
+    val out = dst.asInstanceOf[ListVector]
+    val n = src.getValueCount
+    out.allocateNew()
+    val dChild = out.getDataVector
     var pos = 0
-    var r = 0
-    while (pos < n) {
-      val end = math.min(getEnd(r), n)
-      require(end > pos,
-        s"run ends must be strictly increasing: run $r ends at $end, " +
-          s"position already $pos")
-      while (pos < end) { out.copyFromSafe(r, pos, values); pos += 1 }
-      r += 1
+    var i = 0
+    while (i < n) {
+      if (src.isNull(i)) out.setNull(i)
+      else {
+        out.startNewValue(i)
+        val (s, e) = bounds(i)
+        var j = s
+        while (j < e) { dChild.copyFromSafe(j, pos, srcChild); pos += 1; j += 1 }
+        out.endValue(i, e - s)
+      }
+      i += 1
     }
     out.setValueCount(n)
-    out
+    // setValueCount derives the child count from internal lastSet
+    // bookkeeping that startNewValue/endValue don't maintain reliably;
+    // the loop knows exactly how many child values it wrote
+    dChild.setValueCount(pos)
   }
-
-  // --- view layouts ------------------------------------------------------
-  // STRING_VIEW / BINARY_VIEW / LIST_VIEW / LARGE_LIST_VIEW (reference
-  // type ids 39-42, cpp/src/arrow/type_fwd.h:458-467) are per SURVEY §1.2
-  // layout variants of string/binary/list: string/binary views store
-  // (length, prefix, buffer_id, offset) structs over out-of-line variadic
-  // data buffers, list-views store independent (offset, size) pairs that
-  // need not be monotonic or disjoint. Unlike the large-offset narrowing,
-  // view DATA is not contiguous in element order, so a buffer-level
-  // rewrite cannot avoid touching values — the read path therefore
-  // DECODES at the boundary (same stance as dictionaries and REE): each
-  // top-level view column's elements are copied in order into a plain
-  // utf8/binary/list vector, batch by batch. Views nested inside other
-  // columns are rejected loudly (same top-level contract as REE).
 
   private def isViewType(t: ArrowType): Boolean = t match {
     case _: ArrowType.Utf8View | _: ArrowType.BinaryView |
@@ -732,173 +604,28 @@ object ArrowIpc {
     case _ => false
   }
 
-  private def isView(f: Field): Boolean = isViewType(f.getType)
-
-  private def hasView(s: ArrowSchema): Boolean = {
-    import scala.jdk.CollectionConverters._
-    s.getFields.asScala.exists(isView)
-  }
-
-  /** The documented loud rejection for views BELOW the top level must
-    * fire even when the top-level field is not itself a view (e.g.
-    * `struct<s: string_view>` — such a column never reaches
-    * viewValueField/decodeView, so the per-field walk alone would let it
-    * fall through to an unrelated unsupported-type error downstream).
-    * Called once per file at both read boundaries (schema and batches). */
-  private def requireNoNestedViewsInSchema(s: ArrowSchema): Unit = {
-    import scala.jdk.CollectionConverters._
-    s.getFields.asScala.foreach(f => requireNoNestedViews(f, f.getName))
-  }
-
-  private def requireNoNestedViews(f: Field, top: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    f.getChildren.asScala.foreach { c =>
+  /** Views are decoded only as top-level columns, and the loud rejection
+    * must fire even when the top-level field is not itself a view (e.g.
+    * `struct<s: string_view>`, which would otherwise fall through to an
+    * unrelated unsupported-type error downstream). Checked once per file
+    * at both read boundaries (schema and batches). */
+  private def requireNoNestedViews(s: ArrowSchema): Unit = {
+    def walk(f: Field, top: String): Unit = f.getChildren.asScala.foreach { c =>
       require(!isViewType(c.getType),
         s"column $top nests a ${c.getType} layout below the top level — " +
           "view layouts are decoded only as top-level columns")
-      requireNoNestedViews(c, top)
+      walk(c, top)
     }
+    s.getFields.asScala.foreach(f => walk(f, f.getName))
   }
 
-  /** The §1.2 value-typed field a view column decodes to: utf8/binary for
-    * the string views, a plain 32-bit list (same child) for both
-    * list-view widths. */
-  private def viewValueField(f: Field): Field = {
-    requireNoNestedViews(f, f.getName)
-    f.getType match {
-      case _: ArrowType.Utf8View =>
-        new Field(f.getName,
-          new FieldType(f.isNullable, ArrowType.Utf8.INSTANCE, null, f.getMetadata),
-          java.util.Collections.emptyList())
-      case _: ArrowType.BinaryView =>
-        new Field(f.getName,
-          new FieldType(f.isNullable, ArrowType.Binary.INSTANCE, null, f.getMetadata),
-          java.util.Collections.emptyList())
-      case _: ArrowType.ListView | _: ArrowType.LargeListView =>
-        new Field(f.getName,
-          new FieldType(f.isNullable, ArrowType.List.INSTANCE, null, f.getMetadata),
-          f.getChildren)
-      case other => throw new IllegalArgumentException(
-        s"not a view layout: $other")
-    }
-  }
-
-  /** Copy one view vector's elements, in order, into the contiguous value
-    * layout (caller closes the result). */
-  private def decodeView(v: FieldVector, allocator: RootAllocator): FieldVector = {
-    requireNoNestedViews(v.getField, v.getField.getName)
-    val n = v.getValueCount
-    v match {
-      case src: ViewVarCharVector =>
-        val dst = new VarCharVector(src.getName, allocator)
-        dst.allocateNew(n)
-        var i = 0
-        while (i < n) {
-          if (src.isNull(i)) dst.setNull(i) else dst.setSafe(i, src.get(i))
-          i += 1
-        }
-        dst.setValueCount(n); dst
-      case src: ViewVarBinaryVector =>
-        val dst = new VarBinaryVector(src.getName, allocator)
-        dst.allocateNew(n)
-        var i = 0
-        while (i < n) {
-          if (src.isNull(i)) dst.setNull(i) else dst.setSafe(i, src.get(i))
-          i += 1
-        }
-        dst.setValueCount(n); dst
-      case src: ListViewVector =>
-        // read (offset, size) straight from the buffers: the vector's
-        // getElementEndIndex returns the SIZE, not offset+size
-        val off = src.getOffsetBuffer
-        val sz = src.getSizeBuffer
-        decodeListView(src.getName, n, src.getDataVector,
-          i => src.isNull(i),
-          { i =>
-            val s = off.getInt(i.toLong * 4)
-            (s, s + sz.getInt(i.toLong * 4))
-          },
-          allocator)
-      case src: LargeListViewVector =>
-        val off = src.getOffsetBuffer
-        val sz = src.getSizeBuffer
-        decodeListView(src.getName, n, src.getDataVector,
-          i => src.isNull(i),
-          { i =>
-            val s = math.toIntExact(off.getLong(i.toLong * 8))
-            val len = math.toIntExact(sz.getLong(i.toLong * 8))
-            (s, s + len)
-          },
-          allocator)
-      case other => throw new IllegalArgumentException(
-        s"not a view vector: ${other.getField.getType}")
-    }
-  }
-
-  private def decodeListView(
-      name: String, n: Int, srcChild: FieldVector,
-      isNull: Int => Boolean, bounds: Int => (Int, Int),
-      allocator: RootAllocator): FieldVector = {
-    val dst = ListVector.empty(name, allocator)
-    dst.initializeChildrenFromFields(
-      java.util.Collections.singletonList(srcChild.getField))
-    dst.allocateNew()
-    val dChild = dst.getDataVector
-    var pos = 0
-    var i = 0
-    while (i < n) {
-      if (isNull(i)) dst.setNull(i)
-      else {
-        dst.startNewValue(i)
-        val (s, e) = bounds(i)
-        var j = s
-        while (j < e) { dChild.copyFromSafe(j, pos, srcChild); pos += 1; j += 1 }
-        dst.endValue(i, e - s)
-      }
-      i += 1
-    }
-    dst.setValueCount(n)
-    // setValueCount derives the child count from internal lastSet
-    // bookkeeping that startNewValue/endValue don't maintain reliably;
-    // the loop knows exactly how many child values it wrote
-    dChild.setValueCount(pos)
-    dst
-  }
-
-  // --- fixed-size lists ---------------------------------------------------
-  // FIXED_SIZE_LIST (reference type id 32, type_fwd.h:435) is THE standard
-  // Arrow transport for embedding columns (fixed_size_list<float, d>) and
-  // the storage layout of fixed_shape_tensor — but Spark's Arrow bridge
-  // rejects it outright (UNSUPPORTED_ARROWTYPE). Per SURVEY §1.2 the
-  // logical mapping is a plain ArrayType whose offsets are implicit
-  // (i·size), so the read boundary DECODES each top-level fixed-size-list
-  // column into an ordinary list vector — same stance as dictionaries,
-  // REE and views. The size constraint is layout-only and is dropped
-  // (documented §1.2 contract: enforce per-row width downstream when it
-  // matters).
-
-  private def isFsl(f: Field): Boolean =
-    f.getType.isInstanceOf[ArrowType.FixedSizeList]
-
-  private def hasFsl(s: ArrowSchema): Boolean = {
-    import scala.jdk.CollectionConverters._
-    s.getFields.asScala.exists(isFsl)
-  }
-
-  /** The §1.2 value-typed field: a plain 32-bit list with the same child. */
-  private def fslValueField(f: Field): Field =
-    new Field(f.getName,
-      new FieldType(f.isNullable, ArrowType.List.INSTANCE, null, f.getMetadata),
-      f.getChildren)
-
-  /** Expand implicit (i·size) offsets into a plain list vector (caller
-    * closes the result) — [[decodeListView]] does the element copies. */
-  private def decodeFsl(v: FieldVector, allocator: RootAllocator): FieldVector = {
-    val src = v.asInstanceOf[org.apache.arrow.vector.complex.FixedSizeListVector]
-    val sz = src.getListSize
-    decodeListView(src.getName, src.getValueCount, src.getDataVector,
-      i => src.isNull(i), i => (i * sz, i * sz + sz), allocator)
-  }
+  // --- 64-bit-offset layout variants -------------------------------------
+  // LARGE_STRING / LARGE_BINARY / LARGE_LIST (reference type ids 34/35/36,
+  // cpp/src/arrow/type.h:442-448) are narrowed at the batch level: the
+  // int64 offsets buffer is rewritten as int32 (rejecting any offset past
+  // 2^31-1 — a single task-local >2 GiB column has no 32-bit
+  // representation), every other buffer passes through untouched, at any
+  // nesting depth. Values are never copied — only offsets.
 
   private def narrowType(t: ArrowType): ArrowType = t match {
     case _: ArrowType.LargeUtf8   => ArrowType.Utf8.INSTANCE
@@ -907,25 +634,19 @@ object ArrowIpc {
     case other                    => other
   }
 
-  private def narrowField(f: Field): Field = {
-    import scala.jdk.CollectionConverters._
+  private def narrowField(f: Field): Field =
     new Field(f.getName,
       new FieldType(f.isNullable, narrowType(f.getType), f.getDictionary, f.getMetadata),
       f.getChildren.asScala.map(narrowField).toSeq.asJava)
-  }
 
-  private def narrowSchema(s: ArrowSchema): ArrowSchema = {
-    import scala.jdk.CollectionConverters._
+  private def narrowSchema(s: ArrowSchema): ArrowSchema =
     new ArrowSchema(s.getFields.asScala.map(narrowField).toSeq.asJava)
-  }
 
-  private def hasLargeTypes(fields: Seq[Field]): Boolean = {
-    import scala.jdk.CollectionConverters._
+  private def hasLargeTypes(fields: Seq[Field]): Boolean =
     fields.exists { f =>
       (f.getType ne narrowType(f.getType)) ||
         hasLargeTypes(f.getChildren.asScala.toSeq)
     }
-  }
 
   /** Rewrite one record batch from 64-bit-offset layouts to 32-bit ones.
     * Node list and pass-through buffers are reused; only offsets buffers
@@ -993,7 +714,7 @@ object ArrowIpc {
     val in = fs.open(path)
     // always hand the reader the codec factory: uncompressed batches never
     // consult it, compressed ones (zstd / lz4_frame) decode transparently
-    val codecs = org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE
+    val codecs = CommonsCompressionFactory.INSTANCE
     if (stream) new ArrowStreamReader(in, allocator, codecs)
     else {
       val len = fs.getFileStatus(path).getLen
@@ -1023,16 +744,11 @@ object ArrowIpc {
 
   private def batchBytes(
       conf: Configuration, file: String, stream: Boolean): Iterator[Array[Byte]] = {
-    import scala.jdk.CollectionConverters._
     val allocator = new RootAllocator(Long.MaxValue)
     val reader = openReader(conf, file, stream, allocator)
     val srcRoot = loud(file, stream)(reader.getVectorSchemaRoot)
-    requireNoNestedViewsInSchema(srcRoot.getSchema)
-    val encoded = hasDictionary(srcRoot.getSchema) || hasRee(srcRoot.getSchema) ||
-      hasView(srcRoot.getSchema) || hasFsl(srcRoot.getSchema)
-    val unloader = new VectorUnloader(srcRoot)
-    val srcFields = srcRoot.getSchema.getFields.asScala.toSeq
-    val narrow = !encoded && hasLargeTypes(srcFields)
+    requireNoNestedViews(srcRoot.getSchema)
+    val layouts = srcRoot.getSchema.getFields.asScala.toSeq.map(layoutOf)
     var closed = false
     def closeAll(): Unit = if (!closed) { closed = true; reader.close(); allocator.close() }
     Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
@@ -1049,50 +765,31 @@ object ArrowIpc {
         advance()
         if (!hasBatch) throw new NoSuchElementException
         advanced = false
-        // decode dictionary- and run-end-encoded columns into plain value
-        // vectors; decoded vectors are batch-local, closed after serialize
-        val decodedVecs = new java.util.ArrayList[FieldVector]()
+        // decode every layout column into a plain value vector; decoded
+        // vectors are batch-local, closed after serialize
+        val decoded = new java.util.ArrayList[FieldVector]()
         val root =
-          if (!encoded) srcRoot
-          else {
-            val vecs = srcRoot.getFieldVectors.asScala.map { v =>
-              val enc = v.getField.getDictionary
-              if (enc != null) {
-                val dict = reader.lookup(enc.getId)
-                require(dict != null,
-                  s"field ${v.getField.getName} references dictionary " +
-                    s"${enc.getId} but $file carries no such dictionary batch")
-                val d = DictionaryEncoder.decode(v, dict).asInstanceOf[FieldVector]
-                decodedVecs.add(d)
-                d
-              } else if (isRee(v.getField)) {
-                val d = decodeRee(v, allocator)
-                decodedVecs.add(d)
-                d
-              } else if (isView(v.getField)) {
-                val d = decodeView(v, allocator)
-                decodedVecs.add(d)
-                d
-              } else if (isFsl(v.getField)) {
-                val d = decodeFsl(v, allocator)
-                decodedVecs.add(d)
-                d
-              } else v
-            }
-            new VectorSchemaRoot(vecs.asJava)
+          if (layouts.forall(_.isEmpty)) srcRoot
+          else try new VectorSchemaRoot(srcRoot.getFieldVectors.asScala.zip(layouts).map {
+            case (v, None) => v
+            case (v, Some(l)) =>
+              val d = l.valueField(v.getField, reader).createVector(allocator)
+              decoded.add(d)
+              l.decode(v, d, reader)
+              d
+          }.asJava) catch {
+            // a layout's own rejection does not know which file it read
+            case e: IllegalArgumentException =>
+              throw new IllegalArgumentException(s"$file: ${e.getMessage}", e)
           }
-        val fields =
-          if (!encoded) srcFields
-          else root.getSchema.getFields.asScala.toSeq
-        val src =
-          (if (encoded) new VectorUnloader(root) else unloader).getRecordBatch
-        val doNarrow = if (encoded) hasLargeTypes(fields) else narrow
-        val batch = if (doNarrow) narrowBatch(fields, src, allocator) else src
+        val fields = root.getSchema.getFields.asScala.toSeq
+        val src = new VectorUnloader(root).getRecordBatch
+        val batch = if (hasLargeTypes(fields)) narrowBatch(fields, src, allocator) else src
         val bos = new ByteArrayOutputStream()
         try MessageSerializer.serialize(new WriteChannel(Channels.newChannel(bos)), batch)
         finally {
           if (batch ne src) batch.close(); src.close()
-          decodedVecs.forEach(_.close())
+          decoded.forEach(_.close())
         }
         bos.toByteArray
       }
@@ -1117,40 +814,46 @@ object ArrowIpc {
     * partition tuples are the one bounded driver exchange (they ARE the
     * directory listing — a layout with more leaves than a driver can
     * hold is unusable anyway); each leaf's data is written by the
-    * cluster through the normal path. Partition columns are dropped
-    * from the files exactly like Spark's own partitioned writers —
-    * [[readPartitioned]] reconstructs them from the path. */
+    * cluster through the normal path. A leaf's value is the key's
+    * `cast("string")` — the same text its slice filter compares, so
+    * every row lands in exactly one leaf — and a NULL key goes to
+    * Spark's `__HIVE_DEFAULT_PARTITION__` leaf. Partition columns are
+    * dropped from the files exactly like Spark's own partitioned
+    * writers — [[readPartitioned]] reconstructs them from the path. */
   def writePartitioned(df: DataFrame, dir: String,
       partitionCols: Seq[String], batchSize: Int = 4096): Unit = {
     require(partitionCols.nonEmpty, "writePartitioned needs partition columns")
-    import org.apache.spark.sql.functions.col
     // overwrite semantics for the whole dataset, like write(): a stale
     // leaf from a previous layout must not survive into the new one
     val rootPath = new Path(dir)
     val rfs = rootPath.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     if (rfs.exists(rootPath)) rfs.delete(rootPath, true)
-    val specs = df.select(partitionCols.map(col): _*).distinct()
+    val specs = df.select(partitionCols.map(c => col(c).cast("string")): _*).distinct()
       .collect().map(r => partitionCols.zipWithIndex.map { case (c, i) =>
-        c -> String.valueOf(r.get(i))
+        c -> Option(r.getString(i))
       })
     specs.foreach { spec =>
       val leaf = spec.map { case (k, v) =>
-        s"$k=${java.net.URLEncoder.encode(v, "UTF-8")}"
+        s"$k=${v.fold(HiveDefaultPartition)(java.net.URLEncoder.encode(_, "UTF-8"))}"
       }.mkString("/")
       val slice = spec.foldLeft(df) { case (d, (k, v)) =>
-        d.filter(col(k).cast("string") === v)
+        d.filter(v.fold(col(k).isNull)(col(k).cast("string") === _))
       }.drop(partitionCols: _*)
       write(slice, s"$dir/$leaf", batchSize)
     }
   }
+
+  /** The leaf value Spark's partitioned writers use for a NULL key. */
+  private val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
   /** Read a HIVE-PARTITIONED Arrow IPC dataset — `key=value` directory
     * levels become (string-typed) partition columns appended after the
     * file columns, mirroring the reference's `HivePartitioning`
     * (`cpp/src/arrow/dataset/partition.h`) and Spark's own layout
     * convention. Each partition's files read through the full decode
-    * machinery (dictionaries, REE, views, large types); values are
-    * URL-decoded the way both writers escape them. Cast partition
+    * machinery (every column layout and the large types); values are
+    * URL-decoded the way both writers escape them, and a
+    * `__HIVE_DEFAULT_PARTITION__` segment reads as NULL. Cast partition
     * columns downstream when a typed key is needed — the reference
     * infers types only when asked, and a lossless string never lies. */
   def readPartitioned(spark: SparkSession, dir: String): DataFrame = {
@@ -1182,7 +885,8 @@ object ArrowIpc {
     bySpec.map { case (spec, files) =>
       val part = readFiles(spark, files.map(_.toString).sorted, stream = false)
       spec.foldLeft(part) { case (df, (k, v)) =>
-        df.withColumn(k, org.apache.spark.sql.functions.lit(v))
+        df.withColumn(k,
+          if (v == HiveDefaultPartition) lit(null).cast("string") else lit(v))
       }
     }.reduce(_ unionByName _)
   }
@@ -1203,36 +907,19 @@ object ArrowIpc {
     val conf = spark.sparkContext.hadoopConfiguration
     require(files.nonEmpty, "ArrowIpc.readFiles: empty file list")
     val schema: StructType = {
-      import scala.jdk.CollectionConverters._
       val allocator = new RootAllocator(Long.MaxValue)
       val reader = openReader(conf, files.head, stream, allocator)
-      // large-offset layout variants map to the same Spark types (§1.2)
-      // and dictionary-encoded columns map to their VALUE types;
-      // batchBytes narrows/decodes the buffers to match
+      // every layout maps to its value type and the large-offset variants
+      // to the same Spark types (§1.2); batchBytes decodes/narrows the
+      // buffers to match
       try loud(files.head, stream) {
         val raw = reader.getVectorSchemaRoot.getSchema
-        requireNoNestedViewsInSchema(raw)
-        val withDict =
-          if (!hasDictionary(raw)) raw
-          else {
-            // dictionary batches arrive with the data (stream) or are
-            // footer-indexed (file); one batch load materializes them
-            reader.loadNextBatch()
-            new ArrowSchema(raw.getFields.asScala.map(decodedField(reader, _)).asJava)
-          }
-        val resolved =
-          if (!hasRee(withDict)) withDict
-          else new ArrowSchema(withDict.getFields.asScala
-            .map(f => if (isRee(f)) reeValueField(f) else f).asJava)
-        val unviewed =
-          if (!hasView(resolved)) resolved
-          else new ArrowSchema(resolved.getFields.asScala
-            .map(f => if (isView(f)) viewValueField(f) else f).asJava)
-        val unfixed =
-          if (!hasFsl(unviewed)) unviewed
-          else new ArrowSchema(unviewed.getFields.asScala
-            .map(f => if (isFsl(f)) fslValueField(f) else f).asJava)
-        Bridge.fromArrowSchema(narrowSchema(unfixed))
+        requireNoNestedViews(raw)
+        // dictionary batches arrive with the data (stream) or are
+        // footer-indexed (file); one batch load materializes them
+        if (raw.getFields.asScala.exists(_.getDictionary != null)) reader.loadNextBatch()
+        Bridge.fromArrowSchema(narrowSchema(new ArrowSchema(raw.getFields.asScala
+          .map(f => layoutOf(f).fold(f)(_.valueField(f, reader))).asJava)))
       } finally { reader.close(); allocator.close() }
     }
     val hconf = new SerializableHadoopConf(conf)

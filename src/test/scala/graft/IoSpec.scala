@@ -377,6 +377,15 @@ class IoSpec extends AnyFunSuite {
       Option(e.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
     assert(msg.contains("fixed_size_list") || msg.contains("declared fixed"),
       s"expected the ragged-row rejection, got: ${e.getMessage}")
+    // so does a NULL element inside a list
+    val holey = Seq((1L, Seq(Some(1.0f), None, Some(3.0f)))).toDF("id", "emb")
+    val e2 = intercept[Exception] {
+      graft.sources.ArrowIpc.writeFsl(holey, s"$dir/holey", fslCols = Map("emb" -> 3))
+    }
+    val msg2 = Option(e2.getMessage).getOrElse("") +
+      Option(e2.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
+    assert(msg2.contains("carries a NULL element"),
+      s"expected the in-list NULL rejection, got: ${e2.getMessage}")
   }
 
   test("writeViews emits a REAL string_view field; long and null values survive") {
@@ -454,6 +463,47 @@ class IoSpec extends AnyFunSuite {
       val expect = if (i % 5 == 0) null else "v" * (i % 20) + i.toString
       assert(back(i).getString(1) == expect, s"row $i")
     }
+    // the dictionary and fixed-size-list layouts cross the same boundaries
+    def emb(i: Int) = if (i % 5 == 0) None else Some(Seq.tabulate(3)(j => (3 * i + j).toFloat))
+    def cat(i: Int) = if (i % 7 == 0) None else Some(s"c${i % 4}")
+    val ldf = (0 until 40).map(i => (i.toLong, emb(i), cat(i))).toDF("id", "emb", "c")
+    graft.sources.ArrowIpc.writeDict(ldf.repartition(1), s"$dir/d",
+      dictCols = Seq("c"), batchSize = 7)
+    graft.sources.ArrowIpc.writeFsl(ldf.repartition(1), s"$dir/f",
+      fslCols = Map("emb" -> 3), batchSize = 7)
+    for (sub <- Seq("d", "f")) {
+      val got = graft.sources.ArrowIpc.read(spark, s"$dir/$sub").orderBy("id").collect()
+      assert(got.length == 40, sub)
+      (0 until 40).foreach { i =>
+        assert(Option(got(i).getSeq[Float](1)) == emb(i), s"$sub row $i")
+        assert(Option(got(i).getString(2)) == cat(i), s"$sub row $i")
+      }
+    }
+  }
+
+  test("writePartitioned keeps rows with timestamp and NULL partition keys") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ipc_wpart").toString
+    // a timestamp prints differently under String.valueOf and a string
+    // cast, and a NULL key matches no equality filter: both must still
+    // land in a leaf and read back
+    val df = Seq(
+      (1L, Some("2020-01-01 00:00:00"), Some("a")),
+      (2L, Some("2020-01-01 00:00:00"), None),
+      (3L, None, Some("b")),
+      (4L, None, None),
+      (5L, Some("2021-06-30 12:34:56"), Some("a b")))
+      .toDF("id", "ts", "k")
+      .select(col("id"), to_timestamp(col("ts")).as("t"), col("k"))
+    ArrowIpc.writePartitioned(df, dir, Seq("t", "k"))
+    val back = ArrowIpc.readPartitioned(spark, dir).orderBy("id").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), Option(r.getString(2)))).toSeq
+    assert(back == Seq(
+      (1L, Some("2020-01-01 00:00:00"), Some("a")),
+      (2L, Some("2020-01-01 00:00:00"), None),
+      (3L, None, Some("b")),
+      (4L, None, None),
+      (5L, Some("2021-06-30 12:34:56"), Some("a b"))))
   }
 
   test("IPC dictionary-encoded columns decode to value types, both formats") {

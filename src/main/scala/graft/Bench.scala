@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import scala.collection.mutable
 
@@ -31,7 +33,10 @@ import scala.collection.mutable
   * still dirty after 5 reps (`spread_dirty`) so a poisoned environment
   * self-identifies. The 1-minute load average at the start of each pass
   * is recorded (`load`) so a contended record can be told from a quiet
-  * one.
+  * one, and so are the Janino compiles each pass paid (`compiles`, and
+  * their wall ms in `compile_ms`): with the codegen cache sized to the
+  * registry ([[GraftSession]]), every pass after the first reads 0, and
+  * a pass that recompiled shows in the record.
   *
   * Output contract: stdout carries EXACTLY ONE JSON line, a compact
   * record that fits a 2000-char tail capture: {"metric", "value",
@@ -103,11 +108,18 @@ object Bench {
         try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
       } catch { case _: Throwable => -1.0 }
 
-    // interleaved passes: pass 1 of every query, then pass 2, …
-    val passLoads = (1 to reps).map { pass =>
+    /** Janino compiles so far in this JVM, and their total ms. */
+    def compiled(): (Long, Double) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
+
+    // interleaved passes: pass 1 of every query, then pass 2, …; each
+    // pass records the load at its start and the compiles it paid
+    val passes = (1 to reps).map { pass =>
       val load = loadAvg1m()
+      val (n0, ms0) = compiled()
       names.filterNot(failed).foreach(sample(_, pass))
-      load
+      val (n1, ms1) = compiled()
+      (load, n1 - n0, ms1 - ms0)
     }
 
     def median(xs: Seq[Double]): Double = {
@@ -160,11 +172,14 @@ object Bench {
       xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val totalS = num(total)
     val headS = num(headlineTotal)
-    val loads = passLoads.map(num).mkString("[", ",", "]")
+    def numArr(xs: Seq[Double]): String = xs.map(num).mkString("[", ",", "]")
+    val loads = numArr(passes.map(_._1))
+    val compiles =
+      s""""compiles":${passes.map(_._2).mkString("[", ",", "]")},"compile_ms":${numArr(passes.map(_._3))}"""
     // key order follows the declared contract: metric, value, unit,
     // queries first; extras (headline/minima/load diagnostics) after
     val fullRecord =
-      s"""{"metric":"total","value":$totalS,"unit":"sec","queries":${obj(med)},"headline_sec":$headS,"reps":$reps,"load":$loads,"spread_flagged":${strArr(spreadFlagged)},"spread_dirty":${strArr(stillFlagged)},"failed":${strArr(failed)},"queries_min":${obj(mins)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalS,"unit":"sec","queries":${obj(med)},"headline_sec":$headS,"reps":$reps,"load":$loads,$compiles,"spread_flagged":${strArr(spreadFlagged)},"spread_dirty":${strArr(stillFlagged)},"failed":${strArr(failed)},"queries_min":${obj(mins)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}"""
     // The full record (327 queries ≈ 16 KB) cannot fit a 2000-char
     // stdout tail-capture, so it goes to a file in the working directory.
     // A run of named queries leaves that file alone: a partial record
@@ -177,7 +192,7 @@ object Bench {
         System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
       }
     }
-    System.err.println(s"""[bench] summary {"headline_sec":$headS,"reps":$reps,"load":$loads,"spread_flagged":${strArr(spreadFlagged)},"spread_dirty":${strArr(stillFlagged)}}""")
+    System.err.println(s"""[bench] summary {"headline_sec":$headS,"reps":$reps,"load":$loads,$compiles,"spread_flagged":${strArr(spreadFlagged)},"spread_dirty":${strArr(stillFlagged)}}""")
     // stdout: EXACTLY ONE JSON line, the compact record
     val shown = if (args.isEmpty) med.filter { case (n, _) => headline(n) } else med
     println(s"""{"metric":"total","value":$totalS,"unit":"sec","queries":${obj(shown)},"failed":${strArr(failed)},"queries_n":${names.length},"ok_n":${ok.length},"sf":"$sfDir"}""")

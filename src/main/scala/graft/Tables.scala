@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 
 /** Loaders for the test-data star schema (TESTDATA.md).
   *
@@ -9,6 +13,20 @@ import org.apache.spark.sql.functions._
   * column pruning and partition pruning all apply downstream — the Spark
   * analogue of the reference's dataset-scan pushdown
   * (reference: cpp/src/arrow/dataset/scanner.h:59-78).
+  *
+  * Schemas are inferred once per fixture file, not once per read: a bare
+  * `spark.read.parquet` runs a footer job (~100 ms) on every call, and a
+  * query reads up to six tables. As in the reference, where a dataset's
+  * schema is inspected once at discovery and reused by every scan
+  * (`DatasetFactory::Inspect`), a loader reads with the cached
+  * `StructType`, so the relation and its plan are the ones inference
+  * would give. The cache holds one entry per canonical file path, stamped
+  * with the file's identity (inode), mtime and size and with the session's
+  * values of [[schemaConfs]], the confs Spark's parquet schema conversion
+  * reads; an entry whose stamp differs is re-inferred and replaced, so a
+  * rewritten file or a flipped conf is read with the schema it implies.
+  * A path that is a directory (a `ScaleUp` output, a partitioned table)
+  * is never cached: its files can change without its own stamp changing.
   */
 object Tables {
 
@@ -16,8 +34,39 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private def raw(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The SQL confs parquet-to-Spark schema conversion reads. */
+  private val schemaConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** canonical path -> (stamp, schema) */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], StructType)]()
+
+  private def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    cachedSchema(spark, path).fold(spark.read)(s => spark.read.schema(s)).parquet(path)
+  }
+
+  /** The schema of the parquet file at `path`, inferred once per stamp;
+    * None when `path` is not a regular file. */
+  private def cachedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val file = Paths.get(path)
+    if (!Files.isRegularFile(file)) None
+    else {
+      val attrs = Files.readAttributes(file, classOf[BasicFileAttributes])
+      val stamp = Seq(attrs.fileKey, attrs.lastModifiedTime, attrs.size) ++
+        schemaConfs.map(k => spark.conf.get(k))
+      val key = file.toRealPath().toString
+      Some(Option(schemas.get(key)).collect { case (`stamp`, s) => s }.getOrElse {
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, stamp -> s)
+        s
+      })
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = raw(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = raw(s, d, "nation")
@@ -57,6 +106,14 @@ object Tables {
       Math.floorDiv(micros, 1000000L),
       (Math.floorMod(micros, 1000000L) * 1000L).toInt,
       java.time.ZoneOffset.UTC))
+
+  /** `ts`, a TIMESTAMP_NTZ column as stored, within calendar `year`: a
+    * half-open range on the column itself, which reaches the parquet scan
+    * as a pushed filter where `year(ts) === year` cannot. */
+  def inYear(ts: Column, year: Int): Column = {
+    def jan1(y: Int) = java.time.LocalDate.of(y, 1, 1).toEpochDay * 86400L * 1000000L
+    ts >= ntzLit(jan1(year)) && ts < ntzLit(jan1(year + 1))
+  }
 
   /** Events with a pushdown-friendly event-time filter: the predicate is
     * applied to the column *as stored* (raw ns long, or NTZ timestamp

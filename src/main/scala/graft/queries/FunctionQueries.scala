@@ -493,7 +493,7 @@ object FunctionQueries {
     // rounded column costs a BigDecimal per value, so 21 columns over the
     // full table is pure sink time
     Tables.lineitem(s, d)
-      .filter(year(col("l_shipdate")) === 1995)
+      .filter(Tables.inYear(col("l_shipdate"), 1995))
       .orderBy(col("l_orderkey"), col("l_linenumber")) // sort-below-projection (q16 comment)
       .select(
       col("l_orderkey"), col("l_linenumber"),

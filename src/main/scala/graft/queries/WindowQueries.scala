@@ -24,7 +24,7 @@ object WindowQueries {
     val w = Window.partitionBy(col("l_returnflag"))
       .orderBy(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
     Tables.lineitem(s, d)
-      .filter(year(col("l_shipdate")) === 1995)
+      .filter(Tables.inYear(col("l_shipdate"), 1995))
       .select(
         col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice"),

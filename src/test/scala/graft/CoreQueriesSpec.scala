@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,6 +83,23 @@ class CoreQueriesSpec extends AnyFunSuite {
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("a query rerun after the interactive workload compiles no generated class") {
+    // the 19 queries of perfbench's interactive workload generate over
+    // 100 distinct classes, more than Spark's default codegen cache holds
+    val interactive = Seq(
+      "q01_filter_project", "q02_scalar_agg", "q03_group_agg",
+      "q04_inner_join", "q05_star_join", "q06_outer_joins", "q07_semi_anti",
+      "q09_sort_fetch", "q10_topk", "q12_value_counts", "q14_strings",
+      "q15b_temporal_ts", "q16_math", "q19_ranking", "q20_cumulative",
+      "q21_asof_join", "q22_window_agg", "q23b_pivot", "q24a_array_kernels")
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Bench.runOnce(spark, sf, "q03_group_agg")
+    interactive.foreach(Bench.runOnce(spark, sf, _))
+    val before = compiles
+    Bench.runOnce(spark, sf, "q03_group_agg")
+    assert(compiles - before == 0)
   }
 
   test("flagship query is deterministic across runs") {

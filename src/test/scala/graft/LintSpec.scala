@@ -97,9 +97,6 @@ class LintSpec extends AnyFunSuite {
     // guards over computed columns: the non-empty embedding check and
     // the word-count / ratio quality screens over split(text)
     Seq("unpushed-filter") -> Seq("ann_centroids", "pipeline_e2e"),
-    // the one-ship-year kernel coverage slice is year(l_shipdate) =
-    // 1995, which parquet cannot push (a date range could)
-    Seq("unpushed-filter") -> Seq("q16b_trig", "q19_ranking"),
     // the exact-quantile cutoff is a double; comparing the long
     // n_chars column to it casts the column
     Seq("unpushed-filter") -> Seq("pipeline_quality_cut")

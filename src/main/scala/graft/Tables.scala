@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 
 /** Loaders for the test-data star schema (TESTDATA.md).
@@ -27,6 +27,22 @@ import java.nio.file.attribute.BasicFileAttributes
   * rewritten file or a flipped conf is read with the schema it implies.
   * A path that is a directory (a `ScaleUp` output, a partitioned table)
   * is never cached: its files can change without its own stamp changing.
+  *
+  * Every file a registry query writes lives under one scratch root,
+  * [[scratchRoot]] = `${java.io.tmpdir}/graft_io` (`java.io.tmpdir` is
+  * `/tmp` by default on Linux), as the reference's dataset writer takes
+  * its output location once (`FileSystemDatasetWriteOptions::base_dir`,
+  * cpp/src/arrow/dataset/file_base.h:389-443). An output written from
+  * the data at `d` lives at `<root>/<scratchKey(d)>/<name>`
+  * (`scratch(d, name)`), so runs over two scale factors never share a
+  * file between one's write and its read-back, and the key is a
+  * directory, so a scan root's leaf name is the same on every checkout.
+  * A constant-content fixture — the same bytes whatever the data: q26g's
+  * and q26r's literal CSVs, q26j's literal frame — is unkeyed and lives
+  * at `<root>/<name>` (`scratch(name)`): its DuckDB oracle names the path
+  * in a string fixed when the registry is built, and every run writes
+  * the same bytes there. Files a test writes from its own literals are
+  * unkeyed for the same reason.
   */
 object Tables {
 
@@ -163,10 +179,32 @@ object Tables {
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
   }
 
+  /** Root of every file a registry query writes. */
+  val scratchRoot: String =
+    Paths.get(System.getProperty("java.io.tmpdir"), "graft_io").toString
+
+  /** Where output `name`, written from the data at `d`, lives. */
+  def scratch(d: String, name: String): String = s"$scratchRoot/${scratchKey(d)}/$name"
+
+  /** Where constant-content output `name` lives. */
+  def scratch(name: String): String = s"$scratchRoot/$name"
+
+  /** Write `text` to `path` through a temp sibling and an atomic rename,
+    * so a concurrent reader sees the old bytes or the new, never a
+    * truncated file; returns `path`. */
+  def writeText(path: String, text: String): String = {
+    val target = Paths.get(path)
+    Files.createDirectories(target.getParent)
+    val tmp = Files.createTempFile(target.getParent, s"${target.getFileName}.", ".tmp")
+    Files.write(tmp, text.getBytes("UTF-8"))
+    Files.move(tmp, target,
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    path
+  }
+
   /** Stable scratch-directory key for a scale-factor dir: the path plus
     * the lineitem file's (mtime, size), so regenerating the dataset at
-    * the same path invalidates any cached fixture layout derived from it.
-    * Shared by every query that persists a reusable /tmp fixture. */
+    * the same path invalidates any output derived from it. */
   def scratchKey(d: String): String = {
     val f = new java.io.File(s"$d/lineitem.parquet")
     val sig = s"$d|${f.lastModified}|${f.length}"
@@ -177,6 +215,12 @@ object Tables {
   def load(s: SparkSession, d: String, name: String): DataFrame = name match {
     case "events" => events(s, d)
     case n        => raw(s, d, n)
+  }
+
+  /** Delete `f` and, if it is a directory, everything under it. */
+  def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete()
   }
 
   /** Build-once immutable fixture directory: if `dir` lacks a `_SUCCESS`
@@ -190,10 +234,6 @@ object Tables {
   def immutableFixture(dir: String)(write: String => Unit): Unit = {
     val target = new java.io.File(dir)
     if (new java.io.File(target, "_SUCCESS").exists()) return
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
     val parent = target.getParentFile
     Option(parent.listFiles()).foreach(_.foreach { f =>
       if (f.getName.startsWith(s"${target.getName}.tmp_") &&

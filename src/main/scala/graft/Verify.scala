@@ -9,13 +9,7 @@ object Verify {
     // start from a clean output dir: a renamed/withdrawn capability must
     // not leave a stale result directory behind for the checker to grade
     val outRoot = new java.io.File(outDir)
-    if (outRoot.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(outRoot)
-    }
+    Tables.rm(outRoot)
     outRoot.mkdirs()
     // optional comma-separated subset for local iteration (the driver
     // sets nothing → full registry); oracle_sql.json is filtered to the

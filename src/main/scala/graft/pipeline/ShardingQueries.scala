@@ -283,7 +283,7 @@ object ShardingQueries {
     * read back in full. The oracle proves content preservation
     * row-for-row; CompactionSpec asserts the file-count mechanics. */
   private def compactQ(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_io/compact_${graft.Tables.scratchKey(d)}"
+    val dir = Tables.scratch(d, "compact")
     Compact.fragment(Tables.documents(s, d), dir, nFiles = 64)
     Compact.compact(s, dir, targetBytes = 64L * 1024 * 1024)
     s.read.parquet(dir)

@@ -49,8 +49,13 @@ object Lint {
       if (keys.isEmpty) "-"
       else keys.groupBy(identity).toSeq.sortBy(_._1)
         .map { case (k, v) => if (v.size == 1) k else s"$k×${v.size}" }.mkString(",")
+    // a part file Spark wrote (a glob read) is named by its directory:
+    // its own name is new on every write
+    def table(p: org.apache.hadoop.fs.Path): String =
+      if (p.getName.startsWith("part-")) p.getParent.getName
+      else p.getName.stripSuffix(".parquet")
     val scans = nodes.collect { case s: FileSourceScanExec =>
-      s.relation.location.rootPaths.map(_.getName.stripSuffix(".parquet")).mkString("+")
+      s.relation.location.rootPaths.map(table).mkString("+")
     }
     val joins = nodes.collect {
       case _: BroadcastHashJoinExec => "BHJ"

@@ -16,30 +16,6 @@ import org.apache.spark.sql.types._
   */
 object IngestQueries {
 
-  /** Q26e: CSV schema inference (ConvertOptions auto-detection,
-    * csv/options.h:79). Written WITH header, read back with
-    * `inferSchema` and no explicit schema — long/double/date/string all
-    * come back correctly typed (IngestSpec pins the inferred schema; the
-    * gate pins the values AND dtypes against the parquet originals). */
-  private def q26e(s: SparkSession, d: String): DataFrame = {
-    val out = "/tmp/graft_io/q26e_csv"
-    Tables.orders(s, d)
-      .select(
-        col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        to_date(col("o_orderdate")).as("o_date"))
-      .write.mode("overwrite").option("header", "true").csv(out)
-    s.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(out)
-      .orderBy(col("o_orderkey"))
-  }
-
-  private val q26eSql =
-    """SELECT o_orderkey, o_orderstatus, o_totalprice,
-      |  CAST(o_orderdate AS DATE) AS o_date
-      |FROM orders ORDER BY o_orderkey""".stripMargin
-
   /** Q26f: non-default delimiter + headerless + custom null marker +
     * custom date format round-trip (reference ParseOptions.delimiter,
     * ConvertOptions.null_values, csv/options.h:42-120). The planted nulls
@@ -47,7 +23,7 @@ object IngestQueries {
     * directions; any option mis-parse surfaces as a value difference
     * against the parquet originals. */
   private def q26f(s: SparkSession, d: String): DataFrame = {
-    val out = "/tmp/graft_io/q26f_csv"
+    val out = Tables.scratch(d, "q26f_csv")
     Tables.orders(s, d)
       .select(
         col("o_orderkey"),
@@ -73,13 +49,14 @@ object IngestQueries {
       .orderBy(col("o_orderkey"))
   }
 
-  /** Oracle against the parquet table, not the written files: the files'
-    * content is scale-factor-dependent, and a bench run at another SF
-    * between Verify and the oracle pass would clobber them (the
-    * fixture-based q26g keeps the DuckDB-reads-Spark's-files parity
-    * check — its bytes are identical on every run). The round-trip
-    * equality here still proves the delimiter/null-marker/date-format
-    * options: any mis-parse would surface as a value difference. */
+  /** Oracle against the parquet table, not the written files: the files
+    * live under the scratch key of the data they were written from, a
+    * directory the oracle string, fixed when the registry is built,
+    * cannot name (the fixture-based q26g keeps the
+    * DuckDB-reads-Spark's-files parity check — its bytes are identical
+    * on every run). The round-trip equality here still proves the
+    * delimiter/null-marker/date-format options: any mis-parse would
+    * surface as a value difference. */
   private val q26fSql =
     """SELECT o_orderkey,
       |  nullif(o_orderpriority, '3-MEDIUM') AS prio,
@@ -103,12 +80,7 @@ object IngestQueries {
     "5|epsilon|5.00|3|2024/07/04",
   ).mkString("", "\n", "\n")
 
-  private def writeMessyFixture(): String = {
-    val path = java.nio.file.Paths.get("/tmp/graft_io/q26g_messy.csv")
-    java.nio.file.Files.createDirectories(path.getParent)
-    java.nio.file.Files.write(path, messyCsv.getBytes("UTF-8"))
-    path.toString
-  }
+  private val messyPath = Tables.scratch("q26g_messy.csv")
 
   /** Q26g: per-column type override + comment skipping + quote/escape +
     * null markers on a hand-written fixture (reference
@@ -119,7 +91,7 @@ object IngestQueries {
     * 1234.50 parse exactly); surfaced as double because the gate's
     * comparator has no decimal dtype. */
   private def q26g(s: SparkSession, d: String): DataFrame = {
-    val path = writeMessyFixture()
+    val path = Tables.writeText(messyPath, messyCsv)
     val schema = StructType(Seq(
       StructField("id", LongType),
       StructField("name", StringType),
@@ -140,8 +112,8 @@ object IngestQueries {
   }
 
   private val q26gSql =
-    """SELECT id, name, CAST(price AS DOUBLE) AS price, qty, day
-      |FROM read_csv('/tmp/graft_io/q26g_messy.csv',
+    s"""SELECT id, name, CAST(price AS DOUBLE) AS price, qty, day
+      |FROM read_csv('$messyPath',
       |  delim = '|', header = true, skip = 2, nullstr = 'NA',
       |  quote = '"', escape = '"', dateformat = '%Y/%m/%d',
       |  types = {'id': 'BIGINT', 'price': 'DECIMAL(12,2)',
@@ -154,7 +126,7 @@ object IngestQueries {
     * no date literal, so the date column round-trips as string and is
     * cast on output by both engines). */
   private def q26h(s: SparkSession, d: String): DataFrame = {
-    val out = "/tmp/graft_io/q26h_json"
+    val out = Tables.scratch(d, "q26h_json")
     Tables.orders(s, d)
       .select(
         col("o_orderkey"),
@@ -173,6 +145,8 @@ object IngestQueries {
       |  CAST(o_orderdate AS DATE) AS o_date
       |FROM orders ORDER BY o_orderkey""".stripMargin
 
+  private val q26jDir = Tables.scratch("q26j_csv_write")
+
   /** Q26j: CSV WRITE options (reference `WriteOptions` —
     * csv/options.h:191: quoting style, null string, header, delimiter).
     * A deterministic literal frame stressing every quoting edge (embedded
@@ -184,7 +158,6 @@ object IngestQueries {
     * files, so all three views must agree). */
   private def q26j(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = "/tmp/graft_io/q26j_csv_write"
     val rows = Seq(
       (1L, Some("plain"), Some(1.5)),
       (2L, Some("comma, inside"), Some(-2.25)),
@@ -195,7 +168,7 @@ object IngestQueries {
     // the frame is a constant literal, so the written bytes are identical
     // on every run — build-once + atomic rename means a concurrent
     // verify/bench process can never glob a half-deleted directory
-    Tables.immutableFixture(out) { tmp =>
+    Tables.immutableFixture(q26jDir) { tmp =>
       rows.toDF("id", "note", "val")
         .coalesce(1) // one part file: byte-stable output for the oracle glob
         .sortWithinPartitions("id")
@@ -218,13 +191,13 @@ object IngestQueries {
       .option("nullValue", "__NULL__")
       .option("multiLine", "true") // the quoted embedded newline
       .schema(schema)
-      .csv(out)
+      .csv(q26jDir)
       .orderBy(col("id"))
   }
 
   private val q26jSql =
-    """SELECT id, note, val
-      |FROM read_csv('/tmp/graft_io/q26j_csv_write/*.csv',
+    s"""SELECT id, note, val
+      |FROM read_csv('$q26jDir/*.csv',
       |  header = true, quote = '"', escape = '"', nullstr = '__NULL__',
       |  types = {'id': 'BIGINT', 'note': 'VARCHAR', 'val': 'DOUBLE'})
       |ORDER BY id""".stripMargin
@@ -238,7 +211,7 @@ object IngestQueries {
     * (oracle = the documents table itself). IngestSpec asserts the
     * complementary default: WITHOUT the option the read fails loudly. */
   private def corruptDir(s: SparkSession, d: String): String = {
-    val out = s"/tmp/graft_io/q26k_corrupt_${Tables.scratchKey(d)}"
+    val out = Tables.scratch(d, "q26k_corrupt")
     Tables.immutableFixture(out) { tmp =>
       Tables.documents(s, d).write.mode("overwrite").parquet(tmp)
       java.nio.file.Files.write(
@@ -271,12 +244,7 @@ object IngestQueries {
     "4|last|simple|2.0",
   ).mkString("", "\n", "\n")
 
-  private def writeMultilineFixture(): String = {
-    val path = java.nio.file.Paths.get("/tmp/graft_io/q26r_multiline.csv")
-    java.nio.file.Files.createDirectories(path.getParent)
-    java.nio.file.Files.write(path, multilineCsv.getBytes("UTF-8"))
-    path.toString
-  }
+  private val multilinePath = Tables.scratch("q26r_multiline.csv")
 
   /** Q26r: quoted MULTILINE records (reference ParseOptions
     * newlines_in_values, csv/options.h:61) — `multiLine = true` is what
@@ -286,7 +254,7 @@ object IngestQueries {
     * the DEFAULT line-split read on this fixture fails under FAILFAST
     * rather than silently shredding records. */
   private def q26r(s: SparkSession, d: String): DataFrame = {
-    val path = writeMultilineFixture()
+    val path = Tables.writeText(multilinePath, multilineCsv)
     val schema = StructType(Seq(
       StructField("id", LongType),
       StructField("title", StringType),
@@ -303,8 +271,8 @@ object IngestQueries {
   }
 
   private val q26rSql =
-    """SELECT id, title, body, score
-      |FROM read_csv('/tmp/graft_io/q26r_multiline.csv',
+    s"""SELECT id, title, body, score
+      |FROM read_csv('$multilinePath',
       |  delim = '|', header = true, quote = '"', escape = '"',
       |  nullstr = 'NA',
       |  types = {'id': 'BIGINT', 'title': 'VARCHAR',
@@ -312,7 +280,8 @@ object IngestQueries {
       |ORDER BY id""".stripMargin
 
   val caps: Seq[Capability] = Seq(
-    Capability("q26e_csv_infer", "CSV schema inference round-trip", q26e, Some(q26eSql)),
+    Capability("q26e_csv_infer", "CSV schema inference round-trip", NestedIOQueries.q26e,
+      Some(NestedIOQueries.q26Sql)),
     Capability("q26f_csv_options", "CSV delimiter/null-marker/date-format parity on shared files",
       q26f, Some(q26fSql)),
     Capability("q26g_csv_messy", "messy CSV: comments, quotes, per-column overrides",

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Capability, Tables}
+import graft.sources.ArrowIpc
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -137,13 +138,6 @@ object NestedIOQueries {
       |  array_to_string(list_sort(list_distinct(a1)), ',') AS sorted_words
       |FROM w ORDER BY doc_id""".stripMargin
 
-  /** Scale-factor-keyed partitioned layout owned by q25 alone: q25's
-    * write (the gated capability) always refreshes it, and nothing else
-    * reads it — sharing it with q25b raced q25's `mode("overwrite")`
-    * delete-then-write against q25b's glob read. */
-  private def q25Layout(d: String): String =
-    s"/tmp/graft_io/q25_roundtrip_${Tables.scratchKey(d)}"
-
   /** Build-once immutable partitioned fixture (see
     * [[graft.Tables.immutableFixture]] for the swap protocol). */
   private def immutablePartitionedFixture(
@@ -157,7 +151,9 @@ object NestedIOQueries {
     * write, cpp/src/arrow/dataset/file_base.h:389-443). A filtered re-read
     * only touches the matching partition directory (partition pruning). */
   private def q25(s: SparkSession, d: String): DataFrame = {
-    val out = q25Layout(d)
+    // q25 alone owns this layout: sharing it with q25b raced q25's
+    // delete-then-write against q25b's glob read
+    val out = Tables.scratch(d, "q25_roundtrip")
     Tables.lineitem(s, d)
       .write.mode("overwrite")
       .partitionBy("l_returnflag")
@@ -182,7 +178,7 @@ object NestedIOQueries {
     * Gated on content identity with q25's oracle; IoSpec asserts the
     * per-file row bound actually holds on disk. */
   private def q25i(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q25i_maxrows_${Tables.scratchKey(d)}"
+    val out = Tables.scratch(d, "q25i_maxrows")
     // the knob under test splits by ROW COUNT, so the gate only needs the
     // columns its oracle reads — writing the full table would re-measure
     // q25's IO volume, not the cap
@@ -204,9 +200,9 @@ object NestedIOQueries {
     * discovery (leaf files are globbed directly, bypassing discovery). */
   private def q25b(s: SparkSession, d: String): DataFrame = {
     // q25b owns its layout (built once, then immutable) — reusing q25's
-    // raced its overwrite; an extra lineitem write per fresh /tmp is
-    // cheaper than a FileNotFound flake
-    val out = s"/tmp/graft_io/q25b_filename_${Tables.scratchKey(d)}"
+    // raced its overwrite; an extra lineitem write per fresh scratch
+    // tree is cheaper than a FileNotFound flake
+    val out = Tables.scratch(d, "q25b_filename")
     immutablePartitionedFixture(Tables.lineitem(s, d), out, "l_returnflag")
     s.read.parquet(s"$out/l_returnflag=*/*.parquet")
       .withColumn("flag",
@@ -225,7 +221,7 @@ object NestedIOQueries {
     * directories with disjoint value columns merge into one frame with
     * nulls where a column is absent. */
   private def q25c(s: SparkSession, d: String): DataFrame = {
-    val base = s"/tmp/graft_io/q25c_merge_${Tables.scratchKey(d)}"
+    val base = Tables.scratch(d, "q25c_merge")
     Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
       .write.mode("overwrite").parquet(s"$base/a")
     Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"))
@@ -246,7 +242,7 @@ object NestedIOQueries {
     * Spark the same plan both writes and continues: write the frame, then
     * return it; the written copy is verified to round-trip. */
   private def q25d(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q25d_tee_${Tables.scratchKey(d)}"
+    val out = Tables.scratch(d, "q25d_tee")
     val df = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_totalprice"))
     df.write.mode("overwrite").parquet(out) // the tee'd copy
@@ -272,30 +268,24 @@ object NestedIOQueries {
     // join reads co-located buckets shuffle-free. Table names carry the
     // scratch key, so regenerated source data gets fresh tables while
     // repeated invocations in one session (bench passes) reuse the
-    // layout instead of re-bucketing per run.
+    // layout instead of re-bucketing per run. Each table's files live in
+    // the scratch tree (an external table), not the working directory's
+    // warehouse, so a later JVM's overwrite simply replaces them.
     val key = Tables.scratchKey(d)
     val li = s"graft_q25e_li_$key"
     val ord = s"graft_q25e_ord_$key"
     q25eLock.synchronized {
       if (!s.catalog.tableExists(li) || !s.catalog.tableExists(ord)) {
-        // drop both the catalog entry AND the physical location: a fresh
-        // session's metastore doesn't know about a previous JVM's managed
-        // table, and saveAsTable refuses an orphaned warehouse directory
-        Seq(li, ord).foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
         Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"))
           .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .mode("overwrite").saveAsTable(li)
+          .mode("overwrite").option("path", Tables.scratch(d, "q25e_li"))
+          .saveAsTable(li)
         Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"))
           .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .mode("overwrite").saveAsTable(ord)
+          .mode("overwrite").option("path", Tables.scratch(d, "q25e_ord"))
+          .saveAsTable(ord)
       }
     }
     s.table(li)
@@ -322,8 +312,8 @@ object NestedIOQueries {
   private def q25f(s: SparkSession, d: String): DataFrame = {
     val proj = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    val zstdDir = "/tmp/graft_io/q25f_zstd"
-    val snappyDir = "/tmp/graft_io/q25f_snappy"
+    val zstdDir = Tables.scratch(d, "q25f_zstd")
+    val snappyDir = Tables.scratch(d, "q25f_snappy")
     proj.write.mode("overwrite").option("compression", "zstd").parquet(zstdDir)
     proj.write.mode("overwrite").option("compression", "snappy").parquet(snappyDir)
     val zstd = s.read.parquet(zstdDir)
@@ -350,7 +340,7 @@ object NestedIOQueries {
     * match the plain-table oracle; IoSpec asserts the layout property
     * itself (pairwise-disjoint per-file key ranges) and the pushdown. */
   private def q25g(s: SparkSession, d: String): DataFrame = {
-    val out = q25gLayout(d)
+    val out = Tables.scratch(d, "q25g_sorted")
     Tables.immutableFixture(out) { tmp =>
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
@@ -365,10 +355,6 @@ object NestedIOQueries {
         graft.Det.dsum(col("l_quantity")).as("sum_qty"),
         graft.Det.dsum(col("l_extendedprice")).as("sum_price"))
   }
-
-  /** Layout dir shared with IoSpec's disjoint-ranges assertion. */
-  def q25gLayout(d: String): String =
-    s"/tmp/graft_io/q25g_sorted_${Tables.scratchKey(d)}"
 
   private val q25gSql =
     s"""SELECT COUNT(*) AS n,
@@ -387,7 +373,7 @@ object NestedIOQueries {
     * plain-table oracle; IoSpec asserts the clustering property (mean
     * per-file box area ≪ the global box). */
   private def q25h(s: SparkSession, d: String): DataFrame = {
-    val out = q25hLayout(d)
+    val out = Tables.scratch(d, "q25h_zorder")
     Tables.immutableFixture(out) { tmp =>
       Tables.lineitem(s, d)
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
@@ -406,82 +392,121 @@ object NestedIOQueries {
         graft.Det.dsum(col("l_quantity")).as("sum_qty"))
   }
 
-  /** Layout dir shared with IoSpec's bounding-box assertion. */
-  def q25hLayout(d: String): String =
-    s"/tmp/graft_io/q25h_zorder_${Tables.scratchKey(d)}"
-
   private val q25hSql =
     s"""SELECT COUNT(*) AS n,
        |  ${graft.Det.sqlSum("l_quantity")} AS sum_qty
        |FROM lineitem
        |WHERE l_partkey BETWEEN 50 AND 150 AND l_suppkey BETWEEN 2 AND 8""".stripMargin
 
-  /** Q26a: CSV round-trip with explicit schema (reference CSV
-    * reader/writer, cpp/src/arrow/csv/). Doubles survive because Spark
-    * writes shortest round-trippable representations. */
-  private def q26a(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_csv"
-    Tables.orders(s, d)
-      .select(
-        col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        to_date(col("o_orderdate")).as("o_date"))
-      .write.mode("overwrite").option("header", "true").csv(out)
-    val schema = StructType(Seq(
-      StructField("o_orderkey", LongType),
-      StructField("o_orderstatus", StringType),
-      StructField("o_totalprice", DoubleType),
-      StructField("o_date", DateType)))
-    s.read.option("header", "true").schema(schema).csv(out)
-      .orderBy(col("o_orderkey"))
-  }
+  /** The frame every `orders` format round trip below writes. */
+  private def roundTripFrame(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select(
+      col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
+      to_date(col("o_orderdate")).as("o_date"))
 
-  private val q26Sql =
+  /** [[roundTripFrame]]'s schema, for readers whose format does not
+    * carry one. */
+  private val roundTripSchema = StructType(Seq(
+    StructField("o_orderkey", LongType),
+    StructField("o_orderstatus", StringType),
+    StructField("o_totalprice", DoubleType),
+    StructField("o_date", DateType)))
+
+  /** One `orders` format round trip: `write` [[roundTripFrame]] to the
+    * query's scratch output `name`, `read` it back, order by key. Every
+    * row of the table below is gated by [[q26Sql]]. */
+  private def roundTrip(name: String)(write: (DataFrame, String) => Unit)(
+      read: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
+    (s, d) => {
+      val out = Tables.scratch(d, name)
+      write(roundTripFrame(s, d), out)
+      read(s, out).orderBy(col("o_orderkey"))
+    }
+
+  private[queries] val q26Sql =
     """SELECT o_orderkey, o_orderstatus, o_totalprice,
       |  CAST(o_orderdate AS DATE) AS o_date
       |FROM orders ORDER BY o_orderkey""".stripMargin
 
+  /** Q26a: CSV round-trip with explicit schema (reference CSV
+    * reader/writer, cpp/src/arrow/csv/). Doubles survive because Spark
+    * writes shortest round-trippable representations. */
+  private val q26a = roundTrip("q26_csv")(
+    _.write.mode("overwrite").option("header", "true").csv(_))(
+    _.read.option("header", "true").schema(roundTripSchema).csv(_))
+
   /** Q26b: line-delimited JSON round-trip (reference JSON reader,
     * cpp/src/arrow/json/). */
-  private def q26b(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_json"
-    Tables.orders(s, d)
-      .select(
-        col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        to_date(col("o_orderdate")).as("o_date"))
-      .write.mode("overwrite").json(out)
-    val schema = StructType(Seq(
-      StructField("o_orderkey", LongType),
-      StructField("o_orderstatus", StringType),
-      StructField("o_totalprice", DoubleType),
-      StructField("o_date", DateType)))
-    s.read.schema(schema).json(out).orderBy(col("o_orderkey"))
-  }
+  private val q26b = roundTrip("q26_json")(
+    _.write.mode("overwrite").json(_))(
+    _.read.schema(roundTripSchema).json(_))
 
   /** Q26c: ORC round-trip (reference ORC adapter,
     * cpp/src/arrow/adapters/orc/). */
-  private def q26c(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_orc"
-    Tables.orders(s, d)
-      .select(
-        col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        to_date(col("o_orderdate")).as("o_date"))
-      .write.mode("overwrite").orc(out)
-    s.read.orc(out).orderBy(col("o_orderkey"))
-  }
+  private val q26c = roundTrip("q26_orc")(_.write.mode("overwrite").orc(_))(_.read.orc(_))
 
   /** Q26d: Arrow IPC (Feather v2) round-trip via the bundled arrow-java
     * (reference: cpp/src/arrow/ipc/ — the format Spark lacks natively;
     * graft.sources.ArrowIpc adds it, one file per partition). */
-  private def q26d(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc"
-    graft.sources.ArrowIpc.write(
-      Tables.orders(s, d)
-        .select(
-          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-          to_date(col("o_orderdate")).as("o_date")),
-      out)
-    graft.sources.ArrowIpc.read(s, out).orderBy(col("o_orderkey"))
-  }
+  private val q26d = roundTrip("q26_ipc")(ArrowIpc.write(_, _))(ArrowIpc.read)
+
+  /** Q26i: Arrow IPC STREAM-format round-trip (reference
+    * RecordBatchStreamReader/Writer, cpp/src/arrow/ipc/reader.h:74,
+    * writer.h:143) — the footerless pipe/socket framing, same oracle as
+    * the file format. */
+  private val q26i = roundTrip("q26_ipc_stream")(ArrowIpc.writeStream(_, _))(ArrowIpc.readStream)
+
+  /** Q26l: compressed Arrow IPC round-trip (reference
+    * IpcWriteOptions::codec, cpp/src/arrow/ipc/options.h:118-124): the
+    * same projection written with zstd body-buffer compression must read
+    * back identically — the reader decodes from the per-batch
+    * compression header with no caller-side hint. Same oracle as q26d;
+    * IoSpec additionally covers lz4 and asserts zstd bytes < plain. */
+  private val q26l = roundTrip("q26_ipc_zstd")(ArrowIpc.write(_, _, codec = "zstd"))(ArrowIpc.read)
+
+  /** Q26m: DICTIONARY-ENCODED Arrow IPC round-trip — the write half of
+    * the reference's categorical transport (`dictionary_encode` is the
+    * reference default for categoricals; read-side decode is q26d's
+    * machinery). The status column ships as an int32 index vector plus a
+    * per-file dictionary batch; reading it back must reproduce the
+    * values exactly. Same oracle as q26d; IoSpec additionally asserts
+    * the written file REALLY carries a dictionary-encoded field and that
+    * high-cardinality columns are rejected. */
+  private val q26m = roundTrip("q26_ipc_dict")(
+    ArrowIpc.writeDict(_, _, dictCols = Seq("o_orderstatus")))(ArrowIpc.read)
+
+  /** Q26n: RUN-END-ENCODED Arrow IPC round-trip — the write half of the
+    * reference's second physical compression layout (`run_end_encode`
+    * kernel output; read-side expansion is q26d's machinery). The status
+    * column is sorted within partitions first so runs actually form (the
+    * reference applies the kernel to sorted output the same way), ships
+    * as (run_ends int32, values utf8) children, and must read back
+    * value-identical. Same oracle as q26d; IoSpec asserts the on-disk
+    * field is REALLY run-end encoded with far fewer stored values than
+    * logical rows. */
+  private val q26n = roundTrip("q26_ipc_ree")((df, out) =>
+    ArrowIpc.writeRee(df.sortWithinPartitions(col("o_orderstatus")), out,
+      reeCols = Seq("o_orderstatus")))(ArrowIpc.read)
+
+  /** Q26o: VIEW-LAYOUT Arrow IPC round-trip — the write half of the
+    * string_view transport ([[ArrowIpc.writeViews]]; read
+    * decode is the view half of q26d's machinery): the status column
+    * ships as STRING_VIEW (type id 39, the Arrow C++ >= 14 default
+    * string layout) and must read back value-identical. Same oracle as
+    * q26d; IoSpec additionally asserts the on-disk field REALLY carries
+    * the Utf8View type. */
+  private val q26o = roundTrip("q26_ipc_view")(
+    ArrowIpc.writeViews(_, _, viewCols = Seq("o_orderstatus")))(ArrowIpc.read)
+
+  /** Q26e: CSV schema inference (ConvertOptions auto-detection,
+    * csv/options.h:79), registered with the ingest battery
+    * ([[IngestQueries]]). Written WITH header, read back with
+    * `inferSchema` and no explicit schema — long/double/date/string all
+    * come back correctly typed (IngestSpec pins the inferred schema; the
+    * gate pins the values AND dtypes against the parquet originals). */
+  private[queries] val q26e = roundTrip("q26e_csv")(
+    _.write.mode("overwrite").option("header", "true").csv(_))(
+    _.read.option("header", "true").option("inferSchema", "true").csv(_))
 
   /** Q26s: MAP-layout Arrow IPC round-trip — the reference's
     * `MapType`/`MapArray` (cpp/src/arrow/array/array_nested.h): a
@@ -492,13 +517,13 @@ object NestedIOQueries {
     * mangled (offsets, dictionary of the entries struct) cannot hash
     * back. */
   private def q26s(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc_map_${Tables.scratchKey(d)}"
-    graft.sources.ArrowIpc.write(
+    val out = Tables.scratch(d, "q26_ipc_map")
+    ArrowIpc.write(
       Tables.orders(s, d).select(col("o_orderkey"),
         map(lit("prio"), col("o_orderpriority"),
           lit("status"), col("o_orderstatus")).as("m")),
       out)
-    graft.sources.ArrowIpc.read(s, out)
+    ArrowIpc.read(s, out)
       .select(col("o_orderkey"), explode(col("m")))
       .select(col("o_orderkey"), col("key").as("k"), col("value").as("v"))
       .orderBy(col("o_orderkey"), col("k"))
@@ -519,68 +544,17 @@ object NestedIOQueries {
     * oracle is the source table itself (partition values re-typed as
     * the strings the path carries). */
   private def q26p(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc_part_${Tables.scratchKey(d)}"
+    val out = Tables.scratch(d, "q26_ipc_part")
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"), col("lang"))
-    graft.sources.ArrowIpc.writePartitioned(docs, out, Seq("lang"))
-    graft.sources.ArrowIpc.readPartitioned(s, out)
+    ArrowIpc.writePartitioned(docs, out, Seq("lang"))
+    ArrowIpc.readPartitioned(s, out)
       .select(col("doc_id"), col("n_chars"), col("lang"))
       .orderBy(col("doc_id"))
   }
 
   private val q26pSql =
     """SELECT doc_id, n_chars, lang FROM documents ORDER BY doc_id""".stripMargin
-
-  /** Q26i: Arrow IPC STREAM-format round-trip (reference
-    * RecordBatchStreamReader/Writer, cpp/src/arrow/ipc/reader.h:74,
-    * writer.h:143) — the footerless pipe/socket framing, same oracle as
-    * the file format. */
-  private def q26i(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc_stream_${Tables.scratchKey(d)}"
-    graft.sources.ArrowIpc.writeStream(
-      Tables.orders(s, d)
-        .select(
-          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-          to_date(col("o_orderdate")).as("o_date")),
-      out)
-    graft.sources.ArrowIpc.readStream(s, out).orderBy(col("o_orderkey"))
-  }
-
-  /** Q26l: compressed Arrow IPC round-trip (reference
-    * IpcWriteOptions::codec, cpp/src/arrow/ipc/options.h:118-124): the
-    * same projection written with zstd body-buffer compression must read
-    * back identically — the reader decodes from the per-batch
-    * compression header with no caller-side hint. Same oracle as q26d;
-    * IoSpec additionally covers lz4 and asserts zstd bytes < plain. */
-  private def q26l(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc_zstd_${Tables.scratchKey(d)}"
-    graft.sources.ArrowIpc.write(
-      Tables.orders(s, d)
-        .select(
-          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-          to_date(col("o_orderdate")).as("o_date")),
-      out, codec = "zstd")
-    graft.sources.ArrowIpc.read(s, out).orderBy(col("o_orderkey"))
-  }
-
-  /** Q26m: DICTIONARY-ENCODED Arrow IPC round-trip — the write half of
-    * the reference's categorical transport (`dictionary_encode` is the
-    * reference default for categoricals; read-side decode is q26d's
-    * machinery). The status column ships as an int32 index vector plus a
-    * per-file dictionary batch; reading it back must reproduce the
-    * values exactly. Same oracle as q26d; IoSpec additionally asserts
-    * the written file REALLY carries a dictionary-encoded field and that
-    * high-cardinality columns are rejected. */
-  private def q26m(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc_dict_${Tables.scratchKey(d)}"
-    graft.sources.ArrowIpc.writeDict(
-      Tables.orders(s, d)
-        .select(
-          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-          to_date(col("o_orderdate")).as("o_date")),
-      out, dictCols = Seq("o_orderstatus"))
-    graft.sources.ArrowIpc.read(s, out).orderBy(col("o_orderkey"))
-  }
 
   /** Q25j: DYNAMIC partition overwrite — the reference dataset writer's
     * `ExistingDataBehavior::kDeleteMatching` (file_base.h:404-432: replace
@@ -591,7 +565,7 @@ object NestedIOQueries {
     * would delete N/R (missing rows), append would double A (extra
     * rows), and only delete-matching reproduces the full table. */
   private def q25j(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q25j_dynover_${Tables.scratchKey(d)}"
+    val out = Tables.scratch(d, "q25j_dynover")
     val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_returnflag"))
     li.filter(col("l_returnflag") =!= "A" || col("l_orderkey") % 2 === 0)
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
@@ -619,7 +593,7 @@ object NestedIOQueries {
     * bloom really exists for the declared column only, and that a point
     * read returns exactly the matching rows. */
   private def q25k(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q25k_bloom_${Tables.scratchKey(d)}"
+    val out = Tables.scratch(d, "q25k_bloom")
     Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_returnflag"))
       .write.mode("overwrite")
@@ -637,60 +611,21 @@ object NestedIOQueries {
       .orderBy(col("l_returnflag"))
   }
 
-  /** Q26n: RUN-END-ENCODED Arrow IPC round-trip — the write half of the
-    * reference's second physical compression layout (`run_end_encode`
-    * kernel output; read-side expansion is q26d's machinery). The status
-    * column is sorted within partitions first so runs actually form (the
-    * reference applies the kernel to sorted output the same way), ships
-    * as (run_ends int32, values utf8) children, and must read back
-    * value-identical. Same oracle as q26d; IoSpec asserts the on-disk
-    * field is REALLY run-end encoded with far fewer stored values than
-    * logical rows. */
-  private def q26n(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc_ree_${Tables.scratchKey(d)}"
-    graft.sources.ArrowIpc.writeRee(
-      Tables.orders(s, d)
-        .select(
-          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-          to_date(col("o_orderdate")).as("o_date"))
-        .sortWithinPartitions(col("o_orderstatus")),
-      out, reeCols = Seq("o_orderstatus"))
-    graft.sources.ArrowIpc.read(s, out).orderBy(col("o_orderkey"))
-  }
-
-  /** Q26o: VIEW-LAYOUT Arrow IPC round-trip — the write half of the
-    * string_view transport ([[graft.sources.ArrowIpc.writeViews]]; read
-    * decode is the view half of q26d's machinery): the status column
-    * ships as STRING_VIEW (type id 39, the Arrow C++ >= 14 default
-    * string layout) and must read back value-identical. Same oracle as
-    * q26d; IoSpec additionally asserts the on-disk field REALLY carries
-    * the Utf8View type. */
-  private def q26o(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc_view_${Tables.scratchKey(d)}"
-    graft.sources.ArrowIpc.writeViews(
-      Tables.orders(s, d)
-        .select(
-          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-          to_date(col("o_orderdate")).as("o_date")),
-      out, viewCols = Seq("o_orderstatus"))
-    graft.sources.ArrowIpc.read(s, out).orderBy(col("o_orderkey"))
-  }
-
   /** Q26q: fixed-size-list Arrow IPC round-trip — the embedding column
     * ships as `fixed_size_list<float, 64>` (type id 32), the layout
     * reference consumers expect for embeddings (and the one Spark's own
-    * Arrow bridge rejects outright — [[graft.sources.ArrowIpc.writeFsl]]
+    * Arrow bridge rejects outright — [[ArrowIpc.writeFsl]]
     * writes it, [[graft.sources.ArrowIpc]]'s read boundary expands the
     * implicit offsets back). Gate: per-row dim + first/last element +
     * scalars vs the source table read directly by DuckDB; IoSpec cracks
     * the file and asserts the on-disk field REALLY is FixedSizeList and
     * full arrays survive value-identical. */
   private def q26q(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_io/q26_ipc_fsl_${Tables.scratchKey(d)}"
-    graft.sources.ArrowIpc.writeFsl(
+    val out = Tables.scratch(d, "q26_ipc_fsl")
+    ArrowIpc.writeFsl(
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding"), col("label")),
       out, fslCols = Map("embedding" -> 64))
-    graft.sources.ArrowIpc.read(s, out)
+    ArrowIpc.read(s, out)
       .select(col("vec_id"), col("label"),
         size(col("embedding")).cast("long").as("dim"),
         element_at(col("embedding"), 1).as("e_first"),
@@ -811,7 +746,7 @@ object NestedIOQueries {
     * COUNT(DISTINCT) — the capability gated is the sketch round-trip and
     * merge, not an approximation tolerance. */
   private def q39(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_io/q39_sketches_${Tables.scratchKey(d)}"
+    val dir = Tables.scratch(d, "q39_sketches")
     Tables.documents(s, d)
       .groupBy(col("source"))
       .agg(hll_sketch_agg(col("doc_id"), lit(14)).as("sk"))

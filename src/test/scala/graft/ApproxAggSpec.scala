@@ -114,8 +114,7 @@ class ApproxAggSpec extends AnyFunSuite {
       "(lgConfigK must keep the sketch in exact sparse mode at this cardinality)")
     // the persisted sketch column is binary — the mergeable state really
     // round-tripped through parquet
-    val persisted = spark.read.parquet(
-      s"/tmp/graft_io/q39_sketches_${Tables.scratchKey(TestSpark.sf)}")
+    val persisted = spark.read.parquet(Tables.scratch(TestSpark.sf, "q39_sketches"))
     assert(persisted.schema("sk").dataType ==
       org.apache.spark.sql.types.BinaryType)
     assert(persisted.count() == Tables.documents(spark, TestSpark.sf)

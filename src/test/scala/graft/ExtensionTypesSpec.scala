@@ -29,7 +29,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
       UuidRec(1L, Uuid(0x1122334455667788L, 0x99AABBCCDDEEFF00L)),
       UuidRec(2L, Uuid(0L, 42L)),
       UuidRec(3L, Uuid(0L, 42L)))
-    val out = "/tmp/graft_io/uuid_udt"
+    val out = Tables.scratch("uuid_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[UuidRec].collect().sortBy(_.id)
     assert(back.toSeq.map(r => (r.id, r.uid)) == rows.map(r => (r.id, r.uid)))
@@ -44,7 +44,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
     import spark.implicits._
     val t = Tensor(Seq(2, 3), Array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))
     assert(t(0, 0) == 1.0 && t(0, 2) == 3.0 && t(1, 0) == 4.0 && t(1, 2) == 6.0)
-    val out = "/tmp/graft_io/tensor_udt"
+    val out = Tables.scratch("tensor_udt")
     Seq(TensorRec(1L, t)).toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[TensorRec].head()
     assert(back.t.shape == Seq(2, 3))
@@ -61,7 +61,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
     val rows = Seq(
       JsonRec(1L, Json("""{"a": 1, "b": [true, null]}""")),
       JsonRec(2L, Json("""{"a": 2}""")))
-    val out = "/tmp/graft_io/json_udt"
+    val out = Tables.scratch("json_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[JsonRec].collect().sortBy(_.id)
     assert(back.map(r => (r.id, r.doc.value)).toSeq ==
@@ -77,7 +77,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = Seq(
       Bool8Rec(1L, Bool8(0)), Bool8Rec(2L, Bool8(1)), Bool8Rec(3L, Bool8(-3)))
-    val out = "/tmp/graft_io/bool8_udt"
+    val out = Tables.scratch("bool8_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[Bool8Rec].collect().sortBy(_.id)
     // raw bytes preserved (reference: storage is NOT canonicalized)…
@@ -99,7 +99,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
       VarTensorRec(2L, VarTensor(Seq(3), Array(5.0, 6.0, 7.0))),      // rank 1
       VarTensorRec(3L, VarTensor(Seq(1, 2, 2), Array(8.0, 9.0, 10.0, 11.0))),
       VarTensorRec(4L, VarTensor(Seq(0), Array.emptyDoubleArray)))    // empty
-    val out = "/tmp/graft_io/vtensor_udt"
+    val out = Tables.scratch("vtensor_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[VarTensorRec].collect().sortBy(_.id)
     assert(back.map(r => (r.id, r.t.shape, r.t.values.toSeq)).toSeq ==
@@ -129,7 +129,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
       SparseTensorRec(2L, SparseTensor(Seq(2, 2), Array.emptyLongArray,
         Array.emptyDoubleArray)), // all-zero tensor: nnz = 0
       SparseTensorRec(3L, SparseTensor(Seq(5), Array(4L), Array(1.5))))
-    val out = "/tmp/graft_io/sparse_tensor_udt"
+    val out = Tables.scratch("sparse_tensor_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[SparseTensorRec].collect().sortBy(_.id)
     assert(back.map(r => (r.id, r.t)).toSeq == rows.map(r => (r.id, r.t)))
@@ -189,7 +189,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
     val rows = Seq(SparseMatrixRec(1L, csr), SparseMatrixRec(2L, csc),
       SparseMatrixRec(3L, SparseMatrix(byRow = true, 2, 2,
         Array(0L, 0L, 0L), Array.emptyLongArray, Array.emptyDoubleArray)))
-    val out = "/tmp/graft_io/sparse_matrix_udt"
+    val out = Tables.scratch("sparse_matrix_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[SparseMatrixRec].collect().sortBy(_.id)
     assert(back.map(r => (r.id, r.m)).toSeq == rows.map(r => (r.id, r.m)))
@@ -240,7 +240,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
       assert(perm(i, j, k) == coo(i, j, k), s"perm ($i,$j,$k)")
     // parquet round-trip (identity + permuted in one column)
     val rows = Seq(SparseCSFRec(1L, csf), SparseCSFRec(2L, perm))
-    val out = "/tmp/graft_io/sparse_csf_udt"
+    val out = Tables.scratch("sparse_csf_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[SparseCSFRec].collect().sortBy(_.id)
     assert(back.map(r => (r.id, r.t)).toSeq == rows.map(r => (r.id, r.t)))
@@ -268,7 +268,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
     val rows = Seq(
       OpaqueRec(1L, graft.types.Opaque("geometry", "postgis", Array[Byte](1, 2, 3, -1))),
       OpaqueRec(2L, graft.types.Opaque("hll", "redis", Array.emptyByteArray)))
-    val out = "/tmp/graft_io/opaque_udt"
+    val out = Tables.scratch("opaque_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[OpaqueRec].collect().sortBy(_.id)
     assert(back.map(_.blob).toSeq == rows.map(_.blob))
@@ -294,7 +294,7 @@ class ExtensionTypesSpec extends AnyFunSuite {
       TimeRec(2L, TimeOfDay(86399999999L)),             // 23:59:59.999999
       TimeRec(3L, TimeOfDay.fromTime32(8 * 3600, "s")), // 08:00:00 time32[s]
       TimeRec(4L, TimeOfDay.fromTime64(12L * 3600 * 1000000000L + 1500L, "ns")))
-    val out = "/tmp/graft_io/time_udt"
+    val out = Tables.scratch("time_udt")
     rows.toDS().write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out).as[TimeRec].collect().sortBy(_.id)
     // the LOGICAL type survives the round-trip (this is the §1.2 gap

@@ -22,8 +22,24 @@ class IngestSpec extends AnyFunSuite {
     assert(types("o_date") == DateType)
   }
 
+  test("a query built at a second scale factor leaves the first one's files alone") {
+    // each frame lists its files when it is built, so a second write to
+    // the same directory before the first collect would delete them
+    val other = "/root/testdata/sf0.01"
+    for (name <- Seq("q26a_csv_roundtrip", "q25f_compression", "q26e_csv_infer")) {
+      val q = Registry.byName(name)
+      val first = q.run(spark, sf)
+      val second = q.run(spark, other)
+      for ((df, d) <- Seq(first -> sf, second -> other)) {
+        val rows = df.collect()
+        val n = if (name == "q25f_compression") rows.head.getLong(0) else rows.length.toLong
+        assert(n == Tables.orders(spark, d).count(), s"$name built at $d")
+      }
+    }
+  }
+
   test("JSON inference recovers long/boolean/double types") {
-    val out = "/tmp/graft_io/q26h_json"
+    val out = Tables.scratch(sf, "q26h_json")
     Registry.byName("q26h_json_infer").run(spark, sf).collect() // writes files
     val inferred = spark.read.json(out).schema.fields.map(f => f.name -> f.dataType).toMap
     assert(inferred("o_orderkey") == LongType)
@@ -46,13 +62,9 @@ class IngestSpec extends AnyFunSuite {
 
   /** Shared corrupt-CSV fixture, written by whichever test runs first so
     * each test also passes in isolation. */
-  private def corruptCsv(): String = {
-    val path = "/tmp/graft_io/ingest_corrupt.csv"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/tmp/graft_io"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      "1,alpha,2.5\n2,beta,notanumber\n3,gamma,9.0\n".getBytes)
-    path
-  }
+  private def corruptCsv(): String =
+    Tables.writeText(Tables.scratch("ingest_corrupt.csv"),
+      "1,alpha,2.5\n2,beta,notanumber\n3,gamma,9.0\n")
 
   test("PERMISSIVE mode captures corrupt CSV rows in a named column") {
     val path = corruptCsv()
@@ -77,9 +89,8 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("PERMISSIVE mode captures corrupt JSON lines; DROPMALFORMED drops them") {
-    val path = "/tmp/graft_io/ingest_corrupt.json"
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      "{\"id\": 1, \"v\": 2.5}\n{not json at all\n{\"id\": 3, \"v\": 9.0}\n".getBytes)
+    val path = Tables.writeText(Tables.scratch("ingest_corrupt.json"),
+      "{\"id\": 1, \"v\": 2.5}\n{not json at all\n{\"id\": 3, \"v\": 9.0}\n")
     val schema = StructType(Seq(
       StructField("id", LongType),
       StructField("v", DoubleType),
@@ -133,7 +144,7 @@ class IngestSpec extends AnyFunSuite {
         .option("quote", "\"").option("escape", "\"")
         .option("mode", "FAILFAST")
         .schema(schema)
-        .csv("/tmp/graft_io/q26r_multiline.csv")
+        .csv(Tables.scratch("q26r_multiline.csv"))
         .collect()
     }
   }

@@ -26,7 +26,7 @@ class IoSpec extends AnyFunSuite {
   test("q25g sorted layout: per-file key ranges are pairwise disjoint and the range filter is pushed") {
     // run the gated query once to install the immutable fixture
     Registry.byName("q25g_sorted_layout").run(spark, sf)
-    val out = queries.NestedIOQueries.q25gLayout(sf)
+    val out = Tables.scratch(sf, "q25g_sorted")
     val ranges = spark.read.parquet(out)
       .groupBy(input_file_name().as("f"))
       .agg(min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"))
@@ -51,7 +51,7 @@ class IoSpec extends AnyFunSuite {
 
   test("q25h z-order layout: per-file (partkey, suppkey) bounding boxes cluster") {
     Registry.byName("q25h_zorder_layout").run(spark, sf)
-    val out = queries.NestedIOQueries.q25hLayout(sf)
+    val out = Tables.scratch(sf, "q25h_zorder")
     val boxes = spark.read.parquet(out)
       .groupBy(input_file_name().as("f"))
       .agg(
@@ -776,7 +776,7 @@ class IoSpec extends AnyFunSuite {
 
     // crack a part file open raw: the status field must be REE on disk,
     // with far fewer stored values than logical rows (runs really formed)
-    val out = new java.io.File(s"/tmp/graft_io/q26_ipc_ree_${Tables.scratchKey(sf)}")
+    val out = new java.io.File(Tables.scratch(sf, "q26_ipc_ree"))
     val part = out.listFiles().filter(_.getName.endsWith(".arrow")).minBy(_.getName)
     val allocator = new org.apache.arrow.memory.RootAllocator(Long.MaxValue)
     val ch = new java.io.FileInputStream(part).getChannel
@@ -805,7 +805,7 @@ class IoSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
     Registry.byName("q25k_parquet_bloom").run(spark, sf).collect()
-    val out = new java.io.File(s"/tmp/graft_io/q25k_bloom_${Tables.scratchKey(sf)}")
+    val out = new java.io.File(Tables.scratch(sf, "q25k_bloom"))
     val part = out.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -883,7 +883,7 @@ class IoSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // the gated query writes the layout as a side effect
     Registry.byName("q25i_max_rows_per_file").run(spark, sf).collect()
-    val out = s"/tmp/graft_io/q25i_maxrows_${Tables.scratchKey(sf)}"
+    val out = Tables.scratch(sf, "q25i_maxrows")
     val perFile = spark.read.parquet(out)
       .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1))

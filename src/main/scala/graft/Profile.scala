@@ -8,11 +8,12 @@ import scala.collection.mutable
   * companion of [[Bench]] (find WHERE the time goes before touching
   * anything).
   *
-  * For each named query it runs the plan once through the noop sink with
-  * a listener attached, then prints every stage's wall time, task count,
-  * input/shuffle bytes and peak task time, ordered by cost. Stage names
-  * carry the first line of their call site, which for SQL stages is the
-  * operator that created them — enough to map a stage back to the plan.
+  * For each named query it runs the plan once to warm it, then once more
+  * through the noop sink with a listener attached, then prints every
+  * stage's wall time, task count and input/shuffle bytes, ordered by
+  * cost. Stage names carry the first line of their call site, which for
+  * SQL stages is the operator that created them — enough to map a stage
+  * back to the plan.
   *
   * Usage: `runMain graft.Profile q61_bootstrap graph_pagerank`
   * (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS).
@@ -21,7 +22,7 @@ object Profile {
 
   private final case class StageRow(
       id: Int, name: String, tasks: Int,
-      wallMs: Long, taskTimeMs: Long, maxTaskMs: Long,
+      wallMs: Long, taskTimeMs: Long,
       inputMB: Double, shReadMB: Double, shWriteMB: Double)
 
   def main(args: Array[String]): Unit = {
@@ -44,17 +45,16 @@ object Profile {
         val m = si.taskMetrics
         stages(si.stageId) = StageRow(
           si.stageId, si.name.linesIterator.next(), si.numTasks,
-          wall, m.executorRunTime, 0L,
+          wall, m.executorRunTime,
           m.inputMetrics.bytesRead / 1e6,
           m.shuffleReadMetrics.totalBytesRead / 1e6,
           m.shuffleWriteMetrics.bytesWritten / 1e6)
       }
     }
 
-    // warmup: codegen/classload paid outside the profile
-    Bench.runOnce(spark, sfDir, names.head)
-
     names.foreach { name =>
+      // warmup: codegen/classload paid outside the profile
+      Bench.runOnce(spark, sfDir, name)
       stages.clear(); submitted.clear()
       spark.sparkContext.addSparkListener(listener)
       val sec = Bench.runOnce(spark, sfDir, name)

@@ -691,210 +691,244 @@ object AnalyticsQueries {
        |       COUNT(*) AS n
        |FROM orders, b GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Link-authority scoring ([[graft.pipeline.GraphOps.pageRank]]): 3
-    * damped iterations over the part↔supplier co-occurrence graph from
-    * lineitem (the same shape as Common Crawl's published per-host rank
-    * data used to weight crawl corpora), PLUS a genuine sink: every tenth
-    * part also links to a synthetic `zsink` node that has no out-edges, so
-    * the gate exercises the dangling-mass redistribution path — without
-    * it, total rank would silently decay below 1. The oracle unrolls the
-    * identical three iterations as chained CTEs, each with its own
-    * sink-mass CTE mirroring the redistribution — recursive CTEs cannot
-    * aggregate in the recursive member, and a fixed-depth unroll is the
-    * honest mirror of a fixed-iteration operator. */
-  private val PrIters = 3
+  /** The part–supplier graph fixture every `graph_*` query but
+    * [[sccQ]] reads: `lineitem`'s (l_partkey, l_suppkey) incidence as
+    * part `p` and supplier `sk`, its bipartite edges between nodes named
+    * `p<partkey>` and `s<suppkey>` with a `zsink` edge for every tenth
+    * part, its part–part co-supplier projection and an md5 sample of
+    * that. Each Spark builder has its oracle CTE twin beside it
+    * (AnalyticsSpec checks the pair, edge and co-part twins against
+    * their builders); the queries compose the pieces they need, so the
+    * fixture is decided here once. */
+  private def partSupp: Seq[Column] =
+    Seq(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
 
-  private def pagerank(s: SparkSession, d: String): DataFrame = {
-    val pairs = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val edges = pairs.select(
-        concat(lit("p"), col("p")).as("src"), concat(lit("s"), col("sk")).as("dst"))
-      .union(pairs.select(
-        concat(lit("s"), col("sk")).as("src"), concat(lit("p"), col("p")).as("dst")))
-      .union(pairs.filter(col("p") % 10 === 0)
-        .select(concat(lit("p"), col("p")).as("src"), lit("zsink").as("dst"))
-        .distinct())
-    graft.pipeline.GraphOps.pageRank(edges, "src", "dst", iterations = PrIters)
-      .select(col("node"), round(col("rank"), 9).as("rank"))
-      .orderBy(col("node"))
+  /** One (p, sk) row per `lineitem` line, parts below `cap` only when
+    * one is given. */
+  private def incidence(s: SparkSession, d: String,
+      cap: Option[Int] = None): DataFrame = {
+    val li = Tables.lineitem(s, d)
+    cap.fold(li)(c => li.filter(col("l_partkey") < c)).select(partSupp: _*)
   }
 
-  private val pagerankSql = {
-    def iter(prev: String, dm: String, out: String) =
-      s"""$dm AS (
+  /** The distinct (p, sk) pairs of [[incidence]]. */
+  private[graft] def partSuppPairs(s: SparkSession, d: String,
+      cap: Option[Int] = None): DataFrame =
+    incidence(s, d, cap).distinct()
+
+  /** [[incidence]]'s twin CTE `inc`. */
+  private def incidenceSql(cap: Option[Int] = None): String =
+    "inc AS (\n  SELECT l_partkey AS p, l_suppkey AS sk FROM lineitem" +
+      cap.fold("")(c => s"\n  WHERE l_partkey < $c") + ")"
+
+  /** [[partSuppPairs]]'s twin: CTEs `inc` and `pairs`. */
+  private[graft] def partSuppPairsSql(cap: Option[Int] = None): String =
+    s"${incidenceSql(cap)},\npairs AS (SELECT DISTINCT p, sk FROM inc)"
+
+  private def partNode = concat(lit("p"), col("p"))
+  private def suppNode = concat(lit("s"), col("sk"))
+
+  /** The edge pieces over a (p, sk) frame, each carrying the extra
+    * columns `w` (an edge weight, say): part→supplier,
+    * supplier→part, and every tenth part's edge to `zsink`, a node with
+    * no out-edges — the genuine sink that exercises dangling-mass
+    * redistribution. */
+  private def partToSupp(pairs: DataFrame, w: Column*): DataFrame =
+    pairs.select(partNode.as("src") +: suppNode.as("dst") +: w: _*)
+
+  private def suppToPart(pairs: DataFrame, w: Column*): DataFrame =
+    pairs.select(suppNode.as("src") +: partNode.as("dst") +: w: _*)
+
+  private def sinkEdges(pairs: DataFrame, w: Column*): DataFrame =
+    pairs.filter(col("p") % 10 === 0)
+      .select(partNode.as("src") +: lit("zsink").as("dst") +: w: _*)
+      .distinct()
+
+  /** The sink-bearing part↔supplier graph: all three edge pieces. */
+  private[graft] def sinkGraph(pairs: DataFrame): DataFrame =
+    partToSupp(pairs).union(suppToPart(pairs)).union(sinkEdges(pairs))
+
+  /** The edge pieces' twin SELECT arms over `pairs`, `w` the extra
+    * select items; [[edgesSql]] unions arms into the `edges` CTE. */
+  private def partToSuppSql(w: String = "") =
+    s"SELECT 'p' || p AS src, 's' || sk AS dst$w FROM pairs"
+  private def suppToPartSql(w: String = "") =
+    s"SELECT 's' || sk AS src, 'p' || p AS dst$w FROM pairs"
+  private def sinkEdgesSql(w: String = "") =
+    s"SELECT DISTINCT 'p' || p AS src, 'zsink' AS dst$w FROM pairs WHERE p % 10 = 0"
+  private def edgesSql(arms: String*) =
+    arms.mkString("edges AS (\n  ", "\n  UNION ALL\n  ", ")")
+
+  /** [[sinkGraph]]'s twin: the `edges` CTE over `pairs`. */
+  private[graft] def sinkGraphSql: String =
+    edgesSql(partToSuppSql(), suppToPartSql(), sinkEdgesSql())
+
+  /** Every node of `edges`. */
+  private val nodesSql =
+    """nodes AS (
+      |  SELECT DISTINCT node FROM (
+      |    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges))""".stripMargin
+
+  /** The part–part co-supplier graph over a (p, sk) frame: one (u, v)
+    * edge, u < v, per two parts that share a supplier — supplier
+    * cliques, so triangles are plentiful (the bipartite graph itself has
+    * none). */
+  private[graft] def coParts(pairs: DataFrame): DataFrame = {
+    val a = pairs.select(col("p").as("pa"), col("sk"))
+    val b = pairs.select(col("p").as("pb"), col("sk"))
+    a.join(b, Seq("sk")).filter(col("pa") < col("pb"))
+      .select(col("pa").as("u"), col("pb").as("v")).distinct()
+  }
+
+  /** [[coParts]]'s twin: the `coparts` CTE over `pairs`. */
+  private[graft] def coPartsSql: String =
+    """coparts AS (
+      |  SELECT DISTINCT a.p AS u, b.p AS v
+      |  FROM pairs a JOIN pairs b ON a.sk = b.sk AND a.p < b.p)""".stripMargin
+
+  /** [[coParts]] of the parts below 1000, thinned by a deterministic
+    * md5-of-edge lottery (both engines draw the identical sample) to the
+    * ~1/KcMod of its edges ([[kcoreQ]], [[assortQ]]). */
+  private val KcMod = 150
+
+  private def sampledCoParts(s: SparkSession, d: String): DataFrame =
+    coParts(partSuppPairs(s, d, Some(1000))).filter(
+      graft.functions.expr.Md5Prefix(concat(col("u").cast("string"), lit("_"),
+        col("v").cast("string")), 4).cast("int") % KcMod === 0)
+
+  /** [[sampledCoParts]]'s twin: CTEs `inc`, `pairs`, `coparts` and
+    * `sampled`. DuckDB-only (hex cast). */
+  private def sampledCoPartsSql: String =
+    s"""${partSuppPairsSql(Some(1000))},
+       |$coPartsSql,
+       |sampled AS (
+       |  SELECT u, v FROM coparts
+       |  WHERE ('0x' || substring(md5(u || '_' || v), 1, 4))::INT
+       |    % $KcMod = 0)""".stripMargin
+
+  /** Link-authority scoring ([[graft.pipeline.GraphOps.pageRank]]): 3
+    * damped iterations over [[sinkGraph]], the part↔supplier
+    * co-occurrence graph from lineitem (the same shape as Common Crawl's
+    * published per-host rank data used to weight crawl corpora) with
+    * its `zsink` edges, so the gate exercises the dangling-mass
+    * redistribution path — without them, total rank would silently
+    * decay below 1. The oracle is [[prUnrollSql]]. */
+  private val PrIters = 3
+
+  private def pagerank(s: SparkSession, d: String): DataFrame =
+    graft.pipeline.GraphOps
+      .pageRank(sinkGraph(partSuppPairs(s, d)), "src", "dst", iterations = PrIters)
+      .select(col("node"), round(col("rank"), 9).as("rank"))
+      .orderBy(col("node"))
+
+  /** The PageRank family's oracle: `head`'s CTEs — `edges`, its
+    * per-source out-weight `deg`, and `tele`, every node with its
+    * teleport flag `t` — then the identical [[PrIters]] iterations
+    * unrolled as chained CTEs, each with its own sink-mass CTE
+    * mirroring the redistribution; base and dangling mass land on the
+    * `t = 1` nodes only. `contrib` is one edge's share of its source's
+    * rank `r.rank`. Recursive CTEs cannot aggregate in the recursive
+    * member, and a fixed-depth unroll is the honest mirror of a
+    * fixed-iteration operator. */
+  private def prUnrollSql(head: String, contrib: String): String = {
+    def iter(i: Int) = {
+      val prev = if (i == 1) "r0" else s"it${i - 1}"
+      s"""dm$i AS (
          |  SELECT COALESCE(CAST(SUM(CAST(r.rank AS DECIMAL(38,18))) AS DOUBLE),
          |         0.0) AS dm
          |  FROM $prev r LEFT JOIN deg ON deg.src = r.node
          |  WHERE deg.src IS NULL),
-         |$out AS (
-         |  SELECT nodes.node,
-         |    (SELECT (1.0-0.85)/n FROM n) + 0.85 * (COALESCE(
-         |      CAST(SUM(CAST(round(r.rank/deg.deg, 12) AS DECIMAL(38,18))) AS DOUBLE),
-         |      0.0) + (SELECT round(dm / (SELECT n FROM n), 12) FROM $dm)) AS rank
-         |  FROM nodes
-         |  LEFT JOIN edges e ON e.dst = nodes.node
+         |it$i AS (
+         |  SELECT tele.node,
+         |    tele.t * (SELECT (1.0-0.85)/n FROM n) + 0.85 * (COALESCE(
+         |      CAST(SUM(CAST(round($contrib, 12) AS DECIMAL(38,18))) AS DOUBLE),
+         |      0.0) + tele.t * (SELECT round(dm / (SELECT n FROM n), 12)
+         |                       FROM dm$i)) AS rank
+         |  FROM tele
+         |  LEFT JOIN edges e ON e.dst = tele.node
          |  LEFT JOIN $prev r ON r.node = e.src
          |  LEFT JOIN deg ON deg.src = e.src
-         |  GROUP BY nodes.node)"""
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem),
-       |edges AS (
-       |  SELECT 'p' || p AS src, 's' || sk AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT 's' || sk, 'p' || p FROM pairs
-       |  UNION ALL
-       |  SELECT DISTINCT 'p' || p, 'zsink' FROM pairs WHERE p % 10 = 0),
-       |nodes AS (
-       |  SELECT DISTINCT node FROM (
-       |    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-       |n AS (SELECT COUNT(*)::DOUBLE AS n FROM nodes),
-       |deg AS (SELECT src, COUNT(*)::DOUBLE AS deg FROM edges GROUP BY src),
-       |r0 AS (SELECT node, (SELECT 1.0/n FROM n) AS rank FROM nodes),
-       |${iter("r0", "dm1", "it1")},
-       |${iter("it1", "dm2", "it2")},
-       |${iter("it2", "dm3", "it3")}
-       |SELECT node, round(rank, 9) AS rank FROM it3 ORDER BY node""".stripMargin
+         |  GROUP BY tele.node, tele.t)"""
+    }
+    s"""WITH $head,
+       |n AS (SELECT SUM(t)::DOUBLE AS n FROM tele),
+       |r0 AS (SELECT node, t * (SELECT 1.0/n FROM n) AS rank FROM tele),
+       |${(1 to PrIters).map(iter).mkString(",\n")}
+       |SELECT node, round(rank, 9) AS rank FROM it$PrIters ORDER BY node""".stripMargin
   }
 
+  private val pagerankSql = prUnrollSql(
+    s"""${partSuppPairsSql()},
+       |$sinkGraphSql,
+       |$nodesSql,
+       |tele AS (SELECT node, 1 AS t FROM nodes),
+       |deg AS (SELECT src, COUNT(*)::DOUBLE AS deg FROM edges GROUP BY src)""",
+    contrib = "r.rank/deg.deg")
+
   /** Weighted PageRank ([[graft.pipeline.GraphOps.pageRankWeighted]]):
-    * the same sink-bearing graph, with each part↔supplier edge weighted
-    * by its lineitem co-occurrence COUNT (how link-weighted host graphs
+    * the [[sinkGraph]] pieces with each part↔supplier edge weighted by
+    * its lineitem co-occurrence COUNT (how link-weighted host graphs
     * actually arrive) and sink edges at weight 1. The oracle unrolls the
     * identical iterations with `rank·w/Σw` contributions. */
   private def wpr(s: SparkSession, d: String): DataFrame = {
     val pairs = Tables.lineitem(s, d)
-      .groupBy(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
+      .groupBy(partSupp: _*)
       .agg(count(lit(1)).cast("double").as("w"))
-    val edges = pairs.select(
-        concat(lit("p"), col("p")).as("src"), concat(lit("s"), col("sk")).as("dst"),
-        col("w"))
-      .union(pairs.select(
-        concat(lit("s"), col("sk")).as("src"), concat(lit("p"), col("p")).as("dst"),
-        col("w")))
-      .union(pairs.filter(col("p") % 10 === 0)
-        .select(concat(lit("p"), col("p")).as("src"), lit("zsink").as("dst"),
-          lit(1.0).as("w"))
-        .distinct())
+    val edges = partToSupp(pairs, col("w"))
+      .union(suppToPart(pairs, col("w")))
+      .union(sinkEdges(pairs, lit(1.0).as("w")))
     graft.pipeline.GraphOps
       .pageRankWeighted(edges, "src", "dst", "w", iterations = PrIters)
       .select(col("node"), round(col("rank"), 9).as("rank"))
       .orderBy(col("node"))
   }
 
-  private val wprSql = {
-    def iter(prev: String, dm: String, out: String) =
-      s"""$dm AS (
-         |  SELECT COALESCE(CAST(SUM(CAST(r.rank AS DECIMAL(38,18))) AS DOUBLE),
-         |         0.0) AS dm
-         |  FROM $prev r LEFT JOIN deg ON deg.src = r.node
-         |  WHERE deg.src IS NULL),
-         |$out AS (
-         |  SELECT nodes.node,
-         |    (SELECT (1.0-0.85)/n FROM n) + 0.85 * (COALESCE(
-         |      CAST(SUM(CAST(round(r.rank * e.w / deg.sw, 12) AS DECIMAL(38,18))) AS DOUBLE),
-         |      0.0) + (SELECT round(dm / (SELECT n FROM n), 12) FROM $dm)) AS rank
-         |  FROM nodes
-         |  LEFT JOIN edges e ON e.dst = nodes.node
-         |  LEFT JOIN $prev r ON r.node = e.src
-         |  LEFT JOIN deg ON deg.src = e.src
-         |  GROUP BY nodes.node)"""
-    s"""WITH pairs AS (
-       |  SELECT l_partkey AS p, l_suppkey AS sk, COUNT(*)::DOUBLE AS w
-       |  FROM lineitem GROUP BY 1, 2),
-       |edges AS (
-       |  SELECT 'p' || p AS src, 's' || sk AS dst, w FROM pairs
-       |  UNION ALL
-       |  SELECT 's' || sk, 'p' || p, w FROM pairs
-       |  UNION ALL
-       |  SELECT DISTINCT 'p' || p, 'zsink', 1.0 FROM pairs WHERE p % 10 = 0),
-       |nodes AS (
-       |  SELECT DISTINCT node FROM (
-       |    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-       |n AS (SELECT COUNT(*)::DOUBLE AS n FROM nodes),
-       |deg AS (SELECT src, SUM(w) AS sw FROM edges GROUP BY src),
-       |r0 AS (SELECT node, (SELECT 1.0/n FROM n) AS rank FROM nodes),
-       |${iter("r0", "dm1", "it1")},
-       |${iter("it1", "dm2", "it2")},
-       |${iter("it2", "dm3", "it3")}
-       |SELECT node, round(rank, 9) AS rank FROM it3 ORDER BY node""".stripMargin
-  }
+  private val wprSql = prUnrollSql(
+    s"""${incidenceSql()},
+       |pairs AS (SELECT p, sk, COUNT(*)::DOUBLE AS w FROM inc GROUP BY 1, 2),
+       |${edgesSql(partToSuppSql(", w"), suppToPartSql(", w"), sinkEdgesSql(", 1.0"))},
+       |$nodesSql,
+       |tele AS (SELECT node, 1 AS t FROM nodes),
+       |deg AS (SELECT src, SUM(w) AS sw FROM edges GROUP BY src)""",
+    contrib = "r.rank * e.w / deg.sw")
 
   /** Personalized PageRank
-    * ([[graft.pipeline.GraphOps.pageRankPersonalized]]): the SAME
-    * sink-bearing graph as [[pagerank]], teleporting to the SUPPLIER
-    * nodes only — authority as seen from a trusted seed set, the
-    * domain-focused variant of crawl weighting. The oracle unrolls the
-    * same three iterations with the seed flag folded into the base and
-    * dangling terms exactly as the operator computes them. */
+    * ([[graft.pipeline.GraphOps.pageRankPersonalized]]) over
+    * [[sinkGraph]], teleporting to the SUPPLIER nodes only — authority
+    * as seen from a trusted seed set, the domain-focused variant of
+    * crawl weighting. The oracle unrolls the same three iterations with
+    * the seed flag as `tele.t`, folded into the base and dangling terms
+    * exactly as the operator computes them. */
   private def ppr(s: SparkSession, d: String): DataFrame = {
-    val pairs = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val edges = pairs.select(
-        concat(lit("p"), col("p")).as("src"), concat(lit("s"), col("sk")).as("dst"))
-      .union(pairs.select(
-        concat(lit("s"), col("sk")).as("src"), concat(lit("p"), col("p")).as("dst")))
-      .union(pairs.filter(col("p") % 10 === 0)
-        .select(concat(lit("p"), col("p")).as("src"), lit("zsink").as("dst"))
-        .distinct())
-    val seeds = pairs.select(concat(lit("s"), col("sk")).as("node")).distinct()
+    val pairs = partSuppPairs(s, d)
+    val seeds = pairs.select(suppNode.as("node")).distinct()
     graft.pipeline.GraphOps
-      .pageRankPersonalized(edges, "src", "dst", seeds, "node",
+      .pageRankPersonalized(sinkGraph(pairs), "src", "dst", seeds, "node",
         iterations = PrIters)
       .select(col("node"), round(col("rank"), 9).as("rank"))
       .orderBy(col("node"))
   }
 
-  private val pprSql = {
-    def iter(prev: String, dm: String, out: String) =
-      s"""$dm AS (
-         |  SELECT COALESCE(CAST(SUM(CAST(r.rank AS DECIMAL(38,18))) AS DOUBLE),
-         |         0.0) AS dm
-         |  FROM $prev r LEFT JOIN deg ON deg.src = r.node
-         |  WHERE deg.src IS NULL),
-         |$out AS (
-         |  SELECT flag.node,
-         |    (flag.t * (SELECT (1.0-0.85)/nt FROM nt)) + 0.85 * (COALESCE(
-         |      CAST(SUM(CAST(round(r.rank/deg.deg, 12) AS DECIMAL(38,18))) AS DOUBLE),
-         |      0.0) + flag.t * (SELECT round(dm / (SELECT nt FROM nt), 12)
-         |                       FROM $dm)) AS rank
-         |  FROM flag
-         |  LEFT JOIN edges e ON e.dst = flag.node
-         |  LEFT JOIN $prev r ON r.node = e.src
-         |  LEFT JOIN deg ON deg.src = e.src
-         |  GROUP BY flag.node, flag.t)"""
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem),
-       |edges AS (
-       |  SELECT 'p' || p AS src, 's' || sk AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT 's' || sk, 'p' || p FROM pairs
-       |  UNION ALL
-       |  SELECT DISTINCT 'p' || p, 'zsink' FROM pairs WHERE p % 10 = 0),
-       |nodes AS (
-       |  SELECT DISTINCT node FROM (
-       |    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-       |tele AS (SELECT DISTINCT 's' || sk AS node FROM pairs),
-       |nt AS (SELECT COUNT(*)::DOUBLE AS nt FROM tele),
-       |deg AS (SELECT src, COUNT(*)::DOUBLE AS deg FROM edges GROUP BY src),
-       |flag AS (
-       |  SELECT n.node, CASE WHEN t.node IS NOT NULL THEN 1 ELSE 0 END AS t
-       |  FROM nodes n LEFT JOIN tele t ON t.node = n.node),
-       |r0 AS (SELECT node, t * (SELECT 1.0/nt FROM nt) AS rank FROM flag),
-       |${iter("r0", "dm1", "it1")},
-       |${iter("it1", "dm2", "it2")},
-       |${iter("it2", "dm3", "it3")}
-       |SELECT node, round(rank, 9) AS rank FROM it3 ORDER BY node""".stripMargin
-  }
+  private val pprSql = prUnrollSql(
+    s"""${partSuppPairsSql()},
+       |$sinkGraphSql,
+       |$nodesSql,
+       |seeds AS (SELECT DISTINCT 's' || sk AS node FROM pairs),
+       |tele AS (
+       |  SELECT nodes.node,
+       |    CASE WHEN seeds.node IS NOT NULL THEN 1 ELSE 0 END AS t
+       |  FROM nodes LEFT JOIN seeds ON seeds.node = nodes.node),
+       |deg AS (SELECT src, COUNT(*)::DOUBLE AS deg FROM edges GROUP BY src)""",
+    contrib = "r.rank/deg.deg")
 
   /** Harmonic centrality via HyperBall
-    * ([[graft.pipeline.GraphOps.harmonicCentrality]]) on the SAME
-    * sink-bearing graph as [[pagerank]], REVERSED so distances run
-    * toward each node — the standard incoming-harmonic definition and
-    * the other half of Common Crawl's published host ranks. The sketch
-    * balls stay in the exact tier at gate cardinality, so the DuckDB
-    * oracle is an exact recursive-CTE BFS: per node the count of nodes
-    * within distance 3 and Σ 1/d, with the depth-increment arithmetic
-    * mirrored term by term in fixed order.
+    * ([[graft.pipeline.GraphOps.harmonicCentrality]]) on [[sinkGraph]],
+    * REVERSED so distances run toward each node — the standard
+    * incoming-harmonic definition and the other half of Common Crawl's
+    * published host ranks. The sketch balls stay in the exact tier at
+    * gate cardinality, so the DuckDB oracle is an exact recursive-CTE
+    * BFS: per node the count of nodes within distance 3 and Σ 1/d, with
+    * the depth-increment arithmetic mirrored term by term in fixed order.
     *
     * Gate volume cap (graph_triangles precedent): parts < 2000 keeps the
     * ball states — which carry the whole exact tier per node while the
@@ -905,16 +939,7 @@ object AnalyticsQueries {
   private val HcDepth = 3
 
   private def harmonic(s: SparkSession, d: String): DataFrame = {
-    val pairs = Tables.lineitem(s, d)
-      .filter(col("l_partkey") < 2000)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val edges = pairs.select(
-        concat(lit("p"), col("p")).as("src"), concat(lit("s"), col("sk")).as("dst"))
-      .union(pairs.select(
-        concat(lit("s"), col("sk")).as("src"), concat(lit("p"), col("p")).as("dst")))
-      .union(pairs.filter(col("p") % 10 === 0)
-        .select(concat(lit("p"), col("p")).as("src"), lit("zsink").as("dst"))
-        .distinct())
+    val edges = sinkGraph(partSuppPairs(s, d, Some(2000)))
     val reversed = edges.select(col("dst").as("src"), col("src").as("dst"))
     graft.pipeline.GraphOps
       .harmonicCentrality(reversed, "src", "dst", maxDepth = HcDepth)
@@ -924,19 +949,10 @@ object AnalyticsQueries {
   }
 
   private val harmonicSql =
-    s"""WITH RECURSIVE pairs AS (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-       |  WHERE l_partkey < 2000),
-       |edges0 AS (
-       |  SELECT 'p' || p AS src, 's' || sk AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT 's' || sk, 'p' || p FROM pairs
-       |  UNION ALL
-       |  SELECT DISTINCT 'p' || p, 'zsink' FROM pairs WHERE p % 10 = 0),
-       |redges AS (SELECT dst AS src, src AS dst FROM edges0),
-       |nodes AS (
-       |  SELECT DISTINCT node FROM (
-       |    SELECT src AS node FROM redges UNION ALL SELECT dst FROM redges)),
+    s"""WITH RECURSIVE ${partSuppPairsSql(Some(2000))},
+       |$sinkGraphSql,
+       |redges AS (SELECT dst AS src, src AS dst FROM edges),
+       |$nodesSql,
        |reach AS (
        |  SELECT node AS v, node AS u, 0 AS d FROM nodes
        |  UNION
@@ -955,23 +971,14 @@ object AnalyticsQueries {
        |FROM lv ORDER BY node""".stripMargin
 
   /** Per-node triangle counts ([[graft.pipeline.GraphOps.triangleCounts]])
-    * over the part–part co-occurrence graph (parts sharing a supplier —
-    * supplier cliques, so triangles are plentiful; the bipartite
-    * part↔supplier graph itself has none). Capped at the usual gate
-    * volume; the oracle enumerates triangles directly from the canonical
-    * a<b<c edge triple join — a formulation that dies on hubs at scale,
-    * which is exactly why the operator orients by degree instead. */
-  private def trianglesQ(s: SparkSession, d: String): DataFrame = {
-    val pp = Tables.lineitem(s, d)
-      .filter(col("l_partkey") < 300)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val a = pp.select(col("p").as("pa"), col("sk"))
-    val b = pp.select(col("p").as("pb"), col("sk"))
-    val e = a.join(b, Seq("sk")).filter(col("pa") < col("pb"))
-      .select(col("pa").as("u"), col("pb").as("v")).distinct()
-    graft.pipeline.GraphOps.triangleCounts(e, "u", "v")
+    * over [[coParts]] of the parts below 300 (the usual gate volume); the
+    * oracle enumerates triangles directly from the canonical a<b<c edge
+    * triple join — a formulation that dies on hubs at scale, which is
+    * exactly why the operator orients by degree instead. */
+  private def trianglesQ(s: SparkSession, d: String): DataFrame =
+    graft.pipeline.GraphOps
+      .triangleCounts(coParts(partSuppPairs(s, d, Some(300))), "u", "v")
       .orderBy(col("node"))
-  }
 
   /** graph_modularity: Newman modularity ([[graft.pipeline.GraphOps
     * .modularity]]) of the NATION partition over the supplier co-part
@@ -982,8 +989,7 @@ object AnalyticsQueries {
     * exact). Integer-exact e_c/D_c/m, ONE division in decimal/HUGEINT
     * (4m² wraps a long past ~1.5e9 edges), round@9. */
   private def modularityQ(s: SparkSession, d: String): DataFrame = {
-    val pp = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
+    val pp = partSuppPairs(s, d)
     val a = pp.select(col("p"), col("sk").as("sa"))
     val b = pp.select(col("p"), col("sk").as("sb"))
     val edges = a.join(b, Seq("p")).filter(col("sa") < col("sb"))
@@ -996,11 +1002,10 @@ object AnalyticsQueries {
   }
 
   private val modularitySql =
-    """WITH pp AS (
-      |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem),
-      |e AS (
-      |  SELECT DISTINCT a.sk AS u, b.sk AS v
-      |  FROM pp a JOIN pp b ON a.p = b.p AND a.sk < b.sk),
+    s"""WITH ${partSuppPairsSql()},
+       |e AS (
+       |  SELECT DISTINCT a.sk AS u, b.sk AS v
+       |  FROM pairs a JOIN pairs b ON a.p = b.p AND a.sk < b.sk),
       |lab AS (SELECT s_suppkey AS node, s_nationkey AS lb FROM supplier),
       |el AS (
       |  SELECT e.u, e.v, lu.lb AS lu, lv.lb AS lv
@@ -1036,35 +1041,31 @@ object AnalyticsQueries {
     * absolute df-cap is meaningful at gate tier); `maxDeg` is the
     * production scale lever, proven by AnalyticsSpec's planted-hub
     * fixture (hub drops from candidate generation, still counts in the
-    * re-verified scores). Per-wedge 1/ln(d) and 1/d terms round@9 to
+    * re-verified scores). The operator takes the [[incidence]] as is and
+    * deduplicates it itself. Per-wedge 1/ln(d) and 1/d terms round@9 to
     * longs and sum exactly; final quotients round@9 (a @6 rounding
     * ties on the exactly-9-decimal scaled sums — gate-caught). */
-  private def linkPredictQ(s: SparkSession, d: String): DataFrame = {
-    val inc = Tables.lineitem(s, d)
-      .filter(col("l_partkey") < 300)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
+  private def linkPredictQ(s: SparkSession, d: String): DataFrame =
     graft.pipeline.GraphOps
-      .adamicAdar(inc, "p", "sk", maxDeg = 200000L, minShared = 2L)
+      .adamicAdar(incidence(s, d, Some(300)), "p", "sk",
+        maxDeg = 200000L, minShared = 2L)
       .orderBy(col("pa"), col("pb"))
-  }
 
   private val linkPredictSql =
-    """WITH pp AS (
-      |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-      |  WHERE l_partkey < 300),
-      |vdeg AS (SELECT sk, COUNT(*) AS d FROM pp GROUP BY sk),
-      |ndeg AS (SELECT p, COUNT(*) AS dn FROM pp GROUP BY p),
-      |keep AS (SELECT pp.p, pp.sk FROM pp JOIN vdeg USING (sk)
-      |  WHERE d <= 200000),
-      |cand AS (
-      |  SELECT DISTINCT a.p AS pa, b.p AS pb
-      |  FROM keep a JOIN keep b ON a.sk = b.sk AND a.p < b.p),
-      |shared AS (
-      |  SELECT cand.pa, cand.pb, vdeg.d
-      |  FROM cand
-      |  JOIN pp ia ON ia.p = cand.pa
-      |  JOIN pp ib ON ib.p = cand.pb AND ib.sk = ia.sk
-      |  JOIN vdeg ON vdeg.sk = ia.sk),
+    s"""WITH ${partSuppPairsSql(Some(300))},
+       |vdeg AS (SELECT sk, COUNT(*) AS d FROM pairs GROUP BY sk),
+       |ndeg AS (SELECT p, COUNT(*) AS dn FROM pairs GROUP BY p),
+       |keep AS (SELECT pairs.p, pairs.sk FROM pairs JOIN vdeg USING (sk)
+       |  WHERE d <= 200000),
+       |cand AS (
+       |  SELECT DISTINCT a.p AS pa, b.p AS pb
+       |  FROM keep a JOIN keep b ON a.sk = b.sk AND a.p < b.p),
+       |shared AS (
+       |  SELECT cand.pa, cand.pb, vdeg.d
+       |  FROM cand
+       |  JOIN pairs ia ON ia.p = cand.pa
+       |  JOIN pairs ib ON ib.p = cand.pb AND ib.sk = ia.sk
+       |  JOIN vdeg ON vdeg.sk = ia.sk),
       |sc AS (
       |  SELECT pa, pb, COUNT(*) AS cn,
       |    CAST(SUM(CAST(round(1.0 / ln(CAST(d AS DOUBLE)) * 1e9, 0)
@@ -1082,41 +1083,34 @@ object AnalyticsQueries {
       |ORDER BY pa, pb""".stripMargin
 
   private val trianglesSql =
-    """WITH pp AS (
-      |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-      |  WHERE l_partkey < 300),
-      |und AS (
-      |  SELECT DISTINCT a.p AS u, b.p AS v
-      |  FROM pp a JOIN pp b ON a.sk = b.sk AND a.p < b.p),
-      |tri AS (
-      |  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-      |  FROM und e1
-      |  JOIN und e2 ON e2.u = e1.v
-      |  JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v)
-      |SELECT node, COUNT(*) AS n_tri FROM (
-      |  SELECT a AS node FROM tri
-      |  UNION ALL SELECT b FROM tri
-      |  UNION ALL SELECT c FROM tri)
-      |GROUP BY node ORDER BY node""".stripMargin
+    s"""WITH ${partSuppPairsSql(Some(300))},
+       |$coPartsSql,
+       |tri AS (
+       |  SELECT e1.u AS a, e1.v AS b, e2.v AS c
+       |  FROM coparts e1
+       |  JOIN coparts e2 ON e2.u = e1.v
+       |  JOIN coparts e3 ON e3.u = e1.u AND e3.v = e2.v)
+       |SELECT node, COUNT(*) AS n_tri FROM (
+       |  SELECT a AS node FROM tri
+       |  UNION ALL SELECT b FROM tri
+       |  UNION ALL SELECT c FROM tri)
+       |GROUP BY node ORDER BY node""".stripMargin
 
   /** HITS hubs & authorities ([[graft.pipeline.GraphOps.hits]]) over the
-    * DIRECTED part→supplier graph (parts are pure hubs, suppliers pure
-    * authorities — plus the zsink authority every tenth part links to),
-    * 2 mutually-recursive iterations. The oracle unrolls each half-step
-    * as its own raw-mass / L1-total / normalize CTE chain with the
-    * identical rounded-contribution + decimal-sum arithmetic; the zero
-    * paths (parts' authority, suppliers' hub) are part of the gate. */
+    * DIRECTED [[partToSupp]] and [[sinkEdges]] pieces (parts are pure
+    * hubs, suppliers pure authorities — plus the zsink authority every
+    * tenth part links to), 2 mutually-recursive iterations. The oracle
+    * unrolls each half-step as its own raw-mass / L1-total / normalize
+    * CTE chain with the identical rounded-contribution + decimal-sum
+    * arithmetic; the zero paths (parts' authority, suppliers' hub) are
+    * part of the gate. */
   private val HitsIters = 2
 
   private def hitsQ(s: SparkSession, d: String): DataFrame = {
-    val pairs = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val edges = pairs.select(
-        concat(lit("p"), col("p")).as("src"), concat(lit("s"), col("sk")).as("dst"))
-      .union(pairs.filter(col("p") % 10 === 0)
-        .select(concat(lit("p"), col("p")).as("src"), lit("zsink").as("dst"))
-        .distinct())
-    graft.pipeline.GraphOps.hits(edges, "src", "dst", iterations = HitsIters)
+    val pairs = partSuppPairs(s, d)
+    graft.pipeline.GraphOps
+      .hits(partToSupp(pairs).union(sinkEdges(pairs)), "src", "dst",
+        iterations = HitsIters)
       .select(col("node"), round(col("hub"), 9).as("hub"),
         round(col("auth"), 9).as("auth"))
       .orderBy(col("node"))
@@ -1139,15 +1133,9 @@ object AnalyticsQueries {
          |  SELECT n.node,
          |    round(COALESCE(r.raw, 0.0) / (SELECT s FROM $tot), 12) AS $outCol
          |  FROM nodes n LEFT JOIN $raw r ON r.node = n.node)"""
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem),
-       |edges AS (
-       |  SELECT 'p' || p AS src, 's' || sk AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT DISTINCT 'p' || p, 'zsink' FROM pairs WHERE p % 10 = 0),
-       |nodes AS (
-       |  SELECT DISTINCT node FROM (
-       |    SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
+    s"""WITH ${partSuppPairsSql()},
+       |${edgesSql(partToSuppSql(), sinkEdgesSql())},
+       |$nodesSql,
        |h0 AS (SELECT node, 1.0 AS hub FROM nodes),
        |${half("h0", "hub", "src", "dst", "a1r", "a1s", "a1", "auth")},
        |${half("a1", "auth", "dst", "src", "h1r", "h1s", "h1", "hub")},
@@ -1161,24 +1149,18 @@ object AnalyticsQueries {
   }
 
   /** Synchronous label-propagation communities
-    * ([[graft.pipeline.GraphOps.labelPropagation]]) on the SAME part–part
-    * co-occurrence graph as [[trianglesQ]] (supplier cliques make real
+    * ([[graft.pipeline.GraphOps.labelPropagation]]) on the SAME
+    * [[coParts]] graph as [[trianglesQ]] (supplier cliques make real
     * communities), 3 rounds. All-integer arithmetic — counts and label
     * comparisons only — so the unrolled oracle is bit-exact with no
     * rounding contract at all. */
   private val LpaRounds = 3
 
-  private def lpaQ(s: SparkSession, d: String): DataFrame = {
-    val pp = Tables.lineitem(s, d)
-      .filter(col("l_partkey") < 300)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val a = pp.select(col("p").as("pa"), col("sk"))
-    val b = pp.select(col("p").as("pb"), col("sk"))
-    val e = a.join(b, Seq("sk")).filter(col("pa") < col("pb"))
-      .select(col("pa").as("u"), col("pb").as("v")).distinct()
-    graft.pipeline.GraphOps.labelPropagation(e, "u", "v", rounds = LpaRounds)
+  private def lpaQ(s: SparkSession, d: String): DataFrame =
+    graft.pipeline.GraphOps
+      .labelPropagation(coParts(partSuppPairs(s, d, Some(300))), "u", "v",
+        rounds = LpaRounds)
       .orderBy(col("node"))
-  }
 
   private val lpaSql = {
     def round_(prev: String, cnt: String, out: String) =
@@ -1191,23 +1173,18 @@ object AnalyticsQueries {
          |      ORDER BY c DESC, label) AS rn
          |    FROM $cnt) t
          |  WHERE rn = 1)"""
-    s"""WITH pp AS (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-       |  WHERE l_partkey < 300),
-       |e0 AS (
-       |  SELECT DISTINCT a.p AS u, b.p AS v
-       |  FROM pp a JOIN pp b ON a.sk = b.sk AND a.p < b.p),
+    s"""WITH ${partSuppPairsSql(Some(300))},
+       |$coPartsSql,
        |sym AS (
        |  SELECT DISTINCT src, dst FROM (
-       |    SELECT u AS src, v AS dst FROM e0
-       |    UNION ALL SELECT v, u FROM e0)),
+       |    SELECT u AS src, v AS dst FROM coparts
+       |    UNION ALL SELECT v, u FROM coparts)),
        |l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
        |${round_("l0", "c1", "l1")},
        |${round_("l1", "c2", "l2")},
        |${round_("l2", "c3", "l3")}
        |SELECT node, label FROM l3 ORDER BY node""".stripMargin
   }
-
   /** Strongly connected components
     * ([[graft.pipeline.GraphOps.stronglyConnected]]) on the DIRECTED
     * order-sequence part graph: an edge p→q whenever part q follows
@@ -1255,33 +1232,21 @@ object AnalyticsQueries {
       |FROM nodes n LEFT JOIN mutual m ON m.v = n.node
       |GROUP BY n.node ORDER BY n.node""".stripMargin
 
-  /** k-core peeling ([[graft.pipeline.GraphOps.kCore]]) on an
-    * md5-SAMPLED part co-occurrence graph — the full graph is a dense
+  /** k-core peeling ([[graft.pipeline.GraphOps.kCore]]) on
+    * [[sampledCoParts]] — the full co-supplier graph is a dense
     * supplier-clique union whose min degree sits far above any useful k
-    * (nothing peels); keeping ~0.7 % of edges by a deterministic
-    * md5-of-edge lottery (both engines compute the identical sample)
-    * yields a sparse random graph near the k=4 core threshold, where
-    * peeling genuinely CASCADES: 4 rounds of real deletions before the
-    * fixed point, so the gate exercises the iterated recomputation, not
-    * one filter. Integer-exact like graph_lpa. */
+    * (nothing peels); keeping ~0.7 % of edges yields a sparse random
+    * graph near the k=4 core threshold, where peeling genuinely
+    * CASCADES: 4 rounds of real deletions before the fixed point, so the
+    * gate exercises the iterated recomputation, not one filter.
+    * Integer-exact like graph_lpa. */
   private val KcK = 4
   private val KcRounds = 4
-  private val KcMod = 150
 
-  private def kcoreQ(s: SparkSession, d: String): DataFrame = {
-    val pp = Tables.lineitem(s, d)
-      .filter(col("l_partkey") < 1000)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val a = pp.select(col("p").as("pa"), col("sk"))
-    val b = pp.select(col("p").as("pb"), col("sk"))
-    val e0 = a.join(b, Seq("sk")).filter(col("pa") < col("pb"))
-      .select(col("pa").as("u"), col("pb").as("v")).distinct()
-    val e = e0.filter(
-      graft.functions.expr.Md5Prefix(concat(col("u").cast("string"), lit("_"),
-        col("v").cast("string")), 4).cast("int") % KcMod === 0)
-    graft.pipeline.GraphOps.kCore(e, "u", "v", k = KcK, rounds = KcRounds)
+  private def kcoreQ(s: SparkSession, d: String): DataFrame =
+    graft.pipeline.GraphOps
+      .kCore(sampledCoParts(s, d), "u", "v", k = KcK, rounds = KcRounds)
       .orderBy(col("node"))
-  }
 
   private val kcoreSql = {
     def round_(prev: String, deg: String, keep: String, out: String) =
@@ -1291,20 +1256,11 @@ object AnalyticsQueries {
          |  SELECT e.src, e.dst FROM $prev e
          |  JOIN $keep a ON a.src = e.src
          |  JOIN $keep b ON b.src = e.dst)"""
-    s"""WITH pp AS (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-       |  WHERE l_partkey < 1000),
-       |e0 AS (
-       |  SELECT DISTINCT a.p AS u, b.p AS v
-       |  FROM pp a JOIN pp b ON a.sk = b.sk AND a.p < b.p),
-       |es AS (
-       |  SELECT u, v FROM e0
-       |  WHERE ('0x' || substring(md5(u || '_' || v), 1, 4))::INT
-       |    % $KcMod = 0),
+    s"""WITH $sampledCoPartsSql,
        |sym AS (
        |  SELECT DISTINCT src, dst FROM (
-       |    SELECT u AS src, v AS dst FROM es
-       |    UNION ALL SELECT v, u FROM es)),
+       |    SELECT u AS src, v AS dst FROM sampled
+       |    UNION ALL SELECT v, u FROM sampled)),
        |${round_("sym", "d1", "k1", "e1")},
        |${round_("e1", "d2", "k2", "e2")},
        |${round_("e2", "d3", "k3", "e3")},
@@ -1351,45 +1307,34 @@ object AnalyticsQueries {
 
   /** Local clustering coefficients
     * ([[graft.pipeline.GraphOps.clusteringCoefficients]]) on the SAME
-    * part co-occurrence graph as [[trianglesQ]] — its oriented-wedge
-    * triangle counts divided into each node's neighbor-pair count. The
-    * oracle reuses the direct triple-join triangle enumeration plus a
-    * degree CTE; the deg-1 zero convention and absent-triangle zeros are
-    * both exercised. */
-  private def clusteringQ(s: SparkSession, d: String): DataFrame = {
-    val pp = Tables.lineitem(s, d)
-      .filter(col("l_partkey") < 300)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val a = pp.select(col("p").as("pa"), col("sk"))
-    val b = pp.select(col("p").as("pb"), col("sk"))
-    val e = a.join(b, Seq("sk")).filter(col("pa") < col("pb"))
-      .select(col("pa").as("u"), col("pb").as("v")).distinct()
-    graft.pipeline.GraphOps.clusteringCoefficients(e, "u", "v")
+    * [[coParts]] graph as [[trianglesQ]] — its oriented-wedge triangle
+    * counts divided into each node's neighbor-pair count. The oracle
+    * reuses the direct triple-join triangle enumeration plus a degree
+    * CTE; the deg-1 zero convention and absent-triangle zeros are both
+    * exercised. */
+  private def clusteringQ(s: SparkSession, d: String): DataFrame =
+    graft.pipeline.GraphOps
+      .clusteringCoefficients(coParts(partSuppPairs(s, d, Some(300))), "u", "v")
       .orderBy(col("node"))
-  }
 
   private val clusteringSql =
-    """WITH pp AS (
-      |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-      |  WHERE l_partkey < 300),
-      |und AS (
-      |  SELECT DISTINCT a.p AS u, b.p AS v
-      |  FROM pp a JOIN pp b ON a.sk = b.sk AND a.p < b.p),
-      |tri AS (
-      |  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-      |  FROM und e1
-      |  JOIN und e2 ON e2.u = e1.v
-      |  JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v),
-      |tcnt AS (
-      |  SELECT node, COUNT(*) AS n_tri FROM (
-      |    SELECT a AS node FROM tri
-      |    UNION ALL SELECT b FROM tri
-      |    UNION ALL SELECT c FROM tri)
-      |  GROUP BY node),
-      |deg AS (
-      |  SELECT node, COUNT(*) AS deg FROM (
-      |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-      |  GROUP BY node)
+    s"""WITH ${partSuppPairsSql(Some(300))},
+       |$coPartsSql,
+       |tri AS (
+       |  SELECT e1.u AS a, e1.v AS b, e2.v AS c
+       |  FROM coparts e1
+       |  JOIN coparts e2 ON e2.u = e1.v
+       |  JOIN coparts e3 ON e3.u = e1.u AND e3.v = e2.v),
+       |tcnt AS (
+       |  SELECT node, COUNT(*) AS n_tri FROM (
+       |    SELECT a AS node FROM tri
+       |    UNION ALL SELECT b FROM tri
+       |    UNION ALL SELECT c FROM tri)
+       |  GROUP BY node),
+       |deg AS (
+       |  SELECT node, COUNT(*) AS deg FROM (
+       |    SELECT u AS node FROM coparts UNION ALL SELECT v FROM coparts)
+       |  GROUP BY node)
       |SELECT d.node, d.deg, COALESCE(t.n_tri, 0) AS n_tri,
       |  CASE WHEN d.deg >= 2
       |       THEN round(2.0 * COALESCE(t.n_tri, 0) / (d.deg * (d.deg - 1)), 9)
@@ -1547,39 +1492,19 @@ object AnalyticsQueries {
        |ORDER BY type_a, type_b""".stripMargin
 
   /** Degree assortativity ([[graft.pipeline.GraphOps.assortativity]]) on
-    * the SAME md5-sampled sparse graph as [[kcoreQ]] (the full
+    * the SAME [[sampledCoParts]] graph as [[kcoreQ]] (the full
     * co-occurrence graph is near-regular — zero marginal variance, NULL
     * by convention — while the sampled one has real degree spread). All
     * moment sums are exact decimal sums of integers, so the single
     * rounded correlation expression is the only IEEE step. */
-  private def assortQ(s: SparkSession, d: String): DataFrame = {
-    val pp = Tables.lineitem(s, d)
-      .filter(col("l_partkey") < 1000)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val a = pp.select(col("p").as("pa"), col("sk"))
-    val b = pp.select(col("p").as("pb"), col("sk"))
-    val e0 = a.join(b, Seq("sk")).filter(col("pa") < col("pb"))
-      .select(col("pa").as("u"), col("pb").as("v")).distinct()
-    val e = e0.filter(
-      graft.functions.expr.Md5Prefix(concat(col("u").cast("string"), lit("_"),
-        col("v").cast("string")), 4).cast("int") % KcMod === 0)
-    graft.pipeline.GraphOps.assortativity(e, "u", "v")
-  }
+  private def assortQ(s: SparkSession, d: String): DataFrame =
+    graft.pipeline.GraphOps.assortativity(sampledCoParts(s, d), "u", "v")
 
   private val assortSql =
-    s"""WITH pp AS (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-       |  WHERE l_partkey < 1000),
-       |e0 AS (
-       |  SELECT DISTINCT a.p AS u, b.p AS v
-       |  FROM pp a JOIN pp b ON a.sk = b.sk AND a.p < b.p),
-       |es AS (
-       |  SELECT u, v FROM e0
-       |  WHERE ('0x' || substring(md5(u || '_' || v), 1, 4))::INT
-       |    % $KcMod = 0),
+    s"""WITH $sampledCoPartsSql,
        |sym AS (
-       |  SELECT u AS src, v AS dst FROM es
-       |  UNION ALL SELECT v, u FROM es),
+       |  SELECT u AS src, v AS dst FROM sampled
+       |  UNION ALL SELECT v, u FROM sampled),
        |deg AS (SELECT src AS node, COUNT(*) AS dg FROM sym GROUP BY 1),
        |m AS (
        |  SELECT COUNT(*) AS n,

@@ -522,6 +522,31 @@ class AnalyticsSpec extends AnyFunSuite {
       "b1" -> 1L, "b2" -> 1L, "b3" -> 1L), out.toString)
   }
 
+  test("each graph-fixture builder matches its oracle CTE twin") {
+    import graft.queries.AnalyticsQueries._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    Tables.lineitem(spark, sf).createOrReplaceTempView("lineitem")
+    try {
+      // uncapped, and a cap that keeps half of sf0.001's 200 parts
+      val sizes = Seq(None, Some(100)).map { cap =>
+        val pairs = partSuppPairs(spark, sf, cap)
+        val head = s"WITH ${partSuppPairsSql(cap)}"
+        Seq(pairs -> s"$head\nSELECT * FROM pairs",
+          sinkGraph(pairs) -> s"$head,\n$sinkGraphSql\nSELECT * FROM edges",
+          coParts(pairs) -> s"$head,\n$coPartsSql\nSELECT * FROM coparts"
+        ).map { case (built, sql) =>
+          val twin = spark.sql(sql)
+          assert(built.columns.toSeq == twin.columns.toSeq, sql)
+          val b = rows(built)
+          assert(b.nonEmpty && b == rows(twin), sql)
+          b.values.sum
+        }
+      }
+      assert(sizes(1).zip(sizes(0)).forall { case (c, u) => c < u }, sizes.toString)
+    } finally spark.catalog.dropTempView("lineitem")
+  }
+
   test("expectations judge violations per rule in one pass without Expand") {
     import spark.implicits._
     import graft.pipeline.Expectations._

@@ -12,16 +12,19 @@ class BucketingSpec extends AnyFunSuite {
   private val sf = TestSpark.sf
 
   test("join of co-bucketed tables plans without a shuffle exchange") {
-    spark.sql("DROP TABLE IF EXISTS graft_li_bucketed")
-    spark.sql("DROP TABLE IF EXISTS graft_ord_bucketed")
+    // external tables under the scratch root, not in spark-warehouse/
+    val tables = Seq("graft_li_bucketed", "graft_ord_bucketed")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_quantity"))
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .mode("overwrite").saveAsTable("graft_li_bucketed")
+      .mode("overwrite").option("path", Tables.scratch("graft_li_bucketed"))
+      .saveAsTable("graft_li_bucketed")
     Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_totalprice"))
       .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .mode("overwrite").saveAsTable("graft_ord_bucketed")
+      .mode("overwrite").option("path", Tables.scratch("graft_ord_bucketed"))
+      .saveAsTable("graft_ord_bucketed")
     try {
       val joined = spark.table("graft_li_bucketed")
         .join(spark.table("graft_ord_bucketed"),
@@ -38,9 +41,9 @@ class BucketingSpec extends AnyFunSuite {
         assert(!plan.contains("Exchange hashpartitioning"),
           s"bucketed join should not shuffle:\n${plan.take(1500)}")
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_li_bucketed")
-      spark.sql("DROP TABLE IF EXISTS graft_ord_bucketed")
+    } finally tables.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      Tables.rm(new java.io.File(Tables.scratch(t)))
     }
   }
 }
